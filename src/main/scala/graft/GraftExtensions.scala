@@ -3,9 +3,11 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import graft.nested.PackReduce
 import graft.expressions.{BoundedTopK, DotProductArray, TextMinHash, TextNGramJaccard, TextSimHash64, TextTokenNGrams, TextWrap}
 
-/** SQL registration of the native graft expressions.
+/** SQL registration of the native graft expressions, plus the
+  * [[PackReduce]] groupjoin rewrite.
   *
   * Cluster-wide: `--conf spark.sql.extensions=graft.GraftExtensions` →
   * `graft_dot`, `graft_minhash`, `graft_simhash64` usable from any SQL.
@@ -13,10 +15,12 @@ import graft.expressions.{BoundedTopK, DotProductArray, TextMinHash, TextNGramJa
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions._
-  override def apply(e: SparkSessionExtensions): Unit =
+  override def apply(e: SparkSessionExtensions): Unit = {
     builders.foreach { case (name, info, builder) =>
       e.injectFunction((FunctionIdentifier(name), info, builder))
     }
+    e.injectOptimizerRule(_ => PackReduce)
+  }
 }
 
 object GraftExtensions {
@@ -52,10 +56,15 @@ object GraftExtensions {
         (es: Seq[Expression]) =>
           BoundedTopK(es(0), es(1), intArg(es(2))).toAggregateExpression()))
 
-  /** Register on an existing session (temp functions). */
-  def register(spark: SparkSession): Unit =
+  /** Register on an existing session (temp functions, and [[PackReduce]]
+    * as an extra optimization, added once). */
+  def register(spark: SparkSession): Unit = {
     builders.foreach { case (name, _, builder) =>
       spark.sessionState.functionRegistry
         .createOrReplaceTempFunction(name, builder, "built-in")
     }
+    if (!spark.experimental.extraOptimizations.contains(PackReduce))
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ PackReduce
+  }
 }

@@ -42,7 +42,10 @@ object SurfaceQueries {
       val f1 = Future(fa); val f2 = Future(fb)
       val r1 = Try(Await.result(f1, Duration.Inf))
       val r2 = Try(Await.result(f2, Duration.Inf))
-      (r1.get, r2.get) // both quiesced; first failure (if any) propagates
+      // both quiesced; the first failure propagates and carries the
+      // second as suppressed, so neither root cause is lost
+      for (e1 <- r1.failed; e2 <- r2.failed if e2 ne e1) e1.addSuppressed(e2)
+      (r1.get, r2.get)
     } finally pool.shutdown()
   }
 

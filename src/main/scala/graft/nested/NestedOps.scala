@@ -158,7 +158,12 @@ object NestedOps {
     *
     * Physical plan: ObjectHashAggregate(collect_list) — one shuffle on `on`.
     * At 100 TB: the single shuffle of the pipeline; pre-bucketed tables on the
-    * key skip it entirely.
+    * key skip it entirely. When every use of the packed column downstream is
+    * a decomposable reduction (`size`, `countNested`, `elementMean`/`Sum`/
+    * `Min`/`Max`, optionally over `query`/[[filterElements]] element
+    * filters), the [[PackReduce]] optimizer rule replaces the pack with one
+    * keyed aggregate of partial aggregates: no array is built and the
+    * shuffle carries one partial row per key and map task.
     *
     * NaN sort keys order as NA on the uncapped path (r9s5 NaN-parity rule,
     * same as [[sortElements]]); the `maxPerKey` selection paths (engine
@@ -178,7 +183,9 @@ object NestedOps {
         // list state carries every row, so the shuffle moves the same
         // bytes either way — but it COSTS building + serializing per-key
         // array buffers inside the (often scan-bound) map stage, and the
-        // reducer then re-merges those buffers. An explicit key
+        // reducer then re-merges those buffers. (When only reductions of
+        // the cell are used, PackReduce drops this repartition with the
+        // pack, and partial aggregation then does pay.) An explicit key
         // repartition ahead of the groupBy ships raw rows through the one
         // unavoidable exchange and builds each cell exactly once on the
         // reducer (same single-Exchange plan, measured ~35% faster at
@@ -498,7 +505,10 @@ object NestedOps {
     *
     * Plan: one shuffle for the groupBy; the join is equi-join on the same key
     * so Catalyst reuses the partitioning (no second shuffle of the child side);
-    * small packed sides are broadcast automatically under AQE.
+    * small packed sides are broadcast automatically under AQE. A join whose
+    * nested column is only reduced (the flagship chain: filter elements,
+    * count, mean) runs as a groupjoin: [[PackReduce]] aggregates the child
+    * per key before the shuffle, with the same NULL-cell results.
     */
   def joinNested(base: DataFrame, child: DataFrame, on: Seq[String],
                  name: String, how: String = "left",
@@ -1269,7 +1279,9 @@ object NestedOps {
   /** Per-row count of elements, optionally one count column per value of a
     * categorical field. Reference: `count_nested` (utils/utils.py:8-102).
     * All counts are narrow `size(filter(...))` expressions — the per-row
-    * "group-by/pivot" of the reference costs no shuffle here.
+    * "group-by/pivot" of the reference costs no shuffle here. Over a column
+    * packed in the same plan the counts (and the null guard's count) become
+    * partial `count_if` aggregates of the pack ([[PackReduce]]).
     *
     * NULL by-values: like the reference (GH#494), the first count column
     * RAISES when an element's by-field is null, so nulls are reported
@@ -1383,7 +1395,10 @@ object NestedOps {
 
   /** Mean of a numeric nested field per row, as a Column. NULL for NULL/empty
     * cells. Codegen-friendly `aggregate` HOF — the fused replacement for the
-    * reference's `map_rows(np.mean, "nested.f")` hot path (core.py:2207-2545). */
+    * reference's `map_rows(np.mean, "nested.f")` hot path (core.py:2207-2545).
+    * Over a column packed in the same plan, this and [[elementSum]],
+    * [[elementMin]], [[elementMax]] run as partial `avg`/`sum`/`min`/`max`
+    * aggregates of the pack instead ([[PackReduce]]; not for decimals). */
   def elementMean(nest: String, field: String): Column =
     // native kernel loop (StructFieldReduce): the single-fold HOF form
     // still paid interpreted per-element lambda evaluation; the kernel

@@ -768,11 +768,13 @@ object Dedup {
       .select(col("a"), col("b"),
         Similarity.cosine(col("__va"), col("__vb")).as("__sim"))
     // No distinct before CC (r14): one vector lives in exactly ONE bucket,
-    // so a pair can repeat at most ×3 (smallPairs/star/chain overlap) —
-    // union-find is idempotent on duplicate edges and the stars path
-    // re-canonicalizes anyway, so the distinct was a pure extra
-    // exchange+aggregate stage (the driverMaxEdges count sees ≤3× edges:
-    // strictly more conservative).
+    // so a pair can repeat at most ×2 — smallPairs and big buckets are
+    // disjoint, and within a big bucket only the anchor's star edge to the
+    // second vector duplicates the first chain edge. Union-find is
+    // idempotent on duplicate edges and the stars path re-canonicalizes
+    // anyway, so the distinct was a pure extra exchange+aggregate stage.
+    // The driverMaxEdges count sees up to 2× the distinct edges, so a
+    // workload near the cap switches to the distributed stars path early.
     val verified = smallPairs.unionAll(star).unionAll(chain)
       .where(col("__sim") >= threshold)
       .select(col("a"), col("b"))

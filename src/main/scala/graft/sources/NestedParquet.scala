@@ -80,14 +80,16 @@ object NestedParquet {
   /** Write with nested columns transposed to struct-of-list (the reference's
     * on-disk format, enabling its leaf-level partial loading). */
   def writeStructOfList(df: DataFrame, path: String,
-                        mode: String = "overwrite"): Unit = {
-    val out = NestedOps.nestedColumns(df).foldLeft(df) { (d, nest) =>
+                        mode: String = "overwrite"): Unit =
+    toStructOfList(df).write.mode(mode).parquet(path)
+
+  /** `df` with each nested column as a struct of per-field lists. */
+  private[graft] def toStructOfList(df: DataFrame): DataFrame =
+    NestedOps.nestedColumns(df).foldLeft(df) { (d, nest) =>
       val fields = NestedOps.subColumns(d, nest)
       d.withColumn(nest, struct(fields.map(fl =>
         transform(col(nest), s => s.getField(fl)).as(fl)): _*))
     }
-    out.write.mode(mode).parquet(path)
-  }
 
   /** Column selection with dotted nested components, mirroring
     * `read_parquet(columns=...)` semantics: `"nested"` loads the whole nest,

@@ -999,4 +999,12 @@ class ExtendedOpsSpec extends SparkSpec {
       sums.head.getTimestamp(0).getTime + 3000L,
       "label=right must shift the label one freq forward")
   }
+
+  test("awaitBoth: when both sides fail, the second rides as suppressed") {
+    val e = intercept[IllegalStateException](SurfaceQueries.awaitBoth(
+      throw new IllegalStateException("first"),
+      throw new IllegalArgumentException("second")))
+    assert(e.getMessage == "first")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("second"))
+  }
 }
