@@ -5,8 +5,10 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, CollationFactory, CollationSupport, GenericArrayData}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the hot paths where higher-order
@@ -29,6 +31,12 @@ object native {
     EU.column(TextSimHash64(EU.expression(text)))
   def ngram_jaccard(a: Column, b: Column, n: Int): Column =
     EU.column(TextNGramJaccard(EU.expression(a), EU.expression(b), n))
+  def shingle_hashes(text: Column, n: Int): Column =
+    EU.column(TextShingleHashes(EU.expression(text), n))
+  def sorted_jaccard(a: Column, b: Column): Column =
+    EU.column(SortedJaccard(EU.expression(a), EU.expression(b)))
+  def quality_score(text: Column, stopwords: Seq[String]): Column =
+    EU.column(TextQualityScore(EU.expression(text), stopwords))
   def hyperplane_bucket(v: Column, numPlanes: Int, dim: Int): Column =
     EU.column(HyperplaneBucket(EU.expression(v), numPlanes, dim))
   def pq_encode(v: Column, books: Array[Array[Array[Double]]]): Column =
@@ -202,12 +210,124 @@ case class TextMinHash(child: Expression, numHashes: Int, shingleSize: Int)
     copy(child = newChild)
 }
 
-/** n-gram Jaccard similarity of two strings via byte-shingle hash sets:
-  * one pass per string, no array materialization (the HOF formulation
-  * extracts/distincts/intersects ~300-element string arrays per pair).
-  * Byte shingles == character shingles for ASCII text. Hash-set membership
-  * stands in for string equality — collision probability ~2⁻⁶⁴, fine for a
-  * similarity score. */
+/** Byte-shingle sets as sorted, distinct primitive `long` arrays: the ONE
+  * shingle-set implementation behind [[TextShingleHashes]],
+  * [[SortedJaccard]] and [[TextNGramJaccard]]. A shingle is `n`
+  * consecutive UTF-8 bytes, hashed with XXH64 seed 42 (byte shingles ==
+  * character shingles for ASCII text). Hash equality stands in for
+  * shingle equality — collision probability ~2⁻⁶⁴, fine for a similarity
+  * score. Sorting makes the set a plain array: no boxing, and two sets
+  * intersect by one merge pass. */
+object ShingleSets {
+
+  /** Sorted distinct shingle hashes of `u`; empty when `u` is shorter
+    * than `n` bytes. */
+  def build(u: UTF8String, n: Int): UnsafeArrayData = {
+    val base = u.getBaseObject
+    val off = u.getBaseOffset
+    val hs = new Array[Long](math.max(u.numBytes() - n + 1, 0))
+    var i = 0
+    while (i < hs.length) {
+      hs(i) = XXH64.hashUnsafeBytes(base, off + i, n, 42L)
+      i += 1
+    }
+    java.util.Arrays.sort(hs)
+    var k = 0
+    i = 0
+    while (i < hs.length) {
+      if (k == 0 || hs(i) != hs(k - 1)) { hs(k) = hs(i); k += 1 }
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(hs, Platform.LONG_ARRAY_OFFSET, k, 8)
+  }
+
+  /** Jaccard of two [[build]] sets by a merge intersection. Two empty sets
+    * (texts shorter than n) score 0.0, NOT 1.0: 1.0 made every short doc
+    * verify as a near-dup of every other short doc — silent data loss
+    * downstream in dedupNear. */
+  def jaccard(a: ArrayData, b: ArrayData): Double = {
+    val (na, nb) = (a.numElements(), b.numElements())
+    var inter = 0
+    var i = 0
+    var j = 0
+    while (i < na && j < nb) {
+      val (x, y) = (a.getLong(i), b.getLong(j))
+      if (x < y) i += 1
+      else if (y < x) j += 1
+      else { inter += 1; i += 1; j += 1 }
+    }
+    val union = na + nb - inter
+    if (union == 0) 0.0 else inter.toDouble / union
+  }
+}
+
+/** A document's byte-shingle set ([[ShingleSets.build]]) as a sorted,
+  * distinct `array<long>` — built once per document so a verify join
+  * compares two arrays per candidate pair ([[SortedJaccard]]) instead of
+  * re-shingling both texts per pair. The array costs 8 bytes per distinct
+  * shingle where the text costs ~1 byte per character, so a broadcast or
+  * shuffle of the sets is up to ~8× the size of the texts. */
+case class TextShingleHashes(child: Expression, n: Int)
+    extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case _: StringType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"shingle_hashes expects a string, got $other")
+  }
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+
+  def kernel(u: UTF8String): ArrayData = ShingleSets.build(u, n)
+
+  override protected def nullSafeEval(input: Any): Any =
+    kernel(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("shingleHashes", this,
+      classOf[TextShingleHashes].getName)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.kernel($c);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** Jaccard similarity of two [[TextShingleHashes]] arrays by one merge
+  * pass ([[ShingleSets.jaccard]]). Only defined on sorted, distinct
+  * arrays — the output of `shingle_hashes`. */
+case class SortedJaccard(left: Expression, right: Expression)
+    extends BinaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        s"sorted_jaccard expects two array<long>, got $other")
+    }
+  override def dataType: DataType = DoubleType
+
+  def kernel(a: ArrayData, b: ArrayData): Double = ShingleSets.jaccard(a, b)
+
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    kernel(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("sortedJaccard", this,
+      classOf[SortedJaccard].getName)
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.kernel($a, $b);")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+/** n-gram Jaccard similarity of two strings: both texts' shingle sets are
+  * built per call ([[ShingleSets]]), then merge-intersected — the same
+  * values as [[SortedJaccard]] over [[TextShingleHashes]]. Right for a
+  * one-off pair; a join that meets each document in many pairs should
+  * build the sets once per document instead (`Dedup.verifiedPairs`). */
 case class TextNGramJaccard(left: Expression, right: Expression, n: Int)
     extends BinaryExpression {
 
@@ -219,33 +339,9 @@ case class TextNGramJaccard(left: Expression, right: Expression, n: Int)
     }
   override def dataType: DataType = DoubleType
 
-  private def shingleHashes(u: UTF8String): java.util.HashSet[java.lang.Long] = {
-    val set = new java.util.HashSet[java.lang.Long]()
-    val base = u.getBaseObject
-    val off = u.getBaseOffset
-    val len = u.numBytes()
-    var i = 0
-    while (i + n <= len) {
-      set.add(XXH64.hashUnsafeBytes(base, off + i, n, 42L))
-      i += 1
-    }
-    set
-  }
-
   /** The pairwise kernel, shared by interpreted eval and generated code. */
-  def kernel(ua: UTF8String, ub: UTF8String): Double = {
-    val sa = shingleHashes(ua)
-    val sb = shingleHashes(ub)
-    val (small, large) = if (sa.size <= sb.size) (sa, sb) else (sb, sa)
-    var inter = 0
-    val it = small.iterator()
-    while (it.hasNext) if (large.contains(it.next())) inter += 1
-    val union = sa.size + sb.size - inter
-    // Two empty shingle sets (texts shorter than n) are NOT duplicates:
-    // returning 1.0 here made every short doc verify as a near-dup of every
-    // other short doc — silent data loss downstream in dedupNear.
-    if (union == 0) 0.0 else inter.toDouble / union
-  }
+  def kernel(ua: UTF8String, ub: UTF8String): Double =
+    ShingleSets.jaccard(ShingleSets.build(ua, n), ShingleSets.build(ub, n))
 
   override protected def nullSafeEval(a: Any, b: Any): Any =
     kernel(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
@@ -260,6 +356,100 @@ case class TextNGramJaccard(left: Expression, right: Expression, n: Int)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+/** The composite quality score of `TextFunctions.qualityScoreHof` in one
+  * call per row: one trim + split gives the token count, the distinct
+  * token count (binary equality, as `array_distinct`) and the summed
+  * token characters; one lowercase gives the stopword hits, each the
+  * number of non-overlapping matches of `" w "` in `" " + lower + " "`
+  * (what the HOF's replace-and-measure counts). The HOF form re-split the
+  * text ~8 times and lowered + replaced it 12 times per row.
+  *
+  * Bit-identical to the HOF form: the kernel calls the built-ins' own
+  * entry points (`CollationSupport.StringTrim.exec`, `UTF8String.split`
+  * with limit -1, `CollationSupport.Lower.exec` under
+  * `spark.sql.icu.caseMappings.enabled`, read as `Lower` reads it), and
+  * combines the counts with the same double operations in the same order.
+  * Only UTF8_BINARY text is accepted: under other collations trim, split,
+  * distinct and replace all change meaning — use the HOF form there. */
+case class TextQualityScore(child: Expression, stopwords: Seq[String])
+    extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case st: StringType
+        if st.collationId == CollationFactory.UTF8_BINARY_COLLATION_ID =>
+      TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"quality_score expects a UTF8_BINARY string, got ${other.sql}; " +
+        "use TextFunctions.qualityScoreHof for collated text")
+  }
+  override def dataType: DataType = DoubleType
+
+  private final lazy val useICU: Boolean =
+    SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+  @transient private lazy val whitespace = UTF8String.fromString("\\s+")
+  @transient private lazy val space = UTF8String.fromString(" ")
+  @transient private lazy val patterns: Array[Array[Byte]] =
+    stopwords.map(w => s" $w ".getBytes("UTF-8")).toArray
+
+  /** Non-overlapping left-to-right matches of `pat` in `s`, by bytes —
+    * what `UTF8String.replace` removes. */
+  private def matches(s: UTF8String, pat: Array[Byte]): Long = {
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val len = s.numBytes()
+    var n = 0L
+    var i = 0
+    while (i + pat.length <= len) {
+      var k = 0
+      while (k < pat.length && Platform.getByte(base, off + i + k) == pat(k))
+        k += 1
+      if (k == pat.length) { n += 1; i += k } else i += 1
+    }
+    n
+  }
+
+  def kernel(u: UTF8String, icu: Boolean): Double = {
+    val toks = CollationSupport.StringTrim.exec(u).split(whitespace, -1)
+    val distinct = new java.util.HashSet[UTF8String](toks.length * 2)
+    var chars = 0L
+    var i = 0
+    while (i < toks.length) {
+      distinct.add(toks(i))
+      chars += toks(i).numChars()
+      i += 1
+    }
+    // `lower` re-encodes non-ASCII text from a Java String, so the padded
+    // string is valid UTF-8 and each removed " w " is |w| + 2 characters:
+    // the HOF's length difference divided by that is exactly this count
+    val padded = UTF8String.concat(space,
+      CollationSupport.Lower.exec(u, CollationFactory.UTF8_BINARY_COLLATION_ID,
+        icu), space)
+    var hits = 0L
+    i = 0
+    while (i < patterns.length) { hits += matches(padded, patterns(i)); i += 1 }
+    val n = toks.length.toDouble
+    val typeTokenRatio = distinct.size.toDouble / n
+    val stopwordRatio = hits.toDouble / n
+    val meanTokenLength = chars.toDouble / n
+    val capped = stopwordRatio * 4.0
+    typeTokenRatio * 0.5 + (if (1.0 < capped) 1.0 else capped) * 0.3 +
+      (if (meanTokenLength >= 3.0 && meanTokenLength <= 8.0) 0.2 else 0.0)
+  }
+
+  override protected def nullSafeEval(input: Any): Any =
+    kernel(input.asInstanceOf[UTF8String], useICU)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("qualityScore", this,
+      classOf[TextQualityScore].getName)
+    // the conf is read when the code is generated, as Lower's genCode does
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.kernel($c, $useICU);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 }
 
 /** Hyperplane-LSH bucket id: one bit per plane = sign of <v, plane_j>, with

@@ -5,8 +5,13 @@ import org.apache.spark.sql.functions._
 
 /** Text-analysis column functions for large-scale training-data pipelines.
   *
-  * All pure Column expressions (codegen'd, narrow, no UDFs): at 100 TB these
-  * run inside the parquet scan stage with zero shuffle. Cross-engine exactness
+  * Narrow Column expressions with no UDFs: at 100 TB these run inside the
+  * parquet scan stage with zero shuffle. Most compose built-ins; where a
+  * composition re-ran the same work per row, a native kernel from
+  * [[graft.expressions.native]] replaces it — [[tokenShingles]]
+  * (`TextTokenNGrams`) and [[qualityScore]] (`TextQualityScore`) — and the
+  * built-in composition stays alongside as its cross-check
+  * ([[tokenShinglesHof]], [[qualityScoreHof]]). Cross-engine exactness
   * (for the DuckDB oracle) comes from integer arithmetic and sequential
   * left-fold accumulation, which we verified is bit-identical across engines.
   */
@@ -132,8 +137,17 @@ object TextFunctions {
     distinctTokenCount(c).cast("double") / tokenCount(c)
 
   /** Composite quality score in [0,1]-ish: favors diverse, stopword-bearing,
-    * medium-token-length text. Deterministic arithmetic only. */
+    * medium-token-length text. Deterministic arithmetic only. Native kernel
+    * (`TextQualityScore`): one split and one lowercase per row where the
+    * composition below splits ~8 times and lowers + replaces 12 times;
+    * bit-identical to [[qualityScoreHof]] (spec-checked). UTF8_BINARY text
+    * only — the kernel rejects collated strings at analysis. */
   def qualityScore(c: Column): Column =
+    graft.expressions.native.quality_score(c, langMarkers.toMap.apply("en"))
+
+  /** Pure-built-in formulation of [[qualityScore]], kept for
+    * cross-checking the kernel and for collated text. */
+  def qualityScoreHof(c: Column): Column =
     typeTokenRatio(c) * lit(0.5) +
       least(stopwordRatio(c) * lit(4.0), lit(1.0)) * lit(0.3) +
       when(meanTokenLength(c).between(3.0, 8.0), lit(0.2)).otherwise(lit(0.0))

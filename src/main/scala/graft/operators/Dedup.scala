@@ -464,12 +464,21 @@ object Dedup {
     * coalescing collapses them to one or two tasks and SERIALIZES the
     * kernel (measured at sf0.1: 4.2s one-task verify → 0.7s after an
     * explicit repartition; DedupStageProbe). Pin the parallelism with a
-    * user repartition of the SLIM pair list before the text joins: its
-    * shuffle origin is REPARTITION_BY_NUM, which AQE's coalescer is
-    * DEFINED to leave alone, so the pin holds under any AQE config. At
-    * bench scale the text sides broadcast (AQE) so this partitioning
-    * carries into the jaccard stage; at 100 TB the joins shuffle anyway
-    * and repartitioning 16-byte rows is noise. */
+    * user repartition of the SLIM pair list before the shingle-set joins:
+    * its shuffle origin is REPARTITION_BY_NUM, which AQE's coalescer is
+    * DEFINED to leave alone, so the pin holds under any AQE config.
+    *
+    * Each document's shingle set is built ONCE (`shingle_hashes`, a sorted
+    * distinct array<long>) and the pairs join to the sets, so a pair costs
+    * one merge pass (`sorted_jaccard`) — joining to the texts rebuilt both
+    * documents' sets for every pair (~20k builds for ~10k pairs over 3.3k
+    * documents). The values equal `ngram_jaccard` on the texts. The
+    * trade-off is size: a set is 8 bytes per distinct shingle against ~1
+    * byte per character of text, so the broadcast (or, at 100 TB, the
+    * shuffle) of the join's document side is up to ~8× larger. At bench
+    * scale the sets broadcast (AQE) and the pin carries into the jaccard
+    * stage; at 100 TB the joins shuffle anyway and repartitioning 16-byte
+    * rows is noise. */
   private[graft] def verifiedPairs(df: DataFrame, idCol: String,
       textCol: String, threshold: Double, numHashes: Int,
       rowsPerBand: Int, shingleSize: Int): DataFrame = {
@@ -478,14 +487,13 @@ object Dedup {
     val candidates = lshCandidatePairs(withSig, idCol, "sig",
       numHashes, rowsPerBand)
     val numParts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val texts = df.select(col(idCol), col(textCol))
-    // native one-pass jaccard: the HOF formulation (extract + distinct +
-    // intersect ~300-element string arrays per pair) dominated the pipeline
+    val sets = df.select(col(idCol), graft.expressions.native
+      .shingle_hashes(col(textCol), shingleSize).as("__s"))
     candidates.repartition(numParts)
-      .join(texts.select(col(idCol).as("a"), col(textCol).as("__ta")), "a")
-      .join(texts.select(col(idCol).as("b"), col(textCol).as("__tb")), "b")
-      .where(graft.expressions.native.ngram_jaccard(
-        col("__ta"), col("__tb"), shingleSize) >= threshold)
+      .join(sets.select(col(idCol).as("a"), col("__s").as("__sa")), "a")
+      .join(sets.select(col(idCol).as("b"), col("__s").as("__sb")), "b")
+      .where(graft.expressions.native.sorted_jaccard(
+        col("__sa"), col("__sb")) >= threshold)
       .select(col("a"), col("b"))
   }
 

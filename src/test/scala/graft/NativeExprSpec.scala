@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.{Dedup, Similarity}
 import graft.expressions.native
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 class NativeExprSpec extends SparkSpec {
@@ -173,5 +174,117 @@ class NativeExprSpec extends SparkSpec {
       native.ngram_jaccard($"ta", $"tb", 5).as("nj"),
       graft.operators.Dedup.nGramJaccard($"ta", $"tb", 5).as("hj")).collect()
     r.foreach(row => assert(row.getDouble(0) == row.getDouble(1)))
+  }
+
+  test("native qualityScore equals qualityScoreHof bit-for-bit, " +
+      "codegen and interpreted, with and without ICU case mappings") {
+    import graft.expressions.TextQualityScore
+    import graft.functions.TextFunctions
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val texts = Seq(
+      "", " ", null,
+      "\tleading tab then the words of a line",  // trim keeps tabs/newlines
+      "trailing newline and the end\n",
+      "\n\t the middle is to \t\n",
+      "the the the",                             // overlapping " the " matches
+      // ... below the stopword cap, where 2 vs 3 matches moves the score
+      "the the the apple banana cherry dates elder figs grape honey kiwi",
+      "the\tthe of\nof and",                     // non-space separators
+      "  the  spaced   out   the  a ",
+      "The THE tHe Of AND is To A mixed Case",
+      "İstanbul İS THE İ capital of a country",  // İ lowers to two chars
+      "naïve café façade the résumé über to ÀÉÎ",
+      "单词 the 中文 of 文本 and 是 a",
+      "x\u000By\fz the\ra",                      // \s also matches VT, FF, CR
+      "no\u00A0break\u2003spaces the of",         // non-ASCII spaces: no split
+      "single",
+      "supercalifragilisticexpialidocious",
+      "the quick brown fox jumps over the lazy dog and is to a of")
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(texts.map(Row(_)), 3),
+      StructType(Seq(StructField("t", StringType))))
+    val words = TextFunctions.langMarkers.toMap.apply("en")
+    val icuKey = "spark.sql.icu.caseMappings.enabled"
+    val before = spark.conf.getOption(icuKey)
+    try for (icu <- Seq("false", "true")) {
+      spark.conf.set(icuKey, icu)
+      val both = df.select($"t",
+        TextFunctions.qualityScore($"t").as("n"),
+        TextFunctions.qualityScoreHof($"t").as("h"))
+      assert(both.where(!($"n" <=> $"h")).count() == 0, s"icu=$icu")
+      val rows = both.collect()
+      assert(rows.length == texts.length)
+      rows.foreach { r =>
+        val (t, h) = (r.getString(0), r.get(2))
+        assert((r.get(1) == null) == (t == null) && (h == null) == (t == null))
+        if (t != null) {
+          val hb = java.lang.Double.doubleToRawLongBits(r.getDouble(2))
+          assert(java.lang.Double.doubleToRawLongBits(r.getDouble(1)) == hb,
+            s"codegen, icu=$icu: '$t'")
+          // the interpreted path (eval) against the same HOF value
+          val interp = TextQualityScore(Literal(t), words).eval(null)
+            .asInstanceOf[Double]
+          assert(java.lang.Double.doubleToRawLongBits(interp) == hb,
+            s"interpreted, icu=$icu: '$t'")
+        }
+      }
+    } finally before match {
+      case Some(v) => spark.conf.set(icuKey, v)
+      case None => spark.conf.unset(icuKey)
+    }
+  }
+
+  test("native qualityScore rejects collated text at analysis") {
+    import graft.functions.TextFunctions
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      Seq("a b c").toDF("t")
+        .select(TextFunctions.qualityScore(collate($"t", "UTF8_LCASE")))
+        .collect()
+    }
+    assert(e.getMessage.contains("qualityScoreHof"))
+  }
+
+  test("sorted_jaccard(shingle_hashes) equals ngram_jaccard and a boxed " +
+      "hash-set reference (short, multi-byte and repeated text)") {
+    import org.apache.spark.sql.catalyst.expressions.XXH64
+    import org.apache.spark.unsafe.types.UTF8String
+    val pairs = Seq(
+      ("", ""), ("abc", "abcd"), ("abc", "abcdefgh"), ("abcde", "abcde"),
+      ("naïve café déjà vu", "naïve cafe deja vu"),
+      ("日本語のテキストです", "日本語のテキストでした"),
+      ("emoji 😀😀 text", "emoji 😀 text"),
+      ("aaaaaaaaaaaa", "aaaaaa"), ("abababababab", "ababab"),
+      ("the quick brown fox jumps over the lazy dog",
+       "the quick brown fox jumps over the lazy cat"),
+      ("abcdefg", "zzzzzzz"), (null, "abcdef"))
+    /** The shingle set as the pre-kernel implementation built it. */
+    def ref(t: String, n: Int): Set[Long] = {
+      val u = UTF8String.fromString(t)
+      (0 to u.numBytes() - n).map(i => XXH64.hashUnsafeBytes(
+        u.getBaseObject, u.getBaseOffset + i, n, 42L)).toSet
+    }
+    // an RDD source, so the kernels run as generated code in tasks
+    val df = spark.sparkContext.parallelize(pairs, 2).toDF("a", "b")
+    for (n <- Seq(1, 3, 5)) {
+      val sorted = native.sorted_jaccard(native.shingle_hashes($"a", n),
+        native.shingle_hashes($"b", n))
+      val pairwise = native.ngram_jaccard($"a", $"b", n)
+      val rows = df.select($"a", $"b", sorted, pairwise, sorted <=> pairwise,
+        native.shingle_hashes($"a", n)).collect()
+      rows.foreach { r =>
+        assert(r.getBoolean(4), s"n=$n: ${r.getString(0)} / ${r.getString(1)}")
+        if (r.isNullAt(0)) assert(r.isNullAt(2) && r.isNullAt(3))
+        else {
+          val (sa, sb) = (ref(r.getString(0), n), ref(r.getString(1), n))
+          val inter = (sa & sb).size
+          val union = sa.size + sb.size - inter
+          val want = if (union == 0) 0.0 else inter.toDouble / union
+          assert(r.getDouble(2) == want && r.getDouble(3) == want,
+            s"n=$n: ${r.getString(0)} / ${r.getString(1)}")
+          assert(r.getSeq[Long](5) == sa.toSeq.sorted, s"set of ${r.getString(0)}")
+        }
+      }
+    }
   }
 }

@@ -459,11 +459,12 @@ class ReferenceParitySpec extends SparkSpec {
 
   test("io: reference ZTF fixture end-to-end — transpose + inner flatten") {
     import graft.sources.NestedParquet
-    // real doubly-nested astronomy data from the reference's test fixtures:
+    // shape-equivalent stand-in for the reference's doubly-nested ZTF
+    // fixture (tools/gen_reference_fixtures.py writes all five fixtures):
     // ztf is struct-of-list whose lc field is list<list<struct>> — after
     // transpose it is a nested column whose elements carry an INNER nest
     val nf = NestedParquet.readCompat(spark,
-      "/root/reference/tests/test_data/vsx-x-ztfdr22_lc-m31.parquet")
+      "src/test/resources/reference/test_data/vsx-x-ztfdr22_lc-m31.parquet")
     assert(NestedOps.nestedColumns(nf).contains("ztf"))
     assert(NestedOps.subColumns(nf, "ztf").contains("lc"))
     // the fixture's single row has an entirely-NULL ztf nest — THE
@@ -475,11 +476,11 @@ class ReferenceParitySpec extends SparkSpec {
     assert(flat.count() == 1 && flat.where(col("ztf").isNull).count() == 1)
     // the reference's two-nest fixture transposes BOTH columns
     val two = NestedParquet.readCompat(spark,
-      "/root/reference/tests/test_data/nested.parquet")
+      "src/test/resources/reference/test_data/nested.parquet")
     assert(NestedOps.nestedColumns(two).toSet == Set("nested", "lincc"))
     // ragged struct-of-list raises under validate (ref not_nestable cast failure)
     val bad = NestedParquet.readCompat(spark,
-      "/root/reference/tests/test_data/not_nestable.parquet",
+      "src/test/resources/reference/test_data/not_nestable.parquet",
       validate = true)
     val e = intercept[Exception] { bad.collect() }
     assert(e.getMessage.contains("not nestable") ||
@@ -534,19 +535,20 @@ class ReferenceParitySpec extends SparkSpec {
   }
 
   test("io: reference fixed-size-list parquet reads as nested columns") {
-    // the reference's own binary fixtures (fixed-size arrow lists): Spark's
+    // pyarrow-written stand-ins for the reference's fixed-size-list
+    // fixtures (tools/gen_reference_fixtures.py): Spark's
     // parquet reader maps FIXED_LEN list encodings to ordinary arrays, so
     // the nested data model applies unchanged (ref
     // test_read_parquet_with_fixed_length_{struct_list,list_struct})
     val fls = spark.read.parquet(
-      "/root/reference/tests/fixed_size_list_data/fixed-size-list-struct.parquet")
+      "src/test/resources/reference/fixed_size_list_data/fixed-size-list-struct.parquet")
     assert(fls.count() == 5 && fls.columns.length == 3)
     assert(NestedOps.nestedColumns(fls).contains("fixed_nested"))
     // mmu-desi stores spectrum as struct-of-FIXED-size-lists — the
     // reference's on-disk encoding with arrow fixed_size_list leaves;
     // readCompat transposes it to a nested column like any struct-of-list
     val mmu = graft.sources.NestedParquet.readCompat(spark,
-      "/root/reference/tests/fixed_size_list_data/mmu-desi.parquet")
+      "src/test/resources/reference/fixed_size_list_data/mmu-desi.parquet")
     assert(mmu.count() == 2 && mmu.columns.length == 18)
     assert(NestedOps.nestedColumns(mmu).contains("spectrum"))
     assert(mmu.select(explode(col("spectrum"))).count() == 2 * 7781)

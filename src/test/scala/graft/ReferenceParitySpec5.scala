@@ -82,7 +82,7 @@ class ReferenceParitySpec5 extends SparkSpec {
   test("io: reject_nesting keeps the on-disk struct shape on a full read " +
       "(test_io.py:138-150)") {
     val nf = NestedParquet.readCompat(spark,
-      "/root/reference/tests/test_data/nested.parquet",
+      "src/test/resources/reference/test_data/nested.parquet",
       rejectNesting = Seq("nested"))
     // the fixture has a second nestable column "lincc" that still converts
     assert(NestedOps.nestedColumns(nf) == Seq("lincc"))

@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.TextFunctions
+import graft.expressions.native
 import graft.operators.{Dedup, Similarity, Multimodal}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Row
@@ -489,6 +490,42 @@ class TrainingOpsSpec extends SparkSpec {
       s"verify-stage repartition pin missing; plan:\n${plan.take(3000)}")
     assert(verified.rdd.getNumPartitions > 1,
       "verify stage ran in a single partition")
+  }
+
+  test("verifiedPairs keeps exactly the pairs the pairwise jaccard keeps " +
+      "on a seeded corpus") {
+    // near-copies (1-3 word edits) of seeded originals plus unrelated docs:
+    // LSH yields candidates on both sides of the 0.8 threshold
+    val rnd = new scala.util.Random(20261017L)
+    val vocab = (0 until 300).map(i => s"w${i * 7919 % 1000}")
+    def sentence(k: Int) = Seq.fill(k)(vocab(rnd.nextInt(vocab.length)))
+    val originals = Seq.fill(60)(sentence(14 + rnd.nextInt(10)))
+    val copies = originals.flatMap { o =>
+      Seq.fill(rnd.nextInt(4))(o.zipWithIndex.map { case (w, i) =>
+        if (i % (3 + rnd.nextInt(12)) == 2) vocab(rnd.nextInt(vocab.length))
+        else w
+      })
+    }
+    val corpus = (originals ++ copies ++ Seq.fill(40)(sentence(15)))
+      .map(_.mkString(" ")).zipWithIndex
+      .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val got = Dedup.verifiedPairs(corpus, "doc_id", "text",
+      threshold = 0.8, numHashes = 16, rowsPerBand = 4, shingleSize = 5)
+      .as[(Long, Long)].collect().toSet
+    val candidates = Dedup.lshCandidatePairs(corpus.select($"doc_id",
+        Dedup.minHashSignaturesNative($"text", 16, 5).as("sig")),
+      "doc_id", "sig", 16, 4)
+    val texts = corpus.select($"doc_id", $"text")
+    val scored = candidates
+      .join(texts.select($"doc_id".as("a"), $"text".as("ta")), "a")
+      .join(texts.select($"doc_id".as("b"), $"text".as("tb")), "b")
+      .select($"a", $"b", native.ngram_jaccard($"ta", $"tb", 5).as("j"))
+      .as[(Long, Long, Double)].collect()
+    val want = scored.collect { case (a, b, j) if j >= 0.8 => (a, b) }.toSet
+    assert(got == want)
+    assert(want.nonEmpty && scored.length > want.size,
+      s"corpus must yield kept and rejected candidates: ${scored.length} " +
+        s"candidates, ${want.size} kept")
   }
 
   test("packFlatSalted equals packFlat after sort") {
