@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 import graft.nested.{NestedOps, NestedExpr}
 import graft.nested.syntax._
+import graft.sources.NestedParquet
 
 /** The oracle-checked query battery.
   *
@@ -20,7 +21,7 @@ import graft.nested.syntax._
 object Queries {
 
   private def rd(s: SparkSession, dir: String, t: String): DataFrame =
-    s.read.parquet(s"$dir/$t.parquet")
+    NestedParquet.readParquet(s, s"$dir/$t.parquet")
 
   /** lineitem packed under orders-compatible key name. */
   private def lines(s: SparkSession, dir: String): DataFrame =
@@ -214,7 +215,7 @@ object Queries {
     * string semantics in plain SQL (strpos/substr/string_split/list
     * indexing). */
   val qDialectStr: Q = (s, dir) => {
-    val d = s.read.parquet(s"$dir/documents.parquet")
+    val d = rd(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("source"), col("text"))
     val packed = NestedOps.packFlat(d, Seq("lang"), "n",
       sortBy = Seq(("doc_id", true)))
@@ -240,7 +241,7 @@ object Queries {
     * attribute / strftime / normalize columns — DuckDB replays the same
     * date arithmetic natively (oracle). Fuzz corpus: tools/dt_fuzz.py. */
   val qDialectDt: Q = (s, dir) => {
-    val e = s.read.parquet(s"$dir/events.parquet")
+    val e = rd(s, dir, "events")
       .select(col("event_id"), col("user_id"), col("ts"))
     val packed = NestedOps.packFlat(e, Seq("user_id"), "ev",
       sortBy = Seq(("event_id", true)))
@@ -274,7 +275,7 @@ object Queries {
     * every row — batched into ONE lazy broadcast agg, zero eager jobs —
     * and `t0.dt.floor('D').dt.year` chains through a method result. */
   val qEvalReduceBase: Q = (s, dir) => {
-    val ev = s.read.parquet(s"$dir/events.parquet")
+    val ev = rd(s, dir, "events")
       .select(col("event_id"), col("user_id"), col("ts"), col("value"))
     val base = ev.groupBy("user_id")
       .agg(min(col("ts")).as("t0"), count(lit(1)).as("nv"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.nested.{NestedOps, NestedExpr}
 import graft.nested.syntax._
+import graft.sources.NestedParquet
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -14,7 +15,7 @@ import graft.nested.syntax._
 object SparkEntry {
 
   private def read(s: SparkSession, dir: String, table: String): DataFrame =
-    s.read.parquet(s"$dir/$table.parquet")
+    NestedParquet.readParquet(s, s"$dir/$table.parquet")
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Mirrors the reference's performance.ipynb workflow: read → join_nested →

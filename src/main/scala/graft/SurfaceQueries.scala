@@ -4,6 +4,7 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.nested.NestedOps
 import graft.nested.syntax._
+import graft.sources.NestedParquet
 
 /** Round-2 coverage queries: oracle checks for the SURVEY §2 rows that
   * previously rode on unit tests or "builtin" claims only (round-1 verdict:
@@ -17,7 +18,7 @@ object SurfaceQueries {
   import Queries.Q
 
   private def rd(s: SparkSession, dir: String, t: String): DataFrame =
-    s.read.parquet(s"$dir/$t.parquet")
+    NestedParquet.readParquet(s, s"$dir/$t.parquet")
 
   private def lines(s: SparkSession, dir: String, cols: String*): DataFrame =
     rd(s, dir, "lineitem").withColumnRenamed("l_orderkey", "o_orderkey")
@@ -298,9 +299,8 @@ object SurfaceQueries {
   }
 
   val qMixedRead: Q = (s, dir) => {
-    import graft.sources.NestedParquet
     val root = mixedReadRoot
-    s.read.parquet(s"$dir/documents.parquet")
+    rd(s, dir, "documents")
       .select(col("doc_id"),
         struct(col("lang").as("val1"),
           split(col("text"), " ").as("toks")).as("mix"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, Similarity, Multimodal, Sampling, Chunking}
+import graft.sources.NestedParquet
 
 /** Training-data pipeline operators over `documents` / `embeddings`:
   * dedup (exact, minhash-LSH, simhash, n-gram jaccard, embedding cosine),
@@ -21,9 +22,9 @@ object TrainingQueries {
   type Q = (SparkSession, String) => DataFrame
 
   private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    NestedParquet.readParquet(s, s"$dir/documents.parquet")
   private def embs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
+    NestedParquet.readParquet(s, s"$dir/embeddings.parquet")
 
   private def roundSafe(c: org.apache.spark.sql.Column, p: Int) =
     round(c + lit(1e-9), p)
@@ -961,7 +962,7 @@ object TrainingQueries {
   /** L2 normalization at ingest (downstream cosine becomes a dot product)
     * + symmetric int8 quantization (4× smaller storage for ANN). */
   val qEmbedNorm: Q = (s, dir) => {
-    val e = s.read.parquet(s"$dir/embeddings.parquet")
+    val e = embs(s, dir)
     val (scale, quant) = Similarity.quantizeInt8(col("embedding"))
     e.select(col("vec_id"),
       round(Similarity.norm(col("embedding")) + lit(1e-9), 4).as("nrm"),

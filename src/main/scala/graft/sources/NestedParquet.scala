@@ -1,6 +1,14 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.nested.NestedOps
@@ -22,8 +30,82 @@ import graft.nested.NestedOps
   * Scale: nested-leaf projection reaches the parquet scan via Catalyst
   * SchemaPruning (verified in plans: ReadSchema lists only requested
   * leaves); no custom reader needed.
+  *
+  * Schema resolution: [[readParquet]] (behind [[readCompat]] and the query
+  * battery's table loaders) reads the schema on the driver from the one
+  * footer Spark's own inference would read, then reads with that schema.
+  * `spark.read.parquet(path)` would get the same schema from a one-task
+  * Spark job per call (`mergeSchemasInParallel`), which also serializes the
+  * whole Hadoop configuration into its closure. Nothing is cached: every
+  * call lists the path and reads the footer again.
   */
 object NestedParquet {
+
+  /** `spark.read.parquet(path)` without its schema-inference job.
+    *
+    * The schema is resolved the way Spark resolves it when not merging
+    * schemas (`ParquetUtils.inferSchema`):
+    *  1. list the path once with an [[InMemoryFileIndex]], which applies
+    *     Spark's rules for hidden files and partition directories;
+    *  2. pick `_common_metadata`, else `_metadata`, else the first data
+    *     file sorted by path;
+    *  3. read that footer without row groups and convert it with the
+    *     converter settings the inference job uses
+    *     (`ParquetFileFormat.readSchemaFromFooter`: Spark's row metadata
+    *     first, then `binaryAsString`, `int96AsTimestamp`,
+    *     `inferTimestampNTZ`, `nanosAsLong`);
+    *  4. read with `spark.read.schema(...)`, which appends the partition
+    *     columns it infers from the same listing rules.
+    *
+    * It falls back to `spark.read.parquet(path)`, so the caller gets Spark's
+    * own result and errors, when schema merging is on, when the path is a
+    * glob pattern, when the listing holds no footer file, when a data
+    * column shares a partition column's name, or when listing, reading or
+    * converting the footer throws. */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None         => spark.read.parquet(path)
+    }
+
+  private def footerSchema(spark: SparkSession,
+                           path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    // Spark expands a glob; listing the path literally could find other files
+    val glob = path.exists("{}[]*?\\".contains(_))
+    if (conf.isParquetSchemaMergingEnabled || glob) None
+    else try {
+      val index = new InMemoryFileIndex(spark, Seq(new Path(path)), Map.empty,
+        userSpecifiedSchema = None)
+      // in the order of preference of `ParquetUtils.inferSchema`
+      val summaries = Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+        ParquetFileWriter.PARQUET_METADATA_FILE)
+      val (summary, data) = index.allFiles().sortBy(_.getPath.toString)
+        .partition(f => summaries.contains(f.getPath.getName))
+      val picked = summary.sortBy(f => summaries.indexOf(f.getPath.getName))
+        .headOption.orElse(data.headOption)
+      picked.flatMap { file =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(file, spark.sessionState.newHadoopConf()),
+          SKIP_ROW_GROUPS)
+        // the arguments `ParquetFileFormat.mergeSchemasInParallel` passes
+        val converter = new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = conf.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+          nanosAsLong = conf.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation =
+            conf.parquetReaderRespectUnknownTypeAnnotation)
+        val fileSchema = ParquetFileFormat.readSchemaFromFooter(
+          new Footer(file.getPath, footer), converter)
+        // a data column named like a partition column keeps its data
+        // position only when Spark infers the schema itself
+        val overlap = index.partitionSchema.exists(p =>
+          fileSchema.exists(_.name.equalsIgnoreCase(p.name)))
+        if (overlap) None else Some(fileSchema)
+      }
+    } catch { case NonFatal(_) => None }
+  }
 
   /** Is this a struct whose every field is an array (the reference's
     * struct-of-list parquet encoding)? */
@@ -40,12 +122,16 @@ object NestedParquet {
     * io.py:93-101). With `autocastList` (the reference's
     * `autocast_list=True`, io.py:120-131), a plain `array<primitive>`
     * column also becomes a single-field nest named after itself, so
-    * list-typed raw data joins the nested data model without a rewrite. */
+    * list-typed raw data joins the nested data model without a rewrite.
+    *
+    * The file schema comes from one footer read on the driver, with no
+    * Spark job; see [[readParquet]] for which footer and for the cases that
+    * fall back to `spark.read.parquet(path)`. */
   def readCompat(spark: SparkSession, path: String,
                  rejectNesting: Seq[String] = Nil,
                  autocastList: Boolean = false,
                  validate: Boolean = false): DataFrame = {
-    val raw = spark.read.parquet(path)
+    val raw = readParquet(spark, path)
     raw.schema.fields.foldLeft(raw) { (df, f) =>
       f.dataType match {
         case _: StructType if isStructOfList(f.dataType) &&

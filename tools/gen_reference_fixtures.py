@@ -1,12 +1,22 @@
 #!/usr/bin/env python3
-"""Write the binary IO fixtures that ReferenceParitySpec and
-ReferenceParitySpec5 read, into src/test/resources/reference/.
+"""Write the binary parquet fixtures the specs read.
 
-They are shape-equivalent stand-ins for the nested-pandas test fixtures of
-the same names: the same arrow encodings, column names and row counts the
-specs assert on, with small deterministic values. Written with pyarrow
-(16.1), so the files carry arrow's own parquet encodings (struct-of-list,
-list<list<struct>>, fixed_size_list), not Spark's.
+src/test/resources/reference/ holds the files ReferenceParitySpec and
+ReferenceParitySpec5 read: shape-equivalent stand-ins for the nested-pandas
+test fixtures of the same names, with the same arrow encodings, column
+names and row counts the specs assert on, and small deterministic values.
+
+src/test/resources/schema_pick/ holds the inputs of ParquetReadSpec, where
+the schema a reader infers depends on which footer it picks:
+  summary/    a `_common_metadata` and a `_metadata` whose schemas differ
+              from each other and from the data footers
+  diverging/  data files whose footers differ, next to hidden files
+  types/      INT96, plain binary, TIMESTAMP(NANOS) and timezone-free
+              TIMESTAMP(MICROS) columns
+
+Written with pyarrow (16.1), so the files carry arrow's own parquet
+encodings (struct-of-list, list<list<struct>>, fixed_size_list), not
+Spark's.
 
     python3 tools/gen_reference_fixtures.py
 
@@ -18,14 +28,25 @@ from pathlib import Path
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-OUT = Path(__file__).resolve().parent.parent / "src/test/resources/reference"
+RESOURCES = Path(__file__).resolve().parent.parent / "src/test/resources"
+OUT = RESOURCES / "reference"
+PICK = RESOURCES / "schema_pick"
 
 
-def write(table: pa.Table, rel: str) -> None:
-    path = OUT / rel
+def write(table: pa.Table, rel: str, out: Path = OUT, **opts) -> None:
+    path = out / rel
     path.parent.mkdir(parents=True, exist_ok=True)
-    pq.write_table(table, path, compression="snappy")
-    print(f"{rel}: {table.num_rows} rows, {table.num_columns} columns, "
+    pq.write_table(table, path, compression="snappy", **opts)
+    print(f"{path.relative_to(RESOURCES)}: {table.num_rows} rows, "
+          f"{table.num_columns} columns, {path.stat().st_size} bytes")
+
+
+def write_schema(schema: pa.Schema, rel: str) -> None:
+    """A footer-only summary file, as `pq.write_metadata` writes it."""
+    path = PICK / rel
+    path.parent.mkdir(parents=True, exist_ok=True)
+    pq.write_metadata(schema, path)
+    print(f"{path.relative_to(RESOURCES)}: schema {schema.names}, "
           f"{path.stat().st_size} bytes")
 
 
@@ -133,6 +154,61 @@ def mmu_desi() -> pa.Table:
     })
 
 
+def ids_and_x(first: int, rows: int) -> pa.Table:
+    return pa.table({
+        "id": pa.array(range(first, first + rows), pa.int64()),
+        "x": pa.array([0.25 * i for i in range(first, first + rows)],
+                      pa.float64()),
+    })
+
+
+def summary() -> None:
+    """Two data files with (id, x); `_common_metadata` adds `c_only` and
+    `_metadata` adds `m_only`. Spark takes `_common_metadata`."""
+    write(ids_and_x(0, 3), "summary/part-0.parquet", PICK)
+    write(ids_and_x(3, 2), "summary/part-1.parquet", PICK)
+    base = ids_and_x(0, 0).schema
+    write_schema(base.append(pa.field("c_only", pa.string())),
+                 "summary/_common_metadata")
+    write_schema(base.append(pa.field("m_only", pa.int32())),
+                 "summary/_metadata")
+
+
+def diverging() -> None:
+    """Data files whose footers differ. Spark takes the first by path,
+    `a.parquet`; the hidden files sort before it but are never listed."""
+    t = ids_and_x(0, 3)
+    write(t.append_column("from_a", pa.array(["a0", "a1", "a2"])),
+          "diverging/a.parquet", PICK)
+    write(t.append_column("from_b", pa.array([1, 2, 3], pa.int32())),
+          "diverging/b.parquet", PICK)
+    for hidden in ("diverging/.hidden.parquet", "diverging/_hidden.parquet"):
+        write(t.append_column("hidden", pa.array([True, False, True])),
+              hidden, PICK)
+
+
+def types() -> None:
+    """Columns whose Spark type depends on the session's parquet flags."""
+    us = [0, 1_600_000_000_123_456, -86_400_000_000]
+    raw = pa.array([b"\x00\xff", b"abc", None], pa.binary())
+    write(pa.table({
+        "id": pa.array([0, 1, 2], pa.int64()),
+        "ts96": pa.array(us, pa.timestamp("us", tz="UTC")),
+        "raw": raw,
+    }), "types/int96.parquet", PICK, use_deprecated_int96_timestamps=True)
+    write(pa.table({
+        "id": pa.array([0, 1, 2], pa.int64()),
+        "ts_ns": pa.array([u * 1000 + 789 for u in us],
+                          pa.timestamp("ns", tz="UTC")),
+    }), "types/nanos.parquet", PICK)
+    write(pa.table({
+        "id": pa.array([0, 1, 2], pa.int64()),
+        "ts_local": pa.array(us, pa.timestamp("us")),
+        "ts_utc": pa.array(us, pa.timestamp("us", tz="UTC")),
+        "raw": raw,
+    }), "types/micros.parquet", PICK)
+
+
 def main() -> None:
     write(nested(), "test_data/nested.parquet")
     write(not_nestable(), "test_data/not_nestable.parquet")
@@ -140,6 +216,9 @@ def main() -> None:
     write(fixed_size_list_struct(),
           "fixed_size_list_data/fixed-size-list-struct.parquet")
     write(mmu_desi(), "fixed_size_list_data/mmu-desi.parquet")
+    summary()
+    diverging()
+    types()
 
 
 if __name__ == "__main__":
