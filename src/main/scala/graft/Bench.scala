@@ -5,9 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main: times every SparkEntry query at the given scale factor and
   * prints ONE JSON line (driver contract).
   *
-  * Config mirrors what a production cluster job would set: AQE on (skew
-  * handling + dynamic coalescing), shuffle partitions sized to cores (not
-  * the 200 default — local[32] wants 32).
+  * The session is [[GraftSession]]'s, as in Verify and the tests; AQE
+  * (skew handling + dynamic coalescing) is on by Spark default.
   */
 object Bench {
   /** The round-1 battery, pinned EXPLICITLY: Queries core + the round-1
@@ -32,17 +31,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
 
     // Warm-up pass, untimed per-query but reported in aggregate as
     // warmup_sec (bench hygiene, not hidden work):

@@ -131,7 +131,7 @@ object TrainingQueries {
       // shared with verifiedPairs' per-document sets): the HOF form
       // extracts/distincts/intersects ~300-element string arrays per pair
       // and was this query's single dominant job (0.61 s of a 1.76 s wall,
-      // JobProfile r14). Byte shingles == char shingles on
+      // per-job profile, r14). Byte shingles == char shingles on
       // this all-ASCII corpus (probed at every SF), parity with the HOF
       // form is spec-pinned (NativeExprSpec), and the DuckDB oracle still
       // replays the char-5-gram values independently — the hash check stays

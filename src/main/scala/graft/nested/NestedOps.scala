@@ -1494,7 +1494,7 @@ object NestedOps {
     *
     * The exact-percentile CLIFF guard (`exactRowLimit`, VERDICT r9 item 5):
     * exact `percentile` buffers a whole layer's values in ONE aggregation
-    * buffer — DescribeProbe measured 373.7s/OOM-prone at just 5M rows vs
+    * buffer — a describe probe measured 373.7s/OOM-prone at just 5M rows vs
     * 8.3s approx (SCALING.md). When `approx = false`, each layer is
     * pre-counted and a layer above the limit is
     * auto-routed to `percentile_approx` with a WARN log (NOTE: the
@@ -1565,7 +1565,7 @@ object NestedOps {
               s"describe: layer '${if (prefix.isEmpty) "<base>" else prefix}' " +
                 s"has $n rows > exactRowLimit=$exactRowLimit; exact " +
                 s"percentile would buffer the whole layer in one aggregation " +
-                s"buffer (OOM-prone — SCALING.md DescribeProbe). Routing " +
+                s"buffer (OOM-prone; see SCALING.md). Routing " +
                 s"percentiles to percentile_approx(accuracy=$approxAccuracy); " +
                 s"pass approx=true explicitly or raise exactRowLimit to " +
                 s"Long.MaxValue to override.")

@@ -115,7 +115,7 @@ object Dedup {
     *    candidates stay ≤ bands × cap): pure star edges silently LOST
     *    moderate-similarity pairs whose bucket min was NOT similar to both
     *    (verification pruned the min's edges and CC never connected them —
-    *    found by DedupProbe on a repetitive corpus);
+    *    found on a repetitive corpus, SCALING.md "Near-dup recall probe");
     *  - bigger buckets (boilerplate clusters) emit star + CHAIN edges —
     *    linear in bucket size, computed with windows so a hot bucket never
     *    materializes an id array on one task. */
@@ -191,7 +191,8 @@ object Dedup {
     //    lesson);
     //  - id order: preserves recall for near-pairs whose sigs sort far
     //    apart (a single flipped high bit) — dropping this chain lost
-    //    811 of 4133 eligible Hamming≤3 pairs in SimhashProbe.
+    //    811 of 4133 eligible Hamming≤3 pairs (SCALING.md, "SimHash
+    //    pairing probe").
     val wSig = Window.partitionBy("band", "block")
       .orderBy(col("__sig"), col(idCol))
     val wId = Window.partitionBy("band", "block").orderBy(col(idCol))
@@ -329,8 +330,8 @@ object Dedup {
     * partial min, not a 10⁷-element collect. This is the 100 TB path.
     *
     * Returns (v, component) where component = min id reachable from v. */
-  def connectedComponentsStars(edges: DataFrame, maxIter: Int = 30,
-                               verbose: Boolean = false): DataFrame = {
+  def connectedComponentsStars(edges: DataFrame,
+                               maxIter: Int = 30): DataFrame = {
     def canon(e: DataFrame) =
       e.select(least(col("a"), col("b")).as("a"),
           greatest(col("a"), col("b")).as("b"))
@@ -381,7 +382,6 @@ object Dedup {
     var done = false
     var curSig = sig(cur)
     while (iter < maxIter && !done) {
-      val t0 = System.nanoTime()
       val (next, nextRdd) = materialize(canon(smallStar(largeStar(cur))))
       val nextSig = sig(next)
       done = nextSig == curSig
@@ -390,9 +390,6 @@ object Dedup {
       // rounds of edge snapshots pile up in storage memory
       curRdd.unpersist(blocking = false)
       cur = next; curRdd = nextRdd; curSig = nextSig; iter += 1
-      if (verbose)
-        println(f"[ccStars] round $iter: edges=${nextSig.getLong(0)} " +
-          f"${(System.nanoTime() - t0) / 1e9}%.1fs")
     }
     // The closing select below is ONLY valid at the fixpoint (star forest:
     // every edge is (root=min, member)). A non-converged edge set would
@@ -463,7 +460,7 @@ object Dedup {
     * the candidate-pair rows are 16 bytes — AQE's byte-based partition
     * coalescing collapses them to one or two tasks and SERIALIZES the
     * kernel (measured at sf0.1: 4.2s one-task verify → 0.7s after an
-    * explicit repartition; DedupStageProbe). Pin the parallelism with a
+    * explicit repartition). Pin the parallelism with a
     * user repartition of the SLIM pair list before the shingle-set joins:
     * its shuffle origin is REPARTITION_BY_NUM, which AQE's coalescer is
     * DEFINED to leave alone, so the pin holds under any AQE config.
@@ -725,8 +722,8 @@ object Dedup {
     * connect it regardless of bucket size — ordering by id left copies
     * separated by thousands of unrelated members and the chain found
     * almost none of them (measured: 804 of 1000 planted copies survived a
-    * 500k-vector probe; 0 survive with projection order —
-    * `graft.tools.SemanticProbe`). The star anchor is the first row in
+    * 500k-vector probe; 0 survive with projection order — SCALING.md,
+    * "Semantic-dedup recall probe"). The star anchor is the first row in
     * the same order. Near-dups BELOW cosine 1 sort nearby but not
     * necessarily adjacent: for θ < 1 recall in over-cap buckets, raise
     * `numPlanes` until buckets fall under the cap (the all-pairs path is

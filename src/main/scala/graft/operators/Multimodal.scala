@@ -456,7 +456,7 @@ object Multimodal {
       .getLong(0)
     val parts = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     // RANGE partition on the bucket id, not hash: hash collisions stack
-    // several byte-buckets into one partition (the 1M-payload MediaProbe
+    // several byte-buckets into one partition (the 1M-payload media probe
     // measured a 5× overshoot: max 159 MB against a 32 MB budget), while
     // contiguous bucket ranges give each partition ~⌈buckets/parts⌉
     // buckets — with parts ≈ buckets, one bucket per partition.

@@ -273,7 +273,7 @@ object Similarity {
     * pruning declines to prune when the broadcast side carries no
     * selective predicate (its selectivity heuristic), so the
     * nprobe/k read reduction of a `__cid`-partitioned corpus never
-    * materialized — the 50M-row PqProbe measured the IVF search at
+    * materialized — a 50M-row probe (SCALING.md) measured the IVF search at
     * full-ADC scan time. The probed cell set is ≤ |centroids| values by
     * construction, so collect it (one tiny job over the query side,
     * small by contract) and push a LITERAL IN filter — plan-time

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator for battery-wide scale validation (VERDICT r9 item 1).
@@ -34,15 +34,7 @@ object ScaleGen {
     val src = args(0)
     val out = args(1)
     val n = args(2).toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scalegen")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create()
 
     def rd(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     // single FILE per table (like the driver's testdata) so the DuckDB

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.streaming.StreamingOps
 
@@ -15,14 +14,8 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val runSecs = args.headOption.map(_.toInt).getOrElse(20)
     val rate = args.drop(1).headOption.map(_.toInt).getOrElse(500000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.GraftSession.cores
+    val spark = graft.GraftSession.create()
 
     def measure(name: String, mode: String = "update")
                (build: => org.apache.spark.sql.DataFrame): Unit = {

@@ -157,6 +157,26 @@ class ExtendedOpsSpec extends SparkSpec {
     }
   }
 
+  test("selectColumns and a field-path explode scan only the requested nested leaf") {
+    val dir = Files.createTempDirectory("prune").toString
+    NestedParquet.generateData(spark, 100, 10).write.mode("overwrite").parquet(dir)
+    val df = spark.read.parquet(dir)
+    // the ReadSchema of the one parquet scan, as nested leaf names
+    def scannedLeaves(d: org.apache.spark.sql.DataFrame): Seq[String] = {
+      val scans = d.queryExecution.sparkPlan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s.requiredSchema }
+      assert(scans.size == 1)
+      scans.head("nested").dataType match {
+        case ArrayType(s: StructType, _) => s.fieldNames.toSeq
+        case other => fail(s"nested read as $other")
+      }
+    }
+    assert(scannedLeaves(
+      NestedParquet.selectColumns(df, Seq("id", "nested.flux"))) == Seq("flux"))
+    assert(scannedLeaves(
+      df.select($"id", explode(col("nested.flux")).as("flux"))) == Seq("flux"))
+  }
+
   test("explodeAligned zips aligned list columns") {
     val df = Seq((1L, Seq(1, 2, 3), Seq("x", "y", "z")))
       .toDF("k", "v", "w")

@@ -105,6 +105,13 @@ class NativeExprSpec extends SparkSpec {
         |  AS tab(t, s, i) ORDER BY t""".stripMargin)
       .select($"ids").as[Seq[Long]].collect().toSeq
     assert(run == Seq(Seq(1L), Seq(1L, 2L), Seq(1L, 3L)))
+    // wrong argument types fail analysis with the expression's own message
+    val dotErr = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT graft_dot('oops', array(1.0))").collect() }
+    assert(dotErr.getMessage.contains("expects two numeric arrays"))
+    val mhErr = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT graft_minhash(123, 4, 3)").collect() }
+    assert(mhErr.getMessage.contains("expects string"))
   }
 
   test("ngram_repetition: closed-form fractions, degenerate docs score 0") {
