@@ -7,12 +7,13 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 import graft.nested.{NestedOps, NestedExpr}
 import graft.nested.syntax._
 import graft.sources.NestedParquet
+import graft.QuerySpec.{Headline, Parity}
 
 /** The oracle-checked query battery.
   *
   * Each entry exercises one operator family from SURVEY.md §2 through the
   * graft nested-ops library and ends in a FLAT result whose column names and
-  * value types match the paired DuckDB SQL in [[Queries.oracles]] exactly
+  * value types match its [[QuerySpec.oracleSql]] exactly
   * (driver hashes values after sorting columns by name):
   *  - counts are cast to BIGINT on the Spark side (`size` returns int);
   *  - doubles are `round(x, 2..4)` on BOTH sides;
@@ -20,17 +21,16 @@ import graft.sources.NestedParquet
   */
 object Queries {
 
-  private def rd(s: SparkSession, dir: String, t: String): DataFrame =
+  private[graft] def rd(s: SparkSession, dir: String, t: String): DataFrame =
     NestedParquet.readParquet(s, s"$dir/$t.parquet")
 
-  /** lineitem packed under orders-compatible key name. */
-  private def lines(s: SparkSession, dir: String): DataFrame =
+  /** lineitem under the orders key name, pruned to `cols` — at scale, select
+    * the needed fields BEFORE packing so the collect_list shuffle carries
+    * slim structs, not whole rows. */
+  private[graft] def lines(s: SparkSession, dir: String,
+                           cols: String*): DataFrame =
     rd(s, dir, "lineitem").withColumnRenamed("l_orderkey", "o_orderkey")
-
-  /** Pruned projection — at scale, select the needed fields BEFORE packing so
-    * the collect_list shuffle carries slim structs, not whole rows. */
-  private def lines(s: SparkSession, dir: String, cols: String*): DataFrame =
-    lines(s, dir).select(("o_orderkey" +: cols).map(col): _*)
+      .select(("o_orderkey" +: cols).map(col): _*)
 
   /** Round a DIVISION-DERIVED double for oracle comparison. Quotients (avg,
     * interpolated percentiles) of cent-valued data frequently land exactly on
@@ -39,7 +39,7 @@ object Queries {
     * ≪ the 1/(200·n) minimum distance of non-boundary cent quotients) makes
     * both engines round boundary cases the same way. Pure sums of 2-decimal
     * values never sit on a 3rd-decimal boundary and don't need this. */
-  private def roundSafe(c: Column, prec: Int): Column =
+  private[graft] def roundSafe(c: Column, prec: Int): Column =
     round(c + lit(1e-9), prec)
 
   /** Scale-robust exact sum of PRODUCTS of 2-decimal monetary values
@@ -55,7 +55,7 @@ object Queries {
   private def exactSumCents(c: Column): Column =
     round(sum(round(c, 6).cast("decimal(30,6)")), 2).cast("double")
 
-  type Q = (SparkSession, String) => DataFrame
+  private[graft] type Q = (SparkSession, String) => DataFrame
 
   // ---------------------------------------------------------------------------
   // §2.1 construction / packing
@@ -98,7 +98,9 @@ object Queries {
 
   /** fromFlat: split a flat join back into base + nested. */
   val qFromFlat: Q = (s, dir) => {
-    val flat = rd(s, dir, "orders").join(lines(s, dir), Seq("o_orderkey"))
+    val flat = rd(s, dir, "orders").join(
+      rd(s, dir, "lineitem").withColumnRenamed("l_orderkey", "o_orderkey"),
+      Seq("o_orderkey"))
     NestedOps.fromFlat(flat, Seq("o_totalprice"),
         Seq("l_quantity", "l_extendedprice"), Seq("o_orderkey"), "items")
       .select(col("o_orderkey"),
@@ -708,63 +710,21 @@ object Queries {
   }
 
   // ---------------------------------------------------------------------------
-  // registry
+  // registry: one QuerySpec per query, with its DuckDB oracle SQL
   // ---------------------------------------------------------------------------
 
-  val all: Map[String, Q] = Map(
-    "q_asof_join" -> qAsofJoin,
-    "q_asof_forward" -> qAsofForward,
-    "q_asof_nearest" -> qAsofNearest,
-    "q_asof_ts_tol" -> qAsofTsTol,
-    "q_asof_ts_nearest" -> qAsofTsNearest,
-    "q_asof_ntz_tol" -> qAsofNtzTol,
-    "q_dialect_ext" -> qDialectExt,
-    "q_dialect_str" -> qDialectStr,
-    "q_dialect_dt" -> qDialectDt,
-    "q_eval_reduce_base" -> qEvalReduceBase,
-    "q_range_join" -> qRangeJoin,
-    "q_pack_flat" -> qPackFlat,
-    "q_pack_salted" -> qPackSalted,
-    "q_join_nested" -> qJoinNested,
-    "q_from_flat" -> qFromFlat,
-    "q_lists_roundtrip" -> qListsRoundtrip,
-    "q_get_sub" -> qGetSub,
-    "q_explode" -> qExplode,
-    "q_flatten_inner" -> qFlattenInner,
-    "q_split" -> qSplit,
-    "q_nest_filter" -> qNestFilter,
-    "q_query_dialect" -> qQueryDialect,
-    "q_dropna_fillna" -> qDropnaFillna,
-    "q_with_field" -> qWithField,
-    "q_eval_assign" -> qEvalAssign,
-    "q_eval_default" -> qEvalDefault,
-    "q_count_nested_by" -> qCountNestedBy,
-    "q_min_max" -> qMinMax,
-    "q_describe" -> qDescribe,
-    "q_sort_head" -> qSortHead,
-    "q_map_rows_mean" -> qMapRowsMean,
-    "q_sessionize" -> qSessionize,
-    "q_rollup" -> qRollup,
-    "q_set_ops" -> qSetOps,
-    "q_map_rows_kernel" -> qMapRowsKernel,
-    "q_struct_of_list" -> qStructOfList,
-    "q_describe_all" -> qDescribeAll,
-    "q_explode_aligned" -> qExplodeAligned,
-    "q_element_index" -> qElementIndex,
-  ) ++ TrainingQueries.all ++ SurfaceQueries.all
-
-  val oracles: Map[String, String] = Map(
-    "q_asof_join" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_asof_join", qAsofJoin, Some(
       """SELECT l.event_id, l.user_id, epoch_ms(l.ts) AS ms,
         | r.event_id AS p_event_id, r.value AS p_value
         |FROM (SELECT event_id, user_id, ts FROM events
         |      WHERE event_type = 'click') l
         |ASOF LEFT JOIN (SELECT event_id, user_id, ts, value FROM events
         |      WHERE event_type = 'purchase') r
-        |  ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin,
+        |  ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin)),
     // forward ASOF (inequality flipped) + a 3-day tolerance gate; the
     // CASE nulls the payload beyond the bound, like the Spark side
-    "q_asof_forward" ->
+    QuerySpec("q_asof_forward", qAsofForward, Some(
       """SELECT l.event_id, l.user_id, epoch_ms(l.ts) AS ms,
         | CASE WHEN epoch_ns(r.ts) - epoch_ns(l.ts)
         |        <= CAST(259200 AS BIGINT) * 1000000000
@@ -776,9 +736,9 @@ object Queries {
         |      WHERE event_type = 'click') l
         |ASOF LEFT JOIN (SELECT event_id, user_id, ts, value FROM events
         |      WHERE event_type = 'purchase') r
-        |  ON l.user_id = r.user_id AND l.ts <= r.ts""".stripMargin,
+        |  ON l.user_id = r.user_id AND l.ts <= r.ts""".stripMargin)),
     // nearest = both ASOF directions + the distance CASE (tie → backward)
-    "q_asof_nearest" ->
+    QuerySpec("q_asof_nearest", qAsofNearest, Some(
       """WITH l AS (SELECT event_id, user_id, ts FROM events
         |           WHERE event_type = 'click'),
         |r AS (SELECT event_id, user_id, ts, value FROM events
@@ -802,14 +762,14 @@ object Queries {
         |       WHEN epoch_ns(l.ts) - epoch_ns(b_ts)
         |         <= epoch_ns(f_ts) - epoch_ns(l.ts) THEN b_value
         |       ELSE f_value END AS p_value
-        |FROM l LEFT JOIN b USING (event_id) LEFT JOIN f USING (event_id)""".stripMargin,
+        |FROM l LEFT JOIN b USING (event_id) LEFT JOIN f USING (event_id)""".stripMargin)),
     // timestamp-key as-of with a 3-day MILLISECOND tolerance: native ASOF
     // + epoch_us distance CASE. The Spark side matches on µs timestamps
     // (normalized ns DIV 1000) and the oracle's CAST floors any
     // finer-grained encoding to µs the same way (verified ≡ DIV 1000 for
     // positive epochs): parity holds by construction for every events.ts
     // encoding the driver has shipped (ns in rounds 1-6, µs since r7).
-    "q_asof_ts_tol" ->
+    QuerySpec("q_asof_ts_tol", qAsofTsTol, Some(
       """SELECT l.event_id, l.user_id, epoch_ms(l.ts) AS ms,
         | CASE WHEN epoch_us(l.ts) - epoch_us(r.ts)
         |        <= CAST(259200000 AS BIGINT) * 1000
@@ -822,10 +782,10 @@ object Queries {
         |ASOF LEFT JOIN (SELECT event_id, user_id,
         |        CAST(ts AS TIMESTAMP) AS ts, value FROM events
         |      WHERE event_type = 'purchase') r
-        |  ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin,
+        |  ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin)),
     // NTZ twin: DuckDB TIMESTAMP is zone-less, so the identical SQL
     // replays the naive-datetime (wall-clock) semantics
-    "q_asof_ntz_tol" ->
+    QuerySpec("q_asof_ntz_tol", qAsofNtzTol, Some(
       """SELECT l.event_id, l.user_id, epoch_ms(l.ts) AS ms,
         | CASE WHEN epoch_us(l.ts) - epoch_us(r.ts)
         |        <= CAST(259200000 AS BIGINT) * 1000
@@ -838,12 +798,12 @@ object Queries {
         |ASOF LEFT JOIN (SELECT event_id, user_id,
         |        CAST(ts AS TIMESTAMP) AS ts, value FROM events
         |      WHERE event_type = 'purchase') r
-        |  ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin,
+        |  ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin)),
     // the .str long-tail surface replayed in plain DuckDB string SQL;
     // `ctr` spells out CPython's center parity rule (extra fill LEFT only
     // when margin and width are both odd — width 9 here, so left =
     // marg//2 + marg%2)
-    "q_dialect_str" ->
+    QuerySpec("q_dialect_str", qDialectStr, Some(
       """SELECT doc_id,
         | repeat('0', greatest(10 - length(source), 0)) || source AS z,
         | substr(source, least(2, length(source)) + 1,
@@ -862,7 +822,7 @@ object Queries {
         |   repeat('*', greatest(9 - length(source), 0)
         |               - (greatest(9 - length(source), 0) // 2
         |                  + greatest(9 - length(source), 0) % 2)) AS ctr
-        |FROM documents""".stripMargin,
+        |FROM documents""".stripMargin)),
     // pandas dayofweek is Monday=0 -> DuckDB isodow(Mon=1) - 1.
     // round('h') on the ELEMENT layer is arrow HALF-UP = floor(m + u/2)
     // in epoch micros; ceil = (m + u - 1) // u * u. NOTE: DuckDB `//`
@@ -870,7 +830,7 @@ object Queries {
     // hold only for POSITIVE epoch micros — fine here (events are all
     // post-2020) but NOT a general pre-epoch replay; graft's own pmod
     // arithmetic is floor-correct for all signs. nanosecond ≡ 0 for µs.
-    "q_dialect_dt" ->
+    QuerySpec("q_dialect_dt", qDialectDt, Some(
       """SELECT event_id,
         | CAST(year(ts) AS BIGINT) AS yr,
         | CAST(isodow(ts) - 1 AS BIGINT) AS dow,
@@ -887,10 +847,10 @@ object Queries {
         |                * 900000000) AS c15,
         | CAST(0 AS BIGINT) AS nns
         |FROM events
-        |WHERE month(ts) <= 6""".stripMargin,
+        |WHERE month(ts) <= 6""".stripMargin)),
     // global Series reductions (avg OVER ()) broadcast to every row —
     // pandas eval `nv.mean()` / `t0.dt.dayofyear.mean()` semantics
-    "q_eval_reduce_base" ->
+    QuerySpec("q_eval_reduce_base", qEvalReduceBase, Some(
       """WITH base AS (
         |  SELECT user_id, min(ts) AS t0, count(*) AS nv
         |  FROM events GROUP BY user_id)
@@ -900,17 +860,17 @@ object Queries {
         |  CAST(year(date_trunc('day', t0)) AS BIGINT) AS y0,
         |  strftime(date_trunc('day', t0), '%Y-%m-%d') AS lab,
         |  nv AS n_ev
-        |FROM base""".stripMargin,
-    "q_dialect_ext" ->
+        |FROM base""".stripMargin)),
+    QuerySpec("q_dialect_ext", qDialectExt, Some(
       """SELECT l_returnflag, count(*) AS n,
         | round(sum(l_quantity), 2) AS sum_qty
         |FROM lineitem
         |WHERE lower(l_returnflag) IN ('r', 'n')
         |  AND l_quantity > 5 AND l_quantity < 30
         |  AND floor(l_extendedprice / 1000) <> 0
-        |GROUP BY l_returnflag""".stripMargin,
+        |GROUP BY l_returnflag""".stripMargin)),
     // same µs-truncation-by-construction as q_asof_ts_tol above
-    "q_asof_ts_nearest" ->
+    QuerySpec("q_asof_ts_nearest", qAsofTsNearest, Some(
       """WITH l AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
         |           FROM events WHERE event_type = 'click'),
         |r AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
@@ -934,8 +894,8 @@ object Queries {
         |       WHEN epoch_us(l.ts) - epoch_us(b_ts)
         |         <= epoch_us(f_ts) - epoch_us(l.ts) THEN b_value
         |       ELSE f_value END AS p_value
-        |FROM l LEFT JOIN b USING (event_id) LEFT JOIN f USING (event_id)""".stripMargin,
-    "q_range_join" ->
+        |FROM l LEFT JOIN b USING (event_id) LEFT JOIN f USING (event_id)""".stripMargin)),
+    QuerySpec("q_range_join", qRangeJoin, Some(
       """SELECT l.event_id, l.user_id, epoch_ms(l.ts) AS ms,
         | r.event_id AS p_event_id, epoch_ms(r.ts) AS p_ms,
         | r.value AS p_value
@@ -945,92 +905,92 @@ object Queries {
         |      WHERE event_type = 'purchase') r
         |  ON l.user_id = r.user_id AND r.ts >= l.ts
         |    AND epoch_ns(r.ts) < epoch_ns(l.ts)
-        |      + CAST(604800 AS BIGINT) * 1000000000""".stripMargin,
-    "q_pack_salted" ->
+        |      + CAST(604800 AS BIGINT) * 1000000000""".stripMargin)),
+    QuerySpec("q_pack_salted", qPackSalted, Some(
       """SELECT l_orderkey AS orderkey, count(*) AS n_items,
         | round(sum(l_quantity), 2) AS sum_qty
-        |FROM lineitem GROUP BY l_orderkey""".stripMargin,
-    "q_pack_flat" ->
+        |FROM lineitem GROUP BY l_orderkey""".stripMargin), Headline),
+    QuerySpec("q_pack_flat", qPackFlat, Some(
       """SELECT l_orderkey AS orderkey, count(*) AS n_items,
         | round(sum(l_quantity), 2) AS sum_qty
-        |FROM lineitem GROUP BY l_orderkey""".stripMargin,
-    "q_join_nested" ->
+        |FROM lineitem GROUP BY l_orderkey""".stripMargin), Headline),
+    QuerySpec("q_join_nested", qJoinNested, Some(
       """SELECT o_orderkey, round(o_totalprice, 2) AS totalprice,
         | count(l_orderkey) AS n_items
         |FROM orders LEFT JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY o_orderkey, o_totalprice""".stripMargin,
-    "q_from_flat" ->
+        |GROUP BY o_orderkey, o_totalprice""".stripMargin), Headline),
+    QuerySpec("q_from_flat", qFromFlat, Some(
       """SELECT o_orderkey, round(o_totalprice, 2) AS totalprice,
         | count(*) AS n_items, round(sum(l_extendedprice), 2) AS sum_price
         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY o_orderkey, o_totalprice""".stripMargin,
-    "q_lists_roundtrip" ->
-      "SELECT count(*) AS n, round(sum(l_quantity), 2) AS sum_qty FROM lineitem",
-    "q_get_sub" ->
+        |GROUP BY o_orderkey, o_totalprice""".stripMargin), Headline),
+    QuerySpec("q_lists_roundtrip", qListsRoundtrip, Some(
+      "SELECT count(*) AS n, round(sum(l_quantity), 2) AS sum_qty FROM lineitem"), Headline),
+    QuerySpec("q_get_sub", qGetSub, Some(
       """SELECT l_orderkey AS orderkey,
         | count(DISTINCT l_quantity) AS n_distinct_qty
-        |FROM lineitem GROUP BY l_orderkey""".stripMargin,
-    "q_explode" ->
+        |FROM lineitem GROUP BY l_orderkey""".stripMargin), Headline),
+    QuerySpec("q_explode", qExplode, Some(
       """SELECT o_orderpriority, count(*) AS n,
         | round(sum(l_quantity), 2) AS sum_qty
         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY o_orderpriority""".stripMargin,
-    "q_flatten_inner" ->
+        |GROUP BY o_orderpriority""".stripMargin), Headline),
+    QuerySpec("q_flatten_inner", qFlattenInner, Some(
       """SELECT o_custkey AS custkey, count(*) AS n_items,
         | round(sum(l_extendedprice), 2) AS sum_price
         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY o_custkey""".stripMargin,
-    "q_split" ->
+        |GROUP BY o_custkey""".stripMargin), Headline),
+    QuerySpec("q_split", qSplit, Some(
       """SELECT l_orderkey AS orderkey,
         | count(*) FILTER (WHERE l_linestatus = 'O') AS n_open,
         | count(*) FILTER (WHERE l_linestatus = 'F') AS n_filled
-        |FROM lineitem GROUP BY l_orderkey""".stripMargin,
-    "q_nest_filter" ->
+        |FROM lineitem GROUP BY l_orderkey""".stripMargin), Headline),
+    QuerySpec("q_nest_filter", qNestFilter, Some(
       """SELECT l_orderkey AS orderkey, count(*) AS n,
         | round(avg(l_extendedprice) + 1e-9, 2) AS avg_price
-        |FROM lineitem WHERE l_quantity > 25 GROUP BY l_orderkey""".stripMargin,
-    "q_query_dialect" ->
+        |FROM lineitem WHERE l_quantity > 25 GROUP BY l_orderkey""".stripMargin), Headline),
+    QuerySpec("q_query_dialect", qQueryDialect, Some(
       """SELECT l_returnflag, count(*) AS n,
         | round(sum(l_extendedprice), 2) AS sum_price
-        |FROM lineitem WHERE l_discount > 0.05 GROUP BY l_returnflag""".stripMargin,
-    "q_dropna_fillna" ->
+        |FROM lineitem WHERE l_discount > 0.05 GROUP BY l_returnflag""".stripMargin), Headline),
+    QuerySpec("q_dropna_fillna", qDropnaFillna, Some(
       """SELECT
         | (SELECT count(*) FROM lineitem WHERE l_discount >= 0.03) AS n_after_dropna,
         | (SELECT round(sum(CASE WHEN l_discount < 0.03 THEN 0.0
         |                        ELSE l_discount END), 4)
-        |  FROM lineitem) AS sum_after_fillna""".stripMargin,
-    "q_with_field" ->
+        |  FROM lineitem) AS sum_after_fillna""".stripMargin), Headline),
+    QuerySpec("q_with_field", qWithField, Some(
       """SELECT l_returnflag,
         | cast(round(sum(cast(round(l_extendedprice * (1 - l_discount), 6)
         |   as decimal(30,6))), 2) as double) AS sum_revenue
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "q_eval_assign" ->
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin), Headline),
+    QuerySpec("q_eval_assign", qEvalAssign, Some(
       """SELECT l_linestatus,
         | cast(round(sum(cast(round(l_extendedprice * (1 - l_discount)
         |   * (1 + l_tax), 6) as decimal(30,6))), 2) as double) AS sum_charge
-        |FROM lineitem GROUP BY l_linestatus""".stripMargin,
-    "q_eval_default" ->
+        |FROM lineitem GROUP BY l_linestatus""".stripMargin), Headline),
+    QuerySpec("q_eval_default", qEvalDefault, Some(
       """SELECT l_linestatus,
         | cast(round(sum(cast(round(l_extendedprice * (1 + l_tax), 6)
         |   as decimal(30,6))), 2) as double) AS sum_charge,
         | cast(round(sum(cast(round(l_extendedprice * 2, 6)
         |   as decimal(30,6))), 2) as double) AS sum_price2
-        |FROM lineitem GROUP BY l_linestatus""".stripMargin,
-    "q_count_nested_by" ->
+        |FROM lineitem GROUP BY l_linestatus""".stripMargin)),
+    QuerySpec("q_count_nested_by", qCountNestedBy, Some(
       """SELECT l_orderkey AS orderkey,
         | count(*) FILTER (WHERE l_returnflag = 'R') AS n_r,
         | count(*) FILTER (WHERE l_returnflag = 'A') AS n_a,
         | count(*) FILTER (WHERE l_returnflag = 'N') AS n_n
-        |FROM lineitem GROUP BY l_orderkey""".stripMargin,
-    "q_min_max" ->
+        |FROM lineitem GROUP BY l_orderkey""".stripMargin), Headline),
+    QuerySpec("q_min_max", qMinMax, Some(
       """SELECT
         | (SELECT round(min(o_totalprice), 2) FROM orders
         |   WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem)) AS min_total,
         | (SELECT round(max(o_totalprice), 2) FROM orders
         |   WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem)) AS max_total,
         | (SELECT round(min(l_quantity), 2) FROM lineitem) AS min_qty,
-        | (SELECT round(max(l_quantity), 2) FROM lineitem) AS max_qty""".stripMargin,
-    "q_describe" ->
+        | (SELECT round(max(l_quantity), 2) FROM lineitem) AS max_qty""".stripMargin), Headline),
+    QuerySpec("q_describe", qDescribe, Some(
       """SELECT count(l_extendedprice) AS cnt,
         | round(avg(l_extendedprice) + 1e-9, 2) AS mean,
         | round(stddev_samp(l_extendedprice) + 1e-9, 2) AS std,
@@ -1039,21 +999,21 @@ object Queries {
         | round(quantile_cont(l_extendedprice, 0.5) + 1e-9, 2) AS q50,
         | round(quantile_cont(l_extendedprice, 0.75) + 1e-9, 2) AS q75,
         | round(max(l_extendedprice), 2) AS mx
-        |FROM lineitem""".stripMargin,
-    "q_sort_head" ->
+        |FROM lineitem""".stripMargin), Headline),
+    QuerySpec("q_sort_head", qSortHead, Some(
       """SELECT l_orderkey AS orderkey,
         | round(l_extendedprice, 2) AS latest_price
         |FROM (SELECT l_orderkey, l_extendedprice,
         |        row_number() OVER (PARTITION BY l_orderkey
         |          ORDER BY l_shipdate DESC, l_linenumber, l_extendedprice,
         |            l_partkey, l_suppkey) AS rn
-        |      FROM lineitem) WHERE rn = 1""".stripMargin,
-    "q_map_rows_mean" ->
+        |      FROM lineitem) WHERE rn = 1""".stripMargin), Headline),
+    QuerySpec("q_map_rows_mean", qMapRowsMean, Some(
       """SELECT l_orderkey AS orderkey,
         | round(avg(l_quantity) + 1e-9, 4) AS mean_qty,
         | round(max(l_extendedprice) - min(l_extendedprice), 2) AS amplitude
-        |FROM lineitem GROUP BY l_orderkey""".stripMargin,
-    "q_sessionize" ->
+        |FROM lineitem GROUP BY l_orderkey""".stripMargin), Headline),
+    QuerySpec("q_sessionize", qSessionize, Some(
       """SELECT user_id, CAST(sum(new_session) AS BIGINT) AS n_sessions,
         | count(*) AS n_events
         |FROM (SELECT user_id,
@@ -1064,8 +1024,8 @@ object Queries {
         |              lag(epoch_ms(ts)) OVER (PARTITION BY user_id
         |                ORDER BY ts, event_id) AS prev_ms
         |            FROM events))
-        |GROUP BY user_id""".stripMargin,
-    "q_map_rows_kernel" ->
+        |GROUP BY user_id""".stripMargin), Headline),
+    QuerySpec("q_map_rows_kernel", qMapRowsKernel, Some(
       """SELECT l_orderkey AS orderkey,
         | round(max(abs(l_extendedprice - prev)), 2) AS max_jump
         |FROM (SELECT l_orderkey, l_extendedprice,
@@ -1073,12 +1033,12 @@ object Queries {
         |          ORDER BY l_shipdate, l_linenumber, l_extendedprice,
         |                   l_partkey, l_suppkey) AS prev
         |      FROM lineitem)
-        |GROUP BY l_orderkey""".stripMargin,
-    "q_struct_of_list" ->
+        |GROUP BY l_orderkey""".stripMargin), Headline),
+    QuerySpec("q_struct_of_list", qStructOfList, Some(
       """SELECT l_returnflag, count(*) AS n,
         | round(sum(l_quantity), 2) AS sum_qty
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "q_describe_all" -> {
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin), Headline),
+    QuerySpec("q_describe_all", qDescribeAll, Some {
       val q = "l_quantity"
       Seq(
         s"SELECT 'items.$q' AS \"column\", 'count' AS stat, " +
@@ -1091,20 +1051,20 @@ object Queries {
         s"SELECT 'items.$q', '75%', round(quantile_cont($q, 0.75) + 1e-9, 4) FROM lineitem",
         s"SELECT 'items.$q', 'max', round(CAST(max($q) AS DOUBLE) + 1e-9, 4) FROM lineitem",
       ).mkString(" UNION ALL ")
-    },
-    "q_explode_aligned" ->
+    }, Headline),
+    QuerySpec("q_explode_aligned", qExplodeAligned, Some(
       """SELECT l_returnflag, count(*) AS n,
         | round(sum(l_quantity), 2) AS sum_qty
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "q_element_index" ->
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin), Headline),
+    QuerySpec("q_element_index", qElementIndex, Some(
       """SELECT l_orderkey AS orderkey,
         | round(l_extendedprice, 2) AS min_qty_price
         |FROM (SELECT l_orderkey, l_extendedprice,
         |        row_number() OVER (PARTITION BY l_orderkey
         |          ORDER BY l_quantity, l_extendedprice, l_partkey, l_suppkey,
         |                   l_linenumber) AS rn
-        |      FROM lineitem) WHERE rn = 1""".stripMargin,
-    "q_rollup" ->
+        |      FROM lineitem) WHERE rn = 1""".stripMargin), Headline, Parity),
+    QuerySpec("q_rollup", qRollup, Some(
       """SELECT coalesce(o_orderstatus, 'ALL') AS status,
         | coalesce(o_orderpriority, 'ALL') AS priority,
         | count(*) AS n_orders, CAST(sum(n_items) AS BIGINT) AS n_items
@@ -1114,13 +1074,13 @@ object Queries {
         |      FROM orders
         |      WHERE EXISTS (SELECT 1 FROM lineitem
         |                    WHERE l_orderkey = o_orderkey))
-        |GROUP BY ROLLUP (o_orderstatus, o_orderpriority)""".stripMargin,
-    "q_set_ops" ->
+        |GROUP BY ROLLUP (o_orderstatus, o_orderpriority)""".stripMargin), Headline),
+    QuerySpec("q_set_ops", qSetOps, Some(
       """SELECT l_partkey AS partkey FROM lineitem WHERE l_linestatus = 'O'
         |INTERSECT
         |SELECT l_partkey FROM lineitem WHERE l_linestatus = 'F'
         |EXCEPT
         |SELECT l_partkey FROM lineitem
-        |WHERE l_returnflag = 'R' AND l_quantity > 45""".stripMargin,
-  ) ++ TrainingQueries.oracles ++ SurfaceQueries.oracles
+        |WHERE l_returnflag = 'R' AND l_quantity > 45""".stripMargin), Headline),
+  )
 }

@@ -4,28 +4,48 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.nested.{NestedOps, NestedExpr}
 import graft.nested.syntax._
-import graft.sources.NestedParquet
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** One driver query: how to build it, the DuckDB SQL that must return the
+  * same rows (None for the rows-only checks, whose engine hashes DuckDB
+  * cannot replay), and the tags Bench reads. */
+final case class QuerySpec(name: String, build: Queries.Q,
+                           oracleSql: Option[String], tags: QuerySpec.Tag*) {
+  def is(tag: QuerySpec.Tag): Boolean = tags.contains(tag)
+}
+
+object QuerySpec {
+  sealed trait Tag
+  /** In Bench's `headline_total`: the round-1 battery, frozen so the
+    * metric measures the same work every round. */
+  case object Headline extends Tag
+  /** An oracle-parity or alignment artifact, not a production path: an
+    * id-capped `_exact` twin that value-replays an operator's internals in
+    * DuckDB, or a shape that exists only to line up with the oracle (global
+    * shingle rank, element index, takeRows' row_number position). Bench
+    * leaves these out of `production_total`. */
+  case object Parity extends Tag
+  /** A parity query so costly it distorts the timed battery's noise floor;
+    * Verify checks it, Bench does not time it. */
+  case object BenchSkip extends Tag
+}
+
+/** Driver contract — see SURVEY.md §7.
   *
   * Every query takes (spark, sfDir) and returns a FLAT DataFrame whose
-  * columns are aliased identically to the DuckDB oracle SQL in [[oracleSql]].
+  * columns are aliased identically to its [[QuerySpec.oracleSql]].
   * Doubles are rounded in both engines so value hashes match.
   */
 object SparkEntry {
-
-  private def read(s: SparkSession, dir: String, table: String): DataFrame =
-    NestedParquet.readParquet(s, s"$dir/$table.parquet")
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Mirrors the reference's performance.ipynb workflow: read → join_nested →
     * element query → count_nested → per-row reduce. */
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
-    val orders = read(spark, dir, "orders")
+    val orders = Queries.rd(spark, dir, "orders")
     // prune the child to the used fields BEFORE the pack: the collect_list
     // shuffle must carry 3 leaves, not all 16 lineitem columns
-    val lineitem = read(spark, dir, "lineitem")
+    val lineitem = Queries.rd(spark, dir, "lineitem")
       .select("l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag")
     orders
       .joinNested(lineitem, Seq("l_orderkey" -> "o_orderkey"), "lines")
@@ -47,31 +67,16 @@ object SparkEntry {
     }
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all
+  /** Every driver query, sorted by name (Bench's pass order). */
+  val specs: Seq[QuerySpec] =
+    (Queries.specs ++ TrainingQueries.specs ++ SurfaceQueries.specs)
+      .sortBy(_.name)
 
-  /** Oracle-parity / alignment queries: id-capped correctness artifacts
-    * whose job is to value-replay an operator's internals in DuckDB (the
-    * `_exact` twins), or whose shape exists only to align with an oracle
-    * (global shingle rank via distributed sort, element index replay).
-    * They are NOT production paths — Bench reports `production_total`
-    * with their time excluded, next to the all-in `total`. */
-  val oracleParityKeys: Set[String] = Set(
-    "q_minhash_pairs_exact", "q_simhash_pairs_exact",
-    "q_dedup_pipeline_exact", "q_minhash_rank", "q_element_index",
-    // r9: global-row_number alignment artifact for takeRows (takes are
-    // small driver-side reorderings by contract; the window exists only
-    // to give the oracle a deterministic position column)
-    "q_take")
-
-  /** Parity queries so expensive they distort the timed battery's noise
-    * floor (q_simhash_pairs_exact's Hamming-24 star+dual-chain replay was
-    * ~9% of the r5 non-headline total): correctness-gated in Verify as
-    * always, but skipped by the default Bench timing loop. Must stay
-    * disjoint from [[Bench.headlineKeys]] (the pinned round-1 metric). */
-  val benchSkipKeys: Set[String] = Set("q_simhash_pairs_exact")
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Queries.oracles
+  /** The specs with these names, in registry order; fails naming every
+    * name the registry does not have. */
+  def named(names: String*): Seq[QuerySpec] = {
+    val unknown = names.distinct.filterNot(n => specs.exists(_.name == n))
+    require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
+    specs.filter(q => names.contains(q.name))
+  }
 }

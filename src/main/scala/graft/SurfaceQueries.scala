@@ -15,14 +15,8 @@ import graft.sources.NestedParquet
   */
 object SurfaceQueries {
 
-  import Queries.Q
-
-  private def rd(s: SparkSession, dir: String, t: String): DataFrame =
-    NestedParquet.readParquet(s, s"$dir/$t.parquet")
-
-  private def lines(s: SparkSession, dir: String, cols: String*): DataFrame =
-    rd(s, dir, "lineitem").withColumnRenamed("l_orderkey", "o_orderkey")
-      .select(("o_orderkey" +: cols).map(col): _*)
+  import Queries.{Q, rd, lines}
+  import QuerySpec.Parity
 
   /** Run two INDEPENDENT Spark actions concurrently and await BOTH before
     * returning or propagating (guide §2.6 overlap; ADVICE r13 hardening):
@@ -998,68 +992,11 @@ object SurfaceQueries {
   }
 
   // ---------------------------------------------------------------------------
-  // registry
+  // registry: one QuerySpec per query, with its DuckDB oracle SQL
   // ---------------------------------------------------------------------------
 
-  val all: Map[String, Q] = Map(
-    "q_zip_nests" -> qZipNests,
-    "q_take" -> qTake,
-    "q_describe_approx" -> qDescribeApprox,
-    "q_pack_seq" -> qPackSeq,
-    "q_view_fields" -> qViewFields,
-    "q_schema_cols" -> qSchemaCols,
-    "q_set_list_column" -> qSetListColumn,
-    "q_scatter_fill" -> qScatterFill,
-    "q_drop_fields" -> qDropFields,
-    "q_concat_take" -> qConcatTake,
-    "q_sort_base" -> qSortBase,
-    "q_cell_dropna" -> qCellDropna,
-    "q_apply" -> qApply,
-    "q_generate" -> qGenerate,
-    "q_partial_read" -> qPartialRead,
-    "q_read_glob" -> qReadGlob,
-    "q_mixed_read" -> qMixedRead,
-    "q_eval_cross" -> qEvalCross,
-    "q_map_rows_nested" -> qMapRowsNested,
-    "q_describe_pct" -> qDescribePct,
-    "q_describe_incl" -> qDescribeIncl,
-    "q_sort_napos" -> qSortNapos,
-    "q_set_flat_from" -> qSetFlatFrom,
-    "q_describe_str" -> qDescribeStr,
-    "q_min_max_flags" -> qMinMaxFlags,
-    "q_dropna_opts" -> qDropnaOpts,
-    "q_session_window" -> qSessionWindow,
-    "q_eval_reduce" -> qEvalReduce,
-    "q_flagship" -> qFlagship,
-    "q_value_counts" -> qValueCounts,
-    "q_shift_lag" -> qShiftLag,
-    "q_ffill" -> qFfill,
-    "q_melt" -> qMelt,
-    "q_pivot" -> qPivot,
-    "q_rank" -> qRank,
-    "q_cum_diff" -> qCumDiff,
-    "q_rolling" -> qRolling,
-    "q_interp" -> qInterp,
-    "q_cut" -> qCut,
-    "q_qcut" -> qQcut,
-    "q_corr" -> qCorr,
-    "q_col_stats" -> qColStats,
-    "q_clip_pct" -> qClipPct,
-    "q_crosstab" -> qCrosstab,
-    "q_factorize" -> qFactorize,
-    "q_ewm" -> qEwm,
-    // r13: ewm breadth + tranche 14 (time rolling, resample,
-    // stack/unstack)
-    "q_ewm_var" -> qEwmVar,
-    "q_ewm_cov" -> qEwmCov,
-    "q_rolling_time" -> qRollingTime,
-    "q_resample" -> qResample,
-    "q_stack" -> qStack,
-    "q_unstack" -> qUnstack,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_ewm_var" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_ewm_var", qEwmVar, Some(
       """WITH RECURSIVE posed AS (
         |  SELECT o_orderstatus AS g, o_orderkey AS k, o_totalprice AS x,
         |    row_number() OVER (PARTITION BY o_orderstatus
@@ -1085,8 +1022,8 @@ object SurfaceQueries {
         |      (w1 * w1 / (w1 * w1 - w2))
         |        * (s2 / w1 - (s1 / w1) * (s1 / w1)), 0)) + 1e-9, 4)
         |  END AS ewm_std
-        |FROM r""".stripMargin,
-    "q_ewm_cov" ->
+        |FROM r""".stripMargin)),
+    QuerySpec("q_ewm_cov", qEwmCov, Some(
       """WITH RECURSIVE posed AS (
         |  SELECT o_orderstatus AS g, o_orderkey AS k,
         |    CAST(o_totalprice AS DOUBLE) AS x,
@@ -1112,16 +1049,16 @@ object SurfaceQueries {
         |      / sqrt((sxx / w1 - (sx / w1) * (sx / w1))
         |           * (syy / w1 - (sy / w1) * (sy / w1))) + 1e-9, 5)
         |  END AS ewm_corr
-        |FROM r""".stripMargin,
-    "q_rolling_time" ->
+        |FROM r""".stripMargin)),
+    QuerySpec("q_rolling_time", qRollingTime, Some(
       """SELECT event_id,
         |  CASE WHEN count(value) OVER w >= 2
         |       THEN round(avg(value) OVER w + 1e-9, 6) END AS roll_mean
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts
         |  RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)"""
-        .stripMargin,
-    "q_resample" ->
+        .stripMargin)),
+    QuerySpec("q_resample", qResample, Some(
       """WITH bounds AS (
         |  SELECT epoch_us(date_trunc('day', min(ts))) AS day0,
         |         epoch_us(min(ts)) AS tmin, epoch_us(max(ts)) AS tmax
@@ -1139,16 +1076,16 @@ object SurfaceQueries {
         |  FROM events, bounds GROUP BY 1)
         |SELECT axis.bin // 1000 AS bin_ms,
         |  round(agg.m + 1e-9, 6) AS v_mean
-        |FROM axis LEFT JOIN agg USING (bin)""".stripMargin,
-    "q_stack" ->
+        |FROM axis LEFT JOIN agg USING (bin)""".stripMargin)),
+    QuerySpec("q_stack", qStack, Some(
       """SELECT o_orderkey, 'o_custkey' AS variable,
         |  round(CAST(o_custkey AS DOUBLE), 2) AS value
         |FROM orders WHERE o_custkey IS NOT NULL
         |UNION ALL
         |SELECT o_orderkey, 'o_totalprice' AS variable,
         |  round(CAST(o_totalprice AS DOUBLE), 2) AS value
-        |FROM orders WHERE o_totalprice IS NOT NULL""".stripMargin,
-    "q_unstack" ->
+        |FROM orders WHERE o_totalprice IS NOT NULL""".stripMargin)),
+    QuerySpec("q_unstack", qUnstack, Some(
       """SELECT o_orderkey,
         |  round(max(CASE WHEN o_orderstatus = 'F' THEN o_totalprice END),
         |    2) AS "F",
@@ -1157,8 +1094,8 @@ object SurfaceQueries {
         |  round(max(CASE WHEN o_orderstatus = 'P' THEN o_totalprice END),
         |    2) AS "P"
         |FROM orders WHERE o_orderstatus IS NOT NULL
-        |GROUP BY 1""".stripMargin,
-    "q_ewm" ->
+        |GROUP BY 1""".stripMargin)),
+    QuerySpec("q_ewm", qEwm, Some(
       """WITH RECURSIVE posed AS (
         |  SELECT o_orderstatus AS g, o_orderkey AS k, o_totalprice AS x,
         |    row_number() OVER (PARTITION BY o_orderstatus
@@ -1174,8 +1111,8 @@ object SurfaceQueries {
         |  FROM capped c JOIN r ON c.g = r.g AND c.rn = r.rn + 1)
         |SELECT k AS o_orderkey, g AS o_orderstatus,
         |  round(num / den + 1e-9, 4) AS ewm
-        |FROM r""".stripMargin,
-    "q_crosstab" ->
+        |FROM r""".stripMargin)),
+    QuerySpec("q_crosstab", qCrosstab, Some(
       """WITH ct AS (
         |  SELECT l_returnflag,
         |   CAST(sum(CASE WHEN l_linestatus = 'F' THEN 1 ELSE 0 END)
@@ -1189,8 +1126,8 @@ object SurfaceQueries {
         |SELECT l_returnflag, "F", "O", "All" FROM ct
         |UNION ALL
         |SELECT 'All', CAST(sum("F") AS BIGINT), CAST(sum("O") AS BIGINT),
-        |  CAST(sum("All") AS BIGINT) FROM ct""".stripMargin,
-    "q_factorize" ->
+        |  CAST(sum("All") AS BIGINT) FROM ct""".stripMargin)),
+    QuerySpec("q_factorize", qFactorize, Some(
       """WITH fo AS (SELECT o_orderpriority AS v, min(o_orderkey) AS f
         |            FROM orders WHERE o_orderpriority IS NOT NULL
         |            GROUP BY 1),
@@ -1199,8 +1136,8 @@ object SurfaceQueries {
         |  FROM fo)
         |SELECT o_orderkey, CAST(COALESCE(code, -1) AS BIGINT) AS code
         |FROM orders LEFT JOIN codes ON o_orderpriority = v"""
-        .stripMargin,
-    "q_col_stats" ->
+        .stripMargin)),
+    QuerySpec("q_col_stats", qColStats, Some(
       """WITH m AS (SELECT o_orderpriority AS v, count(*) AS c
         |           FROM orders WHERE o_orderpriority IS NOT NULL
         |           GROUP BY 1)
@@ -1219,16 +1156,16 @@ object SurfaceQueries {
         | (SELECT round(kurtosis(o_totalprice) + 1e-9, 6)
         |  FROM orders) AS kurt,
         | (SELECT round(stddev_samp(o_totalprice) / sqrt(count(*)) + 1e-9,
-        |    4) FROM orders) AS sem""".stripMargin,
-    "q_clip_pct" ->
+        |    4) FROM orders) AS sem""".stripMargin)),
+    QuerySpec("q_clip_pct", qClipPct, Some(
       """SELECT o_orderkey, o_orderstatus,
         | round(LEAST(GREATEST(o_totalprice, 5000.0), 150000.0), 2)
         |   AS clip_price,
         | round(o_totalprice / lag(o_totalprice) OVER (
         |     PARTITION BY o_orderstatus ORDER BY o_orderkey) - 1
         |   + 1e-9, 6) AS pct
-        |FROM orders""".stripMargin,
-    "q_rolling" ->
+        |FROM orders""".stripMargin)),
+    QuerySpec("q_rolling", qRolling, Some(
       """SELECT o_orderkey, o_orderstatus,
         | CASE WHEN count(p) OVER w >= 2
         |      THEN round(avg(p) OVER w + 1e-9, 4) END AS roll_mean
@@ -1238,8 +1175,8 @@ object SurfaceQueries {
         |      FROM orders)
         |WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_orderkey
         |             ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)"""
-        .stripMargin,
-    "q_interp" ->
+        .stripMargin)),
+    QuerySpec("q_interp", qInterp, Some(
       """WITH posed AS (
         |  SELECT o_orderkey, o_orderstatus,
         |    CASE WHEN o_orderkey % 7 < 2 THEN NULL
@@ -1266,15 +1203,15 @@ object SurfaceQueries {
         |       WHEN nv IS NULL THEN pv
         |       ELSE pv + (nv - pv) * ((pos - pi) / (ni - pi)) END
         |   + 1e-9, 4) AS p_interp
-        |FROM marked""".stripMargin,
-    "q_cut" ->
+        |FROM marked""".stripMargin)),
+    QuerySpec("q_cut", qCut, Some(
       """SELECT CAST(CASE WHEN l_quantity > 0 AND l_quantity <= 10 THEN 0
         |        WHEN l_quantity > 10 AND l_quantity <= 25 THEN 1
         |        WHEN l_quantity > 25 AND l_quantity <= 50 THEN 2
         |   END AS BIGINT) AS bin,
         | count(*) AS cnt, round(sum(l_quantity), 2) AS qty
-        |FROM lineitem GROUP BY 1""".stripMargin,
-    "q_qcut" ->
+        |FROM lineitem GROUP BY 1""".stripMargin)),
+    QuerySpec("q_qcut", qQcut, Some(
       """WITH e AS (
         |  SELECT quantile_cont(CAST(o_custkey AS DOUBLE), 0.25) AS q1,
         |         quantile_cont(CAST(o_custkey AS DOUBLE), 0.5)  AS q2,
@@ -1287,21 +1224,21 @@ object SurfaceQueries {
         | count(*) AS cnt,
         | CAST(min(o_custkey) AS BIGINT) AS lo,
         | CAST(max(o_custkey) AS BIGINT) AS hi
-        |FROM orders, e GROUP BY 1""".stripMargin,
-    "q_corr" ->
+        |FROM orders, e GROUP BY 1""".stripMargin)),
+    QuerySpec("q_corr", qCorr, Some(
       """SELECT round(corr(l_quantity, l_extendedprice) + 1e-9, 6)
         |   AS corr,
         | round(covar_samp(l_quantity, l_extendedprice) + 1e-9, 2)
         |   AS cov
-        |FROM lineitem""".stripMargin,
-    "q_rank" ->
+        |FROM lineitem""".stripMargin)),
+    QuerySpec("q_rank", qRank, Some(
       """SELECT o_orderkey, o_orderstatus,
         | CAST(rank() OVER (PARTITION BY o_orderstatus
         |     ORDER BY o_totalprice DESC)
         |   + (count(*) OVER (PARTITION BY o_orderstatus, o_totalprice)
         |      - 1) / 2.0 AS DOUBLE) AS rank
-        |FROM orders""".stripMargin,
-    "q_cum_diff" ->
+        |FROM orders""".stripMargin)),
+    QuerySpec("q_cum_diff", qCumDiff, Some(
       """SELECT o_orderkey, o_orderstatus,
         | CAST(sum(o_custkey) OVER (PARTITION BY o_orderstatus
         |   ORDER BY o_orderkey
@@ -1310,14 +1247,14 @@ object SurfaceQueries {
         | round(o_totalprice - lag(o_totalprice) OVER (
         |     PARTITION BY o_orderstatus ORDER BY o_orderkey) + 1e-9, 2)
         |   AS price_diff
-        |FROM orders""".stripMargin,
-    "q_melt" ->
+        |FROM orders""".stripMargin)),
+    QuerySpec("q_melt", qMelt, Some(
       """SELECT o_orderkey, 'o_totalprice' AS variable,
         | CAST(o_totalprice AS DOUBLE) AS value FROM orders
         |UNION ALL
         |SELECT o_orderkey, 'o_custkey',
-        | CAST(o_custkey AS DOUBLE) FROM orders""".stripMargin,
-    "q_pivot" ->
+        | CAST(o_custkey AS DOUBLE) FROM orders""".stripMargin)),
+    QuerySpec("q_pivot", qPivot, Some(
       """SELECT l_returnflag,
         | CAST(sum(CASE WHEN l_linestatus = 'F' THEN l_quantity END)
         |   AS DOUBLE) AS "F",
@@ -1325,19 +1262,19 @@ object SurfaceQueries {
         |   AS DOUBLE) AS "O"
         |FROM lineitem
         |WHERE l_returnflag IS NOT NULL AND l_linestatus IS NOT NULL
-        |GROUP BY 1""".stripMargin,
-    "q_value_counts" ->
+        |GROUP BY 1""".stripMargin)),
+    QuerySpec("q_value_counts", qValueCounts, Some(
       """SELECT l_returnflag, l_linestatus, cnt,
         | row_number() OVER (ORDER BY cnt DESC, l_returnflag, l_linestatus)
         |   AS rk
         |FROM (SELECT l_returnflag, l_linestatus, count(*) AS cnt
-        |      FROM lineitem GROUP BY 1, 2)""".stripMargin,
-    "q_shift_lag" ->
+        |      FROM lineitem GROUP BY 1, 2)""".stripMargin)),
+    QuerySpec("q_shift_lag", qShiftLag, Some(
       """SELECT o_orderkey, o_orderstatus,
         | lag(o_totalprice) OVER (PARTITION BY o_orderstatus
         |   ORDER BY o_orderkey) AS prev_price
-        |FROM orders""".stripMargin,
-    "q_ffill" ->
+        |FROM orders""".stripMargin)),
+    QuerySpec("q_ffill", qFfill, Some(
       """SELECT o_orderkey, o_orderstatus,
         | last_value(p IGNORE NULLS) OVER (PARTITION BY o_orderstatus
         |   ORDER BY o_orderkey
@@ -1345,12 +1282,12 @@ object SurfaceQueries {
         |FROM (SELECT o_orderkey, o_orderstatus,
         |        CASE WHEN o_orderkey % 7 < 2 THEN NULL
         |             ELSE o_totalprice END AS p
-        |      FROM orders)""".stripMargin,
-    "q_zip_nests" ->
+        |      FROM orders)""".stripMargin)),
+    QuerySpec("q_zip_nests", qZipNests, Some(
       """SELECT l_orderkey AS o_orderkey,
         | round(sum(l_quantity * l_extendedprice) + 1e-9, 2) AS dot
-        |FROM lineitem GROUP BY 1""".stripMargin,
-    "q_take" ->
+        |FROM lineitem GROUP BY 1""".stripMargin)),
+    QuerySpec("q_take", qTake, Some(
       """WITH posed AS (
         |  SELECT o_orderkey, o_totalprice,
         |    row_number() OVER (ORDER BY o_orderkey) - 1 AS pos
@@ -1361,8 +1298,8 @@ object SurfaceQueries {
         |FROM idx CROSS JOIN n
         |JOIN posed p
         |  ON p.pos = CASE WHEN idx.i < 0 THEN idx.i + n.c ELSE idx.i END"""
-        .stripMargin,
-    "q_describe_approx" -> {
+        .stripMargin), Parity),
+    QuerySpec("q_describe_approx", qDescribeApprox, Some {
       // exact stats value-for-value; percentile rows are in-query
       // bound-checks that emit literal 1.0 when the sketch is inside the
       // exact p±0.005 envelope (see qDescribeApprox) — the oracle asserts
@@ -1382,50 +1319,50 @@ object SurfaceQueries {
         "(SELECT CAST(count(*) AS DOUBLE) AS n FROM lineitem GROUP BY l_orderkey)",
         "n", "n_items") + " UNION ALL " +
       statsOver("lineitem", "l_quantity", "items.l_quantity")
-    },
-    "q_pack_seq" ->
+    }),
+    QuerySpec("q_pack_seq", qPackSeq, Some(
       """SELECT CAST(key AS BIGINT) AS key, CAST(n AS BIGINT) AS n,
         | CAST(sum_y AS DOUBLE) AS sum_y
         |FROM (VALUES (1, 2, 4.0), (2, NULL, NULL), (3, 1, 0.5))
-        |  t(key, n, sum_y)""".stripMargin,
-    "q_view_fields" ->
+        |  t(key, n, sum_y)""".stripMargin)),
+    QuerySpec("q_view_fields", qViewFields, Some(
       """SELECT l_returnflag, count(*) AS n,
         | round(sum(l_quantity), 2) AS sum_qty
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "q_schema_cols" ->
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin)),
+    QuerySpec("q_schema_cols", qSchemaCols, Some(
       """SELECT kind, name FROM (VALUES
         | ('base', 'o_orderkey'), ('base', 'o_totalprice'),
         | ('nested', 'items'),
         | ('sub', 'l_quantity'), ('sub', 'l_returnflag'),
         | ('all', 'o_orderkey'), ('all', 'o_totalprice'),
         | ('all', 'items.l_quantity'), ('all', 'items.l_returnflag'))
-        | t(kind, name)""".stripMargin,
-    "q_set_list_column" ->
+        | t(kind, name)""".stripMargin)),
+    QuerySpec("q_set_list_column", qSetListColumn, Some(
       """SELECT l_orderkey AS orderkey,
         | round(sum(l_quantity), 2) AS sum_qty,
         | round(sum(l_quantity * 2), 2) AS sum_qty2
-        |FROM lineitem GROUP BY l_orderkey""".stripMargin,
-    "q_scatter_fill" ->
+        |FROM lineitem GROUP BY l_orderkey""".stripMargin)),
+    QuerySpec("q_scatter_fill", qScatterFill, Some(
       """SELECT
         | (SELECT round(sum(CASE WHEN o_orderstatus = 'F' THEN 0.0
         |                        ELSE o_totalprice END), 2) FROM orders)
         |   AS sum_masked,
         | (SELECT round(CAST(count(*) AS DOUBLE), 2) FROM lineitem)
-        |   AS n_filled""".stripMargin,
-    "q_drop_fields" ->
+        |   AS n_filled""".stripMargin)),
+    QuerySpec("q_drop_fields", qDropFields, Some(
       """SELECT l_returnflag, count(*) AS n,
         | round(sum(l_quantity), 2) AS sum_qty
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "q_concat_take" ->
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin)),
+    QuerySpec("q_concat_take", qConcatTake, Some(
       """SELECT o_orderkey AS orderkey, round(o_totalprice, 2) AS totalprice
         |FROM (SELECT * FROM orders WHERE o_totalprice > 200000
         |      UNION ALL
         |      SELECT * FROM orders WHERE o_totalprice <= 1000)
-        |ORDER BY o_totalprice, o_orderkey LIMIT 15""".stripMargin,
-    "q_sort_base" ->
+        |ORDER BY o_totalprice, o_orderkey LIMIT 15""".stripMargin)),
+    QuerySpec("q_sort_base", qSortBase, Some(
       """SELECT o_orderkey AS orderkey, round(o_totalprice, 2) AS totalprice
-        |FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin,
-    "q_cell_dropna" ->
+        |FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin)),
+    QuerySpec("q_cell_dropna", qCellDropna, Some(
       """SELECT
         | (SELECT count(*) FROM orders) AS n_orders,
         | (SELECT count(*) FROM orders WHERE NOT EXISTS
@@ -1433,45 +1370,45 @@ object SurfaceQueries {
         |   AS n_childless,
         | (SELECT count(*) FROM orders WHERE EXISTS
         |   (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey))
-        |   AS n_after_drop""".stripMargin,
-    "q_apply" ->
+        |   AS n_after_drop""".stripMargin)),
+    QuerySpec("q_apply", qApply, Some(
       """SELECT l_orderkey AS orderkey,
         | count(*) FILTER (WHERE l_quantity > 25) AS n_big
-        |FROM lineitem GROUP BY l_orderkey""".stripMargin,
-    "q_generate" ->
+        |FROM lineitem GROUP BY l_orderkey""".stripMargin)),
+    QuerySpec("q_generate", qGenerate, Some(
       """SELECT CAST(200 AS BIGINT) AS n_rows, CAST(1000 AS BIGINT) AS n_elems,
         | CAST(0 AS BIGINT) AS n_bad_band,
-        | CAST(0 AS BIGINT) AS n_out_of_range""".stripMargin,
-    "q_partial_read" ->
+        | CAST(0 AS BIGINT) AS n_out_of_range""".stripMargin)),
+    QuerySpec("q_partial_read", qPartialRead, Some(
       """SELECT count(*) AS n, round(sum(l_quantity), 2) AS sum_qty
-        |FROM lineitem""".stripMargin,
-    "q_read_glob" ->
+        |FROM lineitem""".stripMargin)),
+    QuerySpec("q_read_glob", qReadGlob, Some(
       """SELECT count(*) AS n, round(sum(l_quantity), 2) AS sum_qty
-        |FROM lineitem""".stripMargin,
+        |FROM lineitem""".stripMargin)),
     // both partial-load paths reduce to token/chunk counts recomputed
     // from the source table; Spark split(' ') and DuckDB string_split
     // agree on empty tokens from consecutive delimiters
-    "q_mixed_read" ->
+    QuerySpec("q_mixed_read", qMixedRead, Some(
       """SELECT doc_id,
         | CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
         | CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok_flat,
         | lang
-        |FROM documents""".stripMargin,
-    "q_eval_cross" ->
+        |FROM documents""".stripMargin)),
+    QuerySpec("q_eval_cross", qEvalCross, Some(
       """SELECT l_orderkey AS orderkey,
         | round(sum(2 * l_extendedprice + l_discount * 100 + o_totalprice), 2)
         |   AS sum_d
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY l_orderkey""".stripMargin,
-    "q_map_rows_nested" ->
+        |GROUP BY l_orderkey""".stripMargin)),
+    QuerySpec("q_map_rows_nested", qMapRowsNested, Some(
       """SELECT l_orderkey AS orderkey,
         | round(sum(l_quantity * 2), 2) AS sum_q2,
         | round(sum(l_quantity - mn), 2) AS sum_r
         |FROM (SELECT l_orderkey, l_quantity,
         |        min(l_quantity) OVER (PARTITION BY l_orderkey) AS mn
         |      FROM lineitem)
-        |GROUP BY l_orderkey""".stripMargin,
-    "q_describe_pct" -> {
+        |GROUP BY l_orderkey""".stripMargin)),
+    QuerySpec("q_describe_pct", qDescribePct, Some {
       def statsOver(src: String, c: String, outName: String) = Seq(
         s"SELECT '$outName' AS \"column\", 'count' AS stat, " +
           s"round(CAST(count($c) AS DOUBLE) + 1e-9, 4) AS value FROM $src",
@@ -1488,8 +1425,8 @@ object SurfaceQueries {
         "(SELECT CAST(count(*) AS DOUBLE) AS n FROM lineitem GROUP BY l_orderkey)",
         "n", "n_items") + " UNION ALL " +
       statsOver("lineitem", "l_quantity", "items.l_quantity")
-    },
-    "q_describe_incl" -> {
+    }),
+    QuerySpec("q_describe_incl", qDescribeIncl, Some {
       def statsOver(src: String, c: String, outName: String) = Seq(
         s"SELECT '$outName' AS \"column\", 'count' AS stat, " +
           s"round(CAST(count($c) AS DOUBLE) + 1e-9, 4) AS value FROM $src",
@@ -1505,20 +1442,20 @@ object SurfaceQueries {
         "(SELECT CAST(count(*) AS DOUBLE) AS n FROM lineitem GROUP BY l_orderkey)",
         "n", "n_items") + " UNION ALL " +
       statsOver("lineitem", "l_quantity", "items.l_quantity")
-    },
-    "q_sort_napos" ->
+    }),
+    QuerySpec("q_sort_napos", qSortNapos, Some(
       """SELECT o_orderkey,
         |  round(CASE WHEN o_orderkey % 7 = 0 THEN NULL
         |        ELSE o_totalprice END, 2) AS np
         |FROM orders
         |ORDER BY (CASE WHEN o_orderkey % 7 = 0 THEN NULL
         |          ELSE o_totalprice END) ASC NULLS LAST, o_orderkey
-        |LIMIT 10""".stripMargin,
-    "q_set_flat_from" ->
+        |LIMIT 10""".stripMargin)),
+    QuerySpec("q_set_flat_from", qSetFlatFrom, Some(
       """SELECT l_orderkey AS o_orderkey, count(*) AS n,
         |  round(2 * sum(l_quantity) + 1e-9, 2) AS sum_q2
-        |FROM lineitem GROUP BY 1""".stripMargin,
-    "q_describe_str" ->
+        |FROM lineitem GROUP BY 1""".stripMargin)),
+    QuerySpec("q_describe_str", qDescribeStr, Some(
       """WITH base AS (
         |  SELECT o_orderstatus AS value FROM orders
         |  WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)),
@@ -1538,8 +1475,8 @@ object SurfaceQueries {
         |FROM (SELECT "column", CAST(sum(cnt) AS BIGINT) AS cnt,
         |        count(*) AS n_unique
         |      FROM counts GROUP BY 1) c
-        |JOIN ranked r ON r."column" = c."column" AND r.rn = 1""".stripMargin,
-    "q_min_max_flags" ->
+        |JOIN ranked r ON r."column" = c."column" AND r.rn = 1""".stripMargin)),
+    QuerySpec("q_min_max_flags", qMinMaxFlags, Some(
       """SELECT
         | (SELECT min(o_orderpriority) FROM orders WHERE EXISTS
         |   (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey))
@@ -1548,16 +1485,16 @@ object SurfaceQueries {
         | (SELECT min(l_returnflag) FROM lineitem) AS min_flag,
         | (SELECT max(o_orderkey) FROM orders WHERE EXISTS
         |   (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey))
-        |   AS max_key""".stripMargin,
-    "q_dropna_opts" ->
+        |   AS max_key""".stripMargin)),
+    QuerySpec("q_dropna_opts", qDropnaOpts, Some(
       """SELECT
         | (SELECT count(*) FROM lineitem
         |   WHERE l_discount >= 0.03 AND l_quantity <= 40) AS n_any,
         | (SELECT count(*) FROM lineitem
         |   WHERE NOT (l_discount < 0.03 AND l_quantity > 40)) AS n_all,
         | (SELECT count(*) FROM lineitem
-        |   WHERE NOT (l_discount < 0.03 AND l_quantity > 40)) AS n_thresh1""".stripMargin,
-    "q_session_window" ->
+        |   WHERE NOT (l_discount < 0.03 AND l_quantity > 40)) AS n_thresh1""".stripMargin)),
+    QuerySpec("q_session_window", qSessionWindow, Some(
       """WITH e AS (SELECT user_id, epoch_ms(ts) AS ms FROM events),
         |m AS (SELECT user_id, ms,
         |        CASE WHEN prev IS NULL OR ms - prev > 1800000 THEN 1 ELSE 0
@@ -1571,14 +1508,14 @@ object SurfaceQueries {
         |         FROM m)
         |SELECT user_id, min(ms) AS start_ms,
         |  max(ms) + 1800000 AS end_ms, count(*) AS n_events
-        |FROM sess GROUP BY user_id, sid""".stripMargin,
-    "q_eval_reduce" ->
+        |FROM sess GROUP BY user_id, sid""".stripMargin)),
+    QuerySpec("q_eval_reduce", qEvalReduce, Some(
       """SELECT l_orderkey AS orderkey,
         | round(quantile_cont(l_quantity, 0.5) + 1e-9, 4) AS med,
         | round(avg(l_quantity) + 1e-9, 4) AS mn,
         | round(stddev_samp(l_quantity) + 1e-9, 4) AS sd
-        |FROM lineitem GROUP BY l_orderkey""".stripMargin,
-    "q_flagship" ->
+        |FROM lineitem GROUP BY l_orderkey""".stripMargin)),
+    QuerySpec("q_flagship", qFlagship, Some(
       """SELECT o_orderkey AS orderkey,
         | round(o_totalprice, 2) AS totalprice,
         | count(*) FILTER (WHERE l_returnflag = 'R') AS n_r,
@@ -1588,6 +1525,6 @@ object SurfaceQueries {
         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
         |WHERE l_quantity > 10
         |GROUP BY o_orderkey, o_totalprice
-        |HAVING count(*) FILTER (WHERE l_returnflag = 'R') > 0""".stripMargin,
+        |HAVING count(*) FILTER (WHERE l_returnflag = 'R') > 0""".stripMargin)),
   )
 }

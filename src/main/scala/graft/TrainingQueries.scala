@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, Similarity, Multimodal, Sampling, Chunking}
-import graft.sources.NestedParquet
 
 /** Training-data pipeline operators over `documents` / `embeddings`:
   * dedup (exact, minhash-LSH, simhash, n-gram jaccard, embedding cosine),
@@ -19,15 +18,13 @@ import graft.sources.NestedParquet
   * Engine-specific hashing (xxhash64) appears only in rows-only queries.
   */
 object TrainingQueries {
-  type Q = (SparkSession, String) => DataFrame
+  import Queries.{Q, rd, roundSafe}
+  import QuerySpec.{BenchSkip, Headline, Parity}
 
   private def docs(s: SparkSession, dir: String): DataFrame =
-    NestedParquet.readParquet(s, s"$dir/documents.parquet")
+    rd(s, dir, "documents")
   private def embs(s: SparkSession, dir: String): DataFrame =
-    NestedParquet.readParquet(s, s"$dir/embeddings.parquet")
-
-  private def roundSafe(c: org.apache.spark.sql.Column, p: Int) =
-    round(c + lit(1e-9), p)
+    rd(s, dir, "embeddings")
 
   // ---------------------------------------------------------------------------
   // Dedup family
@@ -172,19 +169,6 @@ object TrainingQueries {
     d.where(col("doc_id") < PlantMaxId)
       .withColumn("doc_id", col("doc_id") + lit(PlantBase))
 
-  /** Session-scoped memo for the planted-truth scalars: the check is a
-    * DETERMINISTIC function of a static input directory, so the planted
-    * run (a second full pipeline pass over corpus+copies) executes once
-    * per (check, dir) per session; every later build of the same query —
-    * bench passes re-build each query per rep — reuses the scalar and
-    * pays only the production pipeline. The scalar still rides every
-    * result row, and the first build per session computes it for real
-    * (bounded cache, unpersisted after the 1-row collect). */
-  private val plantedMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
-  private def memoScalar(key: String)(compute: => Double): Double =
-    plantedMemo.computeIfAbsent(key, _ => compute)
-
   /** Production MinHash+LSH candidate pairs (xxhash64; rows-only check
     * + planted-truth recall column). 4 bands × 4 rows: ~90% recall at
     * jaccard 0.8, ~0.1% false-candidate rate at jaccard 0.2 — tuned for
@@ -199,7 +183,7 @@ object TrainingQueries {
       Dedup.lshCandidatePairs(withSig, "doc_id", "sig",
         numHashes = 16, rowsPerBand = 4)
     }
-    withPlantedRecall(d, s"minhash|$dir", pairsOf)
+    withPlantedRecall(d, pairsOf)
   }
 
   /** Un-planted pairs + the `planted_recall` scalar from a SEPARATE
@@ -214,10 +198,11 @@ object TrainingQueries {
     * to the same bucket-min (a common neighbor). The planted run's SMALL
     * pair list (~40k rows at sf0.1) is cached only while the recall
     * scalar materializes (one 1-row collect), then unpersisted — no
-    * cached RDD outlives the query build. */
-  private def withPlantedRecall(d: DataFrame, memoKey: String,
+    * cached RDD outlives the query build. Every build runs the planted
+    * pass eagerly, so a timed build pays for the check. */
+  private def withPlantedRecall(d: DataFrame,
                                 pairsOf: DataFrame => DataFrame): DataFrame = {
-    def computeRecall: Double = {
+    val recall: Double = {
       val pairs = pairsOf(d.unionByName(planted(d))).cache()
       try {
         val sym = pairs.select(col("a"), col("b"))
@@ -238,7 +223,6 @@ object TrainingQueries {
           .head.getDouble(0)
       } finally pairs.unpersist()
     }
-    val recall = memoScalar(memoKey)(computeRecall)
     pairsOf(d).withColumn("planted_recall", lit(recall))
   }
 
@@ -256,7 +240,7 @@ object TrainingQueries {
       Dedup.simhashCandidatePairs(sigs, "doc_id", "sig",
         numBands = 4, bitsPerBand = 16, maxHamming = 3)
     }
-    withPlantedRecall(d, s"simhash|$dir", pairsOf)
+    withPlantedRecall(d, pairsOf)
   }
 
   /** Oracle-exact twin of q_minhash_pairs: the SAME pairing core
@@ -333,10 +317,11 @@ object TrainingQueries {
     * unpersisted, and the shipped rows come from the plain un-planted
     * pipeline (byte-identical to q_dedup_pipeline_exact's subject;
     * previously a planted copy's chain edge could merge an extra doc
-    * into a component). `planted_removed` = 1.0 on pass. */
+    * into a component). `planted_removed` = 1.0 on pass. Every build
+    * runs the planted pass eagerly, so a timed build pays for the check. */
   val qDedupPipeline: Q = (s, dir) => {
     val d = docs(s, dir)
-    val removed: Double = memoScalar(s"dedup_pipeline|$dir") {
+    val removed: Double = {
       val plantedKept = Dedup.dedupNear(d.unionByName(planted(d)),
         "doc_id", "text", threshold = 0.8).cache()
       try {
@@ -973,61 +958,8 @@ object TrainingQueries {
   }
 
   // ---------------------------------------------------------------------------
-  // registry + oracles
+  // registry: one QuerySpec per query, with its DuckDB oracle SQL
   // ---------------------------------------------------------------------------
-
-  val all: Map[String, Q] = Map(
-    "q_dedup_exact" -> qDedupExact,
-    "q_dedup_pipeline" -> qDedupPipeline,
-    "q_dedup_pipeline_exact" -> qDedupPipelineExact,
-    "q_minhash_rank" -> qMinhashRank,
-    "q_minhash_pairs" -> qMinhashPairs,
-    "q_minhash_pairs_exact" -> qMinhashPairsExact,
-    "q_simhash_pairs" -> qSimhashPairs,
-    "q_simhash_pairs_exact" -> qSimhashPairsExact,
-    "q_jaccard_pairs" -> qJaccardPairs,
-    "q_contamination" -> qContamination,
-    "q_contamination_bloom" -> qContaminationBloom,
-    "q_curate" -> qCurate,
-    "q_embed_cosine_pairs" -> qEmbedCosinePairs,
-    "q_ann_brute" -> qAnnBrute,
-    "q_ann_lsh_buckets" -> qAnnLshBuckets,
-    "q_ann_lsh_topk" -> qAnnLshTopK,
-    "q_ann_ivf" -> qAnnIvf,
-    "q_pq_topk" -> qPqTopK,
-    "q_token_stats" -> qTokenStats,
-    "q_quality" -> qQuality,
-    "q_lang_id" -> qLangId,
-    "q_fingerprint" -> qFingerprint,
-    "q_quality_signals" -> qQualitySignals,
-    "q_multimodal_meta" -> qMultimodalMeta,
-    "q_bpe_tokens" -> qBpeTokens,
-    "q_split_assign" -> qSplitAssign,
-    "q_stratified" -> qStratified,
-    "q_temperature_mix" -> qTemperatureMix,
-    "q_per_key_cap" -> qPerKeyCap,
-    "q_global_shuffle" -> qGlobalShuffle,
-    "q_dedup_keep_best" -> qDedupKeepBest,
-    "q_embed_norm" -> qEmbedNorm,
-    "q_para_dedup" -> qParaDedup,
-    "q_para_dedup_doc" -> qParaDedupDoc,
-    "q_seq_pack" -> qSeqPack,
-    "q_chunk_windows" -> qChunkWindows,
-    "q_semantic_dedup" -> qSemanticDedup,
-    "q_unigram_lp" -> qUnigramLp,
-    "q_vocab_score" -> qVocabScore,
-    "q_dedup_incremental" -> qDedupIncremental,
-    "q_curate_full" -> qCurateFull,
-    "q_ngram_repetition" -> qNgramRepetition,
-    "q_dup_spans" -> qDupSpans,
-    "q_media_dedup" -> qMediaDedup,
-    "q_media_decode" -> qMediaDecode,
-    "q_image_resize" -> qImageResize,
-    "q_audio_decode" -> qAudioDecode,
-    "q_video_decode" -> qVideoDecode,
-  )
-
-  // ---- oracle SQL (DuckDB) --------------------------------------------------
 
   /** Shared by q_contamination and q_contamination_bloom (the bloom path is
     * exact-confirmed, so both queries must hash-match ONE truth). Distinct
@@ -1132,11 +1064,11 @@ object TrainingQueries {
     s"""sqrt(list_sum(list_transform($v,
        | x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q_dedup_exact" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_dedup_exact", qDedupExact, Some(
       """SELECT min(doc_id) AS keep_id, count(*) AS n_copies
-        |FROM documents GROUP BY lower(trim(text))""".stripMargin,
-    "q_minhash_rank" -> {
+        |FROM documents GROUP BY lower(trim(text))""".stripMargin), Headline),
+    QuerySpec("q_minhash_rank", qMinhashRank, Some {
       val hs = Seq((3, 1), (5, 2), (7, 3), (11, 4), (13, 5), (17, 6))
       val sigExprs = hs.zipWithIndex.map { case ((a, b), i) =>
         s"min((sid * $a + $b) % 100003) AS sig$i" }.mkString(", ")
@@ -1153,8 +1085,8 @@ object TrainingQueries {
          |  SELECT doc_id, $sigExprs
          |  FROM sh JOIN ranks USING (sh) GROUP BY doc_id)
          |$unions""".stripMargin
-    },
-    "q_jaccard_pairs" ->
+    }, Headline, Parity),
+    QuerySpec("q_jaccard_pairs", qJaccardPairs, Some(
       s"""WITH t AS (SELECT doc_id, ${duckShingles(3)} AS sh
          |           FROM documents WHERE doc_id < 40)
          |SELECT a.doc_id AS a, b.doc_id AS b,
@@ -1164,16 +1096,16 @@ object TrainingQueries {
          |  round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
          |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
          |    + 1e-9, 4) AS jac
-         |FROM t a JOIN t b ON a.doc_id < b.doc_id""".stripMargin,
-    "q_embed_cosine_pairs" ->
+         |FROM t a JOIN t b ON a.doc_id < b.doc_id""".stripMargin), Headline),
+    QuerySpec("q_embed_cosine_pairs", qEmbedCosinePairs, Some(
       s"""SELECT a.a, b.b,
          |  round($dotSql / (${normSql("a.ea")} * ${normSql("b.eb")}), 6) AS sim
          |FROM (SELECT vec_id AS a, embedding AS ea FROM embeddings
          |      WHERE vec_id < 100) a
          |JOIN (SELECT vec_id AS b, embedding AS eb FROM embeddings
          |      WHERE vec_id < 100) b ON a.a < b.b
-         |WHERE $dotSql / (${normSql("a.ea")} * ${normSql("b.eb")}) > 0.2""".stripMargin,
-    "q_ann_brute" ->
+         |WHERE $dotSql / (${normSql("a.ea")} * ${normSql("b.eb")}) > 0.2""".stripMargin), Headline),
+    QuerySpec("q_ann_brute", qAnnBrute, Some(
       s"""WITH scored AS (
          |  SELECT a.a AS query_id, b.b AS neighbor_id,
          |    $dotSql / (${normSql("a.ea")} * ${normSql("b.eb")}) AS sim
@@ -1187,11 +1119,11 @@ object TrainingQueries {
          |      ORDER BY sim DESC, neighbor_id) AS BIGINT) AS rank
          |  FROM scored)
          |SELECT query_id, rank, neighbor_id, round(sim, 6) AS sim
-         |FROM ranked WHERE rank <= 3""".stripMargin,
-    "q_ann_lsh_buckets" ->
+         |FROM ranked WHERE rank <= 3""".stripMargin), Headline),
+    QuerySpec("q_ann_lsh_buckets", qAnnLshBuckets, Some(
       s"""SELECT vec_id, CAST(${bucketSql(8, 64)} AS BIGINT) AS bucket
-         |FROM embeddings""".stripMargin,
-    "q_token_stats" ->
+         |FROM embeddings""".stripMargin), Headline),
+    QuerySpec("q_token_stats", qTokenStats, Some(
       """SELECT doc_id,
         | CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT)
         |   AS n_tokens,
@@ -1201,8 +1133,8 @@ object TrainingQueries {
         |     regexp_split_to_array(trim(text), '\s+'), w -> length(w)))
         |   AS DOUBLE) / len(regexp_split_to_array(trim(text), '\s+'))
         |   + 1e-9, 4) AS mean_len
-        |FROM documents""".stripMargin,
-    "q_quality" -> {
+        |FROM documents""".stripMargin), Headline),
+    QuerySpec("q_quality", qQuality, Some {
       val toks = """regexp_split_to_array(trim(text), '\s+')"""
       val nTok = s"len($toks)"
       val nDist = s"len(list_distinct($toks))"
@@ -1217,13 +1149,13 @@ object TrainingQueries {
          |   (CASE WHEN $meanLen BETWEEN 3.0 AND 8.0 THEN 0.2 ELSE 0.0 END)
          |   + 1e-9, 4) AS quality
          |FROM documents""".stripMargin
-    },
-    "q_lang_id" ->
+    }, Headline),
+    QuerySpec("q_lang_id", qLangId, Some(
       s"""SELECT doc_id, $predLangSql AS pred_lang,
          | CAST(${langScoreSql("en")} AS BIGINT) AS en_score,
          | CAST(${langScoreSql("de")} AS BIGINT) AS de_score
-         |FROM documents""".stripMargin,
-    "q_curate" -> {
+         |FROM documents""".stripMargin), Headline),
+    QuerySpec("q_curate", qCurate, Some {
       val toks = """regexp_split_to_array(trim(text), '\s+')"""
       val nTok = s"len($toks)"
       val nDist = s"len(list_distinct($toks))"
@@ -1263,11 +1195,11 @@ object TrainingQueries {
          |            ELSE 'test' END AS split,
          |  lang, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS sum_chars
          |FROM clean GROUP BY 1, 2""".stripMargin
-    },
-    "q_contamination" -> contaminationOracle,
+    }),
+    QuerySpec("q_contamination", qContamination, Some(contaminationOracle)),
     // the bloom prefilter is exact-confirmed, so the SAME oracle replays it
-    "q_contamination_bloom" -> contaminationOracle,
-    "q_quality_signals" ->
+    QuerySpec("q_contamination_bloom", qContaminationBloom, Some(contaminationOracle)),
+    QuerySpec("q_quality_signals", qQualitySignals, Some(
       s"""WITH e AS (
          |  SELECT doc_id,
          |    replace(replace(text, ' join ', chr(10) || 'line one' ||
@@ -1309,14 +1241,14 @@ object TrainingQueries {
          |  CAST(len(regexp_extract_all(text,
          |    '[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}'))
          |    AS BIGINT) AS n_ip
-         |FROM t""".stripMargin,
-    "q_fingerprint" ->
+         |FROM t""".stripMargin)),
+    QuerySpec("q_fingerprint", qFingerprint, Some(
       """SELECT doc_id,
         | list_reduce(list_prepend(CAST(0 AS BIGINT),
         |     [CAST(unicode(c) AS BIGINT) for c in str_split_regex(text, '')]),
         |   (acc, c) -> (acc * 31 + c) % 1000000007) AS fp
-        |FROM documents""".stripMargin,
-    "q_multimodal_meta" ->
+        |FROM documents""".stripMargin), Headline),
+    QuerySpec("q_multimodal_meta", qMultimodalMeta, Some(
       """SELECT doc_id AS media_id,
         | CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
         | CAST(320 + octet_length(encode(text)) % 321 AS BIGINT) AS width,
@@ -1334,8 +1266,8 @@ object TrainingQueries {
         |   AS BIGINT) AS rh,
         | CAST((1 + octet_length(encode(text)) % 30 + 2) // 3 AS BIGINT)
         |   AS n_sampled
-        |FROM documents""".stripMargin,
-    "q_ann_lsh_topk" -> {
+        |FROM documents""".stripMargin), Headline),
+    QuerySpec("q_ann_lsh_topk", qAnnLshTopK, Some {
       val sim = s"${dotSqlOf("q.emb", "c.emb")} / " +
         s"(${normSql("q.emb")} * ${normSql("c.emb")})"
       s"""WITH b AS (
@@ -1353,11 +1285,14 @@ object TrainingQueries {
          |  FROM scored)
          |SELECT query_id, rank, neighbor_id, round(sim, 6) AS sim
          |FROM ranked WHERE rank <= 3""".stripMargin
-    },
-    // q_minhash_pairs, q_simhash_pairs, q_dedup_pipeline: xxhash64-based →
-    // rows-only checks (engine hash not reproducible in the oracle); the
-    // pipeline SEMANTICS are value-hash-checked by q_dedup_pipeline_exact.
-    "q_pq_topk" -> {
+    }, Headline),
+    // xxhash64-based, so rows-only checks with no oracle SQL (the engine
+    // hash is not reproducible in DuckDB); the pipeline SEMANTICS are
+    // value-hash-checked by q_dedup_pipeline_exact.
+    QuerySpec("q_minhash_pairs", qMinhashPairs, None, Headline),
+    QuerySpec("q_simhash_pairs", qSimhashPairs, None, Headline),
+    QuerySpec("q_dedup_pipeline", qDedupPipeline, None, Headline),
+    QuerySpec("q_pq_topk", qPqTopK, Some {
       // Replays PQ end-to-end: 8 subspaces × 16 seed centroids from the
       // table (first 16 vectors' slices), exact-arithmetic encode argmin
       // (tie → min code), ADC score = Σ_j dot(q_slice_j, book_j[code_j])
@@ -1409,8 +1344,8 @@ object TrainingQueries {
          |  FROM scored)
          |SELECT query_id, rank, neighbor_id, round(score, 6) AS score
          |FROM ranked WHERE rank <= 3""".stripMargin
-    },
-    "q_minhash_pairs_exact" -> {
+    }),
+    QuerySpec("q_minhash_pairs_exact", qMinhashPairsExact, Some {
       // Replays qMinhashPairsExact end-to-end: rank-affine sigs (big
       // multipliers), 3 bands × 2 raw-value banding, then the
       // pairsFromBuckets emission rules — all-pairs for buckets ≤ 2
@@ -1449,8 +1384,8 @@ object TrainingQueries {
          |  SELECT doc_id AS a, nxt AS b FROM ann
          |  WHERE n > 2 AND nxt IS NOT NULL)
          |SELECT DISTINCT a, b FROM pairs WHERE a <> b""".stripMargin
-    },
-    "q_simhash_pairs_exact" -> {
+    }, Parity),
+    QuerySpec("q_simhash_pairs_exact", qSimhashPairsExact, Some {
       // Replays qSimhashPairsExact: 60-bit rank-affine simhash (per-bit
       // parity votes, majority sign, bits packed), 4 bands × 15-bit
       // div-mod banding, all-pairs for 2-member blocks, star + DUAL-ORDER
@@ -1512,8 +1447,8 @@ object TrainingQueries {
          |  FROM pairs
          |  WHERE bit_count(xor(siga, sigb)) <= 24 AND a <> b)
          |SELECT DISTINCT na AS a, nb AS b, hamming FROM norm""".stripMargin
-    },
-    "q_dedup_pipeline_exact" -> {
+    }, Parity, BenchSkip),
+    QuerySpec("q_dedup_pipeline_exact", qDedupPipelineExact, Some {
       val sigCols = rankHs.zipWithIndex.map { case ((a, b), i) =>
         s"min((sid * $a + $b) % 100003) AS sig$i" }.mkString(", ")
       val bandRows = (0 until 3).map(b =>
@@ -1556,8 +1491,8 @@ object TrainingQueries {
          |SELECT d.doc_id, d.n_chars FROM documents d
          |WHERE d.doc_id < 200 AND d.doc_id NOT IN
          |  (SELECT v FROM comp WHERE v <> component)""".stripMargin
-    },
-    "q_ann_ivf" -> {
+    }, Parity),
+    QuerySpec("q_ann_ivf", qAnnIvf, Some {
       // Replays the FULL IVF search: seed centroids from the table itself
       // (first 16 vectors by id — matching ivfIndex(iters=0)), corpus cell
       // assignment by exact-arithmetic argmin of −2·v·c + ‖c‖² (tie → min
@@ -1604,32 +1539,32 @@ object TrainingQueries {
          |  FROM scored)
          |SELECT query_id, rank, neighbor_id, round(sim, 6) AS sim
          |FROM ranked WHERE rank <= 3""".stripMargin
-    },
-    "q_bpe_tokens" ->
+    }, Headline),
+    QuerySpec("q_bpe_tokens", qBpeTokens, Some(
       """SELECT doc_id,
         | CAST(len(regexp_extract_all(text,
         |   '''(?:s|t|re|ve|m|ll|d)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+'))
         |   AS BIGINT) AS n_bpe,
         | CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT)
         |   AS n_ws
-        |FROM documents""".stripMargin,
-    "q_split_assign" ->
+        |FROM documents""".stripMargin)),
+    QuerySpec("q_split_assign", qSplitAssign, Some(
       """SELECT CASE WHEN (doc_id * 37 + 11) % 100 < 80 THEN 'train'
         |            WHEN (doc_id * 37 + 11) % 100 < 90 THEN 'val'
         |            ELSE 'test' END AS split,
         | count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM documents GROUP BY 1""".stripMargin,
-    "q_stratified" ->
+        |FROM documents GROUP BY 1""".stripMargin)),
+    QuerySpec("q_stratified", qStratified, Some(
       """SELECT lang, count(*) AS n,
         | CAST(sum(n_chars) AS BIGINT) AS sum_chars
         |FROM documents
         |WHERE (doc_id * 37 + 11) % 100 <
         |  CASE lang WHEN 'en' THEN 50.0 WHEN 'zh' THEN 20.0 ELSE 10.0 END
-        |GROUP BY lang""".stripMargin,
+        |GROUP BY lang""".stripMargin)),
     // rates replayed from the counts: qp = p^(α-1) with α=0.5; rarest
     // source divides by its own qp → exactly 1.0 in both engines; 6dp
     // half-up rounding (+1e-9) guards pow() ulp drift at bucket boundaries
-    "q_temperature_mix" ->
+    QuerySpec("q_temperature_mix", qTemperatureMix, Some(
       """WITH c AS (SELECT source, count(*) AS n FROM documents
         |           GROUP BY source),
         |q AS (SELECT source,
@@ -1642,33 +1577,33 @@ object TrainingQueries {
         |  CAST(sum(d.n_chars) AS BIGINT) AS sum_chars
         |FROM documents d JOIN r ON d.source = r.source
         |WHERE (d.doc_id * 37 + 11) % 100 < rate * 100
-        |GROUP BY d.source""".stripMargin,
-    "q_per_key_cap" ->
+        |GROUP BY d.source""".stripMargin)),
+    QuerySpec("q_per_key_cap", qPerKeyCap, Some(
       """SELECT source, count(*) AS n,
         | CAST(sum(n_chars) AS BIGINT) AS sum_chars
         |FROM (SELECT source, n_chars,
         |        row_number() OVER (PARTITION BY source
         |          ORDER BY n_chars DESC, doc_id) AS rn
         |      FROM documents)
-        |WHERE rn <= 15 GROUP BY source""".stripMargin,
+        |WHERE rn <= 15 GROUP BY source""".stripMargin)),
     // globalShuffle's portable md5 key replayed verbatim: DuckDB md5()
     // over 'doc_id:seed' produces the same lowercase hex as Spark's
-    "q_global_shuffle" ->
+    QuerySpec("q_global_shuffle", qGlobalShuffle, Some(
       """SELECT CAST(row_number() OVER (ORDER BY
         |         md5(CAST(doc_id AS VARCHAR) || ':7')) AS BIGINT) AS rank,
         |       doc_id
         |FROM documents
         |ORDER BY md5(CAST(doc_id AS VARCHAR) || ':7')
-        |LIMIT 15""".stripMargin,
-    "q_dedup_keep_best" ->
+        |LIMIT 15""".stripMargin)),
+    QuerySpec("q_dedup_keep_best", qDedupKeepBest, Some(
       """SELECT keep_id, n_copies
         |FROM (SELECT doc_id AS keep_id,
         |        row_number() OVER (PARTITION BY substr(text, 1, 40)
         |          ORDER BY n_chars DESC, doc_id) AS rn,
         |        count(*) OVER (PARTITION BY substr(text, 1, 40)) AS n_copies
         |      FROM documents)
-        |WHERE rn = 1""".stripMargin,
-    "q_embed_norm" -> {
+        |WHERE rn = 1""".stripMargin)),
+    QuerySpec("q_embed_norm", qEmbedNorm, Some {
       val nrm = normSql("embedding")
       val maxAbs =
         "list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE))))"
@@ -1679,8 +1614,8 @@ object TrainingQueries {
          | CAST(round(CAST(embedding[1] AS DOUBLE) * (127.0 / $maxAbs))
          |   AS INT) AS q1
          |FROM embeddings""".stripMargin
-    },
-    "q_para_dedup" ->
+    }),
+    QuerySpec("q_para_dedup", qParaDedup, Some(
       // eligibility (len(trim) >= 2) is a function of the paragraph string,
       // so each window partition is homogeneous and the CASE override for
       // ineligible paragraphs never interleaves with ranked ones
@@ -1707,8 +1642,8 @@ object TrainingQueries {
          |  coalesce(a.n_kept, 0) AS n_kept,
          |  len(str_split(e.text, chr(10))) - coalesce(a.n_kept, 0)
          |    AS n_dropped
-         |FROM e LEFT JOIN agg a ON e.doc_id = a.doc_id""".stripMargin,
-    "q_para_dedup_doc" ->
+         |FROM e LEFT JOIN agg a ON e.doc_id = a.doc_id""".stripMargin)),
+    QuerySpec("q_para_dedup_doc", qParaDedupDoc, Some(
       s"""WITH e AS (
          |  $paraEnrichSql),
          |sp AS (SELECT doc_id, str_split(text, chr(10)) AS ls FROM e),
@@ -1723,8 +1658,8 @@ object TrainingQueries {
          |  FROM occ)
          |SELECT doc_id,
          |  string_agg(p, chr(10) ORDER BY pos) AS clean_text
-         |FROM ranked WHERE rn = 1 GROUP BY doc_id""".stripMargin,
-    "q_seq_pack" ->
+         |FROM ranked WHERE rn = 1 GROUP BY doc_id""".stripMargin)),
+    QuerySpec("q_seq_pack", qSeqPack, Some(
       s"""WITH t AS (
          |  SELECT doc_id, doc_id % 8 AS grp,
          |    CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)
@@ -1745,13 +1680,13 @@ object TrainingQueries {
          |  greatest(chunk_id * 512, strt) - strt AS off_start,
          |  least((chunk_id + 1) * 512, strt + n_tokens)
          |    - greatest(chunk_id * 512, strt) AS off_len
-         |FROM x""".stripMargin,
-    "q_chunk_windows" ->
+         |FROM x""".stripMargin)),
+    QuerySpec("q_chunk_windows", qChunkWindows, Some(
       s"""WITH ${duckSpanCtes(window = 64, stride = 48)}
          |SELECT doc_id, tok_start // 48 AS win_id, tok_start, tok_len,
          |  chunk
-         |FROM sp""".stripMargin,
-    "q_semantic_dedup" -> {
+         |FROM sp""".stripMargin)),
+    QuerySpec("q_semantic_dedup", qSemanticDedup, Some {
       def cosOf(a: String, b: String) =
         s"${dotSqlOf(a, b)} / (${normSql(a)} * ${normSql(b)})"
       s"""WITH RECURSIVE base AS (
@@ -1811,8 +1746,8 @@ object TrainingQueries {
          |SELECT b.vec_id, CAST(b.label AS BIGINT) AS label FROM base b
          |WHERE b.vec_id NOT IN
          |  (SELECT v FROM comp WHERE v <> component)""".stripMargin
-    },
-    "q_unigram_lp" ->
+    }),
+    QuerySpec("q_unigram_lp", qUnigramLp, Some(
       s"""WITH toks AS (
          |  SELECT doc_id,
          |    unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
@@ -1822,10 +1757,10 @@ object TrainingQueries {
          |SELECT doc_id, count(*) AS n_toks,
          |  round(avg(ln(CAST(c AS DOUBLE))) - ln(T) + 1e-9, 4) AS avg_logp
          |FROM toks JOIN vocab USING (tok), tot
-         |GROUP BY doc_id, T""".stripMargin,
+         |GROUP BY doc_id, T""".stripMargin)),
     // replays trainVocab (top-50 by count desc, token asc) AND the
     // broadcast scoring with the 1/(T+1) OOV floor
-    "q_vocab_score" ->
+    QuerySpec("q_vocab_score", qVocabScore, Some(
       s"""WITH toks AS (
          |  SELECT doc_id,
          |    unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
@@ -1837,8 +1772,8 @@ object TrainingQueries {
          |  round(avg(ln(coalesce(CAST(v.c AS DOUBLE) / T, 1.0 / (T + 1.0))))
          |    + 1e-9, 4) AS avg_logp
          |FROM toks LEFT JOIN vocab v USING (tok), tot
-         |GROUP BY doc_id, T""".stripMargin,
-    "q_dedup_incremental" -> {
+         |GROUP BY doc_id, T""".stripMargin)),
+    QuerySpec("q_dedup_incremental", qDedupIncremental, Some {
       val sigCols = rankHsBig.zipWithIndex.map { case ((a, b), i) =>
         s"min((sid * $a + $b) % 100003) AS sig$i" }.mkString(", ")
       val bandRows = (0 until 3).map(b =>
@@ -1874,8 +1809,8 @@ object TrainingQueries {
       // length >= 5: a doc with no 5-char shingle never gets a signature
       // on the Spark side (rankSigsWide's explode drops it), so the batch
       // frame cannot contain it — the oracle must exclude it too
-    },
-    "q_curate_full" ->
+    }),
+    QuerySpec("q_curate_full", qCurateFull, Some(
       s"""WITH e AS (
          |  $paraEnrichSql),
          |sp AS (SELECT doc_id, str_split(text, chr(10)) AS ls FROM e),
@@ -1919,52 +1854,52 @@ object TrainingQueries {
          |  count(*) AS n_doc_spans,
          |  CAST(sum(least((chunk_id + 1) * 256, strt + n_tokens)
          |    - greatest(chunk_id * 256, strt)) AS BIGINT) AS n_tokens
-         |FROM x GROUP BY split""".stripMargin,
-    "q_media_dedup" ->
+         |FROM x GROUP BY split""".stripMargin)),
+    QuerySpec("q_media_dedup", qMediaDedup, Some(
       """SELECT min(doc_id) AS keep_id, count(*) AS n_copies
         |FROM (SELECT doc_id,
         |        encode(substr(text, 1, 40)) AS payload
         |      FROM documents)
-        |GROUP BY payload""".stripMargin,
+        |GROUP BY payload""".stripMargin)),
     // Predicts the ImageIO encode→decode round trip from the generation
     // arithmetic: dims/format survive only if both codec passes really ran;
     // the JDK PNG/GIF/JPEG writers emit 3-band RGB for TYPE_INT_RGB input.
-    "q_media_decode" ->
+    QuerySpec("q_media_decode", qMediaDecode, Some(
       """SELECT doc_id AS media_id,
         |  16 + doc_id % 32 AS width,
         |  12 + doc_id % 24 AS height,
         |  CAST(3 AS BIGINT) AS channels,
         |  CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'gif'
         |    ELSE 'jpeg' END AS format
-        |FROM documents WHERE doc_id < 300""".stripMargin,
+        |FROM documents WHERE doc_id < 300""".stripMargin)),
     // the fixed thumbnail contract: every input really decoded, scaled,
     // and re-encoded as 24×18 png (failures would emit -1/'unknown')
-    "q_image_resize" ->
+    QuerySpec("q_image_resize", qImageResize, Some(
       """SELECT doc_id AS media_id, CAST(24 AS BIGINT) AS width,
         |  CAST(18 AS BIGINT) AS height, 'png' AS format
-        |FROM documents WHERE doc_id < 200""".stripMargin,
+        |FROM documents WHERE doc_id < 200""".stripMargin)),
     // Predicts the WAV encode→decode round trip: sample rate / channels /
     // bits / frame count survive only if the RIFF header was really
     // written by AudioSystem.write and really parsed by getAudioFileFormat.
-    "q_audio_decode" ->
+    QuerySpec("q_audio_decode", qAudioDecode, Some(
       """SELECT doc_id AS media_id,
         |  CASE doc_id % 4 WHEN 0 THEN 8000 WHEN 1 THEN 11025
         |    WHEN 2 THEN 16000 ELSE 22050 END AS sample_rate,
         |  1 + doc_id % 2 AS channels,
         |  CAST(16 AS BIGINT) AS bits,
         |  50 + doc_id % 100 AS n_frames
-        |FROM documents WHERE doc_id < 300""".stripMargin,
+        |FROM documents WHERE doc_id < 300""".stripMargin)),
     // Predicts the MP4 box-tree round trip: dims survive 16.16 fixed-point
     // encode/decode, duration the ms→timescale→ms conversion (timescale
     // 1000 = exact), brand a raw 4-byte copy.
-    "q_video_decode" ->
+    QuerySpec("q_video_decode", qVideoDecode, Some(
       """SELECT doc_id AS media_id,
         |  160 + (doc_id % 33) * 4 AS width,
         |  120 + (doc_id % 25) * 4 AS height,
         |  1000 + (doc_id % 97) * 53 AS duration_ms,
         |  CASE WHEN doc_id % 2 = 0 THEN 'isom' ELSE 'mp42' END AS brand
-        |FROM documents WHERE doc_id < 300""".stripMargin,
-    "q_dup_spans" ->
+        |FROM documents WHERE doc_id < 300""".stripMargin)),
+    QuerySpec("q_dup_spans", qDupSpans, Some(
       s"""WITH ${duckSpanCtes(window = 8, stride = 8)},
          |ranked AS (
          |  SELECT *, row_number() OVER (PARTITION BY chunk
@@ -1973,8 +1908,8 @@ object TrainingQueries {
          |  FROM sp)
          |SELECT doc_id, tok_start, tok_len,
          |  (n_occ = 1 OR rn = 1) AS keep
-         |FROM ranked""".stripMargin,
-    "q_ngram_repetition" -> {
+         |FROM ranked""".stripMargin)),
+    QuerySpec("q_ngram_repetition", qNgramRepetition, Some {
       def gramAgg(n: Int, tag: String) =
         s"""g$tag AS (
            |  SELECT doc_id, unnest([array_to_string(ws[i:i+${n - 1}], ' ')
@@ -2011,6 +1946,6 @@ object TrainingQueries {
          |JOIN tot ON t.doc_id = tot.doc_id
          |LEFT JOIN a2 ON t.doc_id = a2.doc_id
          |LEFT JOIN a3 ON t.doc_id = a3.doc_id""".stripMargin
-    },
+    }),
   )
 }

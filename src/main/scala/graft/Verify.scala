@@ -1,28 +1,27 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.specs result → parquet, plus
+  * oracle_sql.json (every spec's oracle SQL) and queries.json (the names
+  * run), for the DuckDB compare in tools/check_correctness.py. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated query-name filter (dev iteration
-    // only — the driver always runs the full battery with 2 args)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    // optional 3rd arg: comma-separated query names to run (dev iteration;
+    // the full gate runs every query with 2 args)
+    val ran = args.lift(2).fold(SparkEntry.specs)(csv =>
+      SparkEntry.named(csv.split(",").toSeq: _*))
     val spark = GraftSession.create()
     new java.io.File(outDir).mkdirs()
-    val ran = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-    val failed = ran.flatMap { case (name, fn) =>
+    val failed = ran.flatMap { spec =>
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        spec.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/${spec.name}")
         None
       } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        Some(name)
+        System.err.println(s"[verify] ${spec.name} failed: ${e.getMessage}")
+        Some(spec.name)
       }
-    }.toSeq.sorted
+    }
     // A failed query writes NO output dir, which a naive output-dir scan
     // would silently not count — surface the tally loudly and persist the
     // full expected name list for the checker to diff against.
@@ -41,11 +40,12 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.specs
+      .flatMap(spec => spec.oracleSql.map(sql => s"${q(spec.name)}: ${q(sql)}"))
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     Files.writeString(Paths.get(s"$outDir/queries.json"),
-      ran.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
+      ran.map(spec => q(spec.name)).mkString("[", ",", "]"))
     spark.stop()
   }
 }

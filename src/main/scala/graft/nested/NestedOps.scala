@@ -1043,8 +1043,13 @@ object NestedOps {
     *    path.
     *
     * Scale shape: `indices` is a driver-side argument by contract (takes
-    * are small reorderings, not data-sized scans), so the index frame
-    * broadcast-joins against one pass of the input — no shuffle of df. */
+    * are small reorderings, not data-sized scans), so the index frame is
+    * small — but it is the PRESERVED side of the left outer join, and
+    * Spark builds a broadcast hash join only on the non-preserved side.
+    * The `broadcast(idx)` hint is therefore dropped (Spark logs it) and df
+    * is shuffled to the join. Swapping sides cannot help: the index frame
+    * stays the preserved side. Avoiding the shuffle needs an inner
+    * broadcast join with misses and -1 fills handled apart. */
   def takeRows(df: DataFrame, orderCol: String, indices: Seq[Long],
                allowFill: Boolean = false,
                fillRow: Map[String, Column] = Map.empty): DataFrame = {

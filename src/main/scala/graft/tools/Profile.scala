@@ -14,7 +14,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Where a registry query's time goes, one JSON line per query:
   * `runMain graft.tools.Profile <queryCsv|ALL> [sfDir] [reps]`
-  * (sfDir defaults to `SPARK_GRAFT_SF_DIR`, reps to 3).
+  * (sfDir defaults to `SPARK_GRAFT_SF_DIR`, reps to 3). Queries run in
+  * name order; an unknown name fails before any query runs.
   *
   * Each rep writes every output column to the `noop` sink, so nothing is
   * pruned to a key scan. The first (cold) run is timed apart from the
@@ -42,20 +43,21 @@ object Profile extends AdaptiveSparkPlanHelper {
 
   def main(args: Array[String]): Unit = {
     val usage = "usage: Profile <queryCsv|ALL> [sfDir] [reps]"
-    val names =
-      if (args.headOption.contains("ALL")) graft.SparkEntry.queries.keys.toSeq.sorted
-      else args.headOption.getOrElse(sys.error(usage)).split(",").toSeq
+    val specs =
+      if (args.headOption.contains("ALL")) graft.SparkEntry.specs
+      else graft.SparkEntry.named(
+        args.headOption.getOrElse(sys.error(usage)).split(",").toSeq: _*)
     val sfDir = args.lift(1).orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
       .getOrElse(sys.error(usage))
     val reps = args.lift(2).fold(3)(_.toInt)
     val spark = graft.GraftSession.create()
-    names.foreach(n => println(run(spark, n, sfDir, reps).json))
+    specs.foreach(q => println(run(spark, q.name, sfDir, reps).json))
     spark.stop()
   }
 
   def run(spark: SparkSession, name: String, sfDir: String, reps: Int): Record = {
     require(reps >= 1, s"reps must be >= 1, got $reps")
-    val query = graft.SparkEntry.queries(name)
+    val query = graft.SparkEntry.named(name).head.build
     // walls and job intervals on one clock: listener events carry epoch ms
     def write(): (Long, Long) = {
       val t0 = System.currentTimeMillis()

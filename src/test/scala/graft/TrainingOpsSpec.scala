@@ -1208,7 +1208,7 @@ class TrainingOpsSpec extends SparkSpec {
       "finds the planted exact copies (VERDICT r9 item 6)") {
     val dir = "/root/testdata/sf0.001"
     def scalarCol(q: String, c: String): Double =
-      SparkEntry.queries(q)(spark, dir)
+      SparkEntry.named(q).head.build(spark, dir)
         .select(c).distinct().collect() match {
         case Array(row) => row.getDouble(0)
         case rows => fail(s"$q.$c not a single scalar: ${rows.toSeq}")
