@@ -1,9 +1,13 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import graft.QuerySpec.{BenchSkip, Headline, Parity}
+import graft.tools.Profile.{Sample, sample}
 
 /** Benchmark main: times every SparkEntry query at the given scale factor and
-  * prints ONE JSON line (driver contract).
+  * prints ONE JSON line (driver contract). Each sample is
+  * [[graft.tools.Profile.sample]]'s noop write of every output column, and
+  * the full line's `layers` holds each query's fastest sample.
   *
   * The session is [[GraftSession]]'s, as in Verify and the tests; AQE
   * (skew handling + dynamic coalescing) is on by Spark default.
@@ -17,101 +21,78 @@ object Bench {
     // pinned headline set.
     val (skipped, battery) = SparkEntry.specs.partition(_.is(BenchSkip))
 
-    // Warm-up pass, untimed per-query but reported in aggregate as
-    // warmup_sec (bench hygiene, not hidden work):
-    //  1) every battery query once at the SMALLEST SF — first-call cost is
-    //     almost entirely data-independent (janino compile + C2 JIT of the
-    //     generated kernels + Spark infra): q_dedup_pipeline measured 12.3s
-    //     cold / 3.0s steady at sf0.1, and a single sf0.001 run absorbs
-    //     9.5s of that, leaving the sf0.1 first run at ~3.2s. min-of-2
-    //     alone could not hide this when the machine was loaded enough
-    //     that BOTH timed runs stayed cold (BENCH_r07's 14.4s outlier).
+    // Warm-up, untimed per query but reported as warmup_sec:
+    //  1) one sample of every battery query at the SMALLEST SF — first-call
+    //     cost (janino compile, C2 JIT of the generated kernels, Spark
+    //     infra) is almost data-independent, and on a loaded machine
+    //     min-of-2 alone left both timed runs cold (BENCH_r07's outlier);
     //  2) one count() per parquet table at the BENCH SF — pulls cold file
-    //     IO / footer parsing out of whichever timed query happens to
-    //     touch each table first.
+    //     IO / footer parsing out of whichever timed query touches it first.
     val warmT0 = System.nanoTime()
-    val warmSf = "/root/testdata/sf0.001"
-    try SparkEntry.entry(spark).count()
-    catch { case _: Throwable => () }
-    battery.foreach { q =>
-      try q.build(spark, warmSf).count() catch { case _: Throwable => () } }
+    def warm(build: => DataFrame): Unit =
+      try sample(spark)(build) catch { case _: Throwable => () }
+    warm(SparkEntry.entry(spark))
+    battery.foreach(q => warm(q.build(spark, "/root/testdata/sf0.001")))
     Seq("region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "events", "documents", "embeddings").foreach { tb =>
       try spark.read.parquet(s"$sfDir/$tb.parquet").count()
       catch { case _: Throwable => () } }
     val warmupSec = (System.nanoTime() - warmT0) / 1e9
 
-    // min over 2 COMPLETE battery passes (not 2 back-to-back runs per
-    // query): back-to-back samples share whatever ambient transient hits
-    // that instant — a GC pause, page-cache eviction, a background daemon —
-    // so a single loaded moment poisons both samples of one query (r7's
-    // q_dedup_pipeline 14.4s and r8's q_with_field 5.9s were exactly this).
-    // Running the full battery twice puts ~25s of other work between a
-    // query's two samples, decorrelating the noise at zero extra cost.
-    // A query that throws is recorded as FAILED — it must not silently
-    // contribute its time-to-failure to the totals and exit 0.
+    // min over 2 COMPLETE battery passes, not 2 back-to-back samples per
+    // query: back-to-back samples share whatever transient hits that
+    // instant (a GC pause, page-cache eviction, a daemon), while a full
+    // battery between them decorrelates the noise at no extra cost.
+    // A query that throws is recorded as FAILED and has no sample.
     val failed = scala.collection.mutable.ListBuffer.empty[String]
-    def runPass(passId: Int, qs: Seq[QuerySpec]): Map[String, Double] =
-      qs.map { q =>
-        val name = q.name
-        val t0 = System.nanoTime()
-        try { q.build(spark, sfDir).count() }
-        catch { case e: Throwable =>
-          if (!failed.contains(name)) failed += name
-          System.err.println(s"BENCH FAILURE $name: ${e.getClass.getName}: ${e.getMessage}")
+    def runPass(passId: Int, qs: Seq[QuerySpec]): Map[String, Sample] =
+      qs.flatMap { q =>
+        try {
+          val s = sample(spark)(q.build(spark, sfDir))._1
+          // per-pass walls show whether an odd min was one cold pass
+          System.err.println(f"[bench pass $passId] ${q.name} ${s.wallS}%.3f")
+          Some(q.name -> s)
+        } catch { case e: Throwable =>
+          if (!failed.contains(q.name)) failed += q.name
+          System.err.println(s"BENCH FAILURE ${q.name}: ${e.getClass.getName}: ${e.getMessage}")
+          None
         }
-        val sec = (System.nanoTime() - t0) / 1e9
-        // Per-pass timings to stderr: when a min-of-N reading looks off,
-        // the individual samples say whether it was one cold pass or a
-        // reproducible slowdown (r11's q_dedup_pipeline cost a round-trip
-        // to distinguish exactly this).
-        System.err.println(f"[bench pass $passId] $name $sec%.3f")
-        name -> sec
       }.toMap
-    val firstTwo: Seq[Map[String, Double]] = (1 to 2).map(runPass(_, battery))
-    // Third sample for (a) the PINNED headline set (~25s of battery):
-    // min-of-3 on the round-over-round metric so a single loaded moment
-    // can no longer set a headline query's reading (r10 q_flagship, r11
-    // q_dedup_pipeline were one-off outliers each costing a round of
-    // investigation); and (b) — r13, r12 verdict item 7 — the 15 SLOWEST
-    // non-headline queries by min-so-far: the battery's noise floor lives
-    // almost entirely in its expensive tail (q_dialect_dt at ~2s twice
-    // flagged as "slowest" on what was one cold sample), and re-timing
-    // just that tail buys most of a full min-of-3 pass at ~1/4 the cost.
-    val minSoFar = battery.map { q =>
-      q.name -> firstTwo.flatMap(_.get(q.name)).min }.toMap
-    val slowTail = minSoFar.toSeq.sortBy(-_._2).take(15).map(_._1).toSet
-    val passTimes: Seq[Map[String, Double]] = firstTwo :+
-      runPass(3, battery.filter(q => q.is(Headline) || slowTail(q.name)))
-    val results = battery.map { q =>
-      q -> passTimes.flatMap(_.get(q.name)).min
-    }
-    val qs = results.map { case (q, v) => "\"" + q.name + "\":" + v }
-      .mkString("{", ",", "}")
-    // Totals exclude failed queries: a time-to-failure is not a runtime,
-    // and a consumer that parses the JSON without checking the exit code
-    // must not record contaminated metrics (the "failed" field + nonzero
-    // exit still make the failure loud).
+    def fastest(passes: Seq[Map[String, Sample]]): Seq[(QuerySpec, Sample)] =
+      battery.flatMap(q =>
+        passes.flatMap(_.get(q.name)).minByOption(_.wallS).map(q -> _))
+    val firstTwo = (1 to 2).map(runPass(_, battery))
+    // Third sample for (a) the PINNED headline set, so one loaded moment
+    // cannot set a headline reading, and (b) the 15 slowest queries by
+    // min-so-far: the battery's noise lives in its expensive tail, and
+    // re-timing just that buys most of a full min-of-3 at ~1/4 the cost.
+    val slowTail = fastest(firstTwo).sortBy(-_._2.wallS).take(15)
+      .map(_._1.name).toSet
+    val results = fastest(firstTwo :+
+      runPass(3, battery.filter(q => q.is(Headline) || slowTail(q.name))))
+    def byName(f: Sample => Any) = results
+      .map { case (q, s) => "\"" + q.name + "\":" + f(s) }.mkString("{", ",", "}")
+    // Totals exclude a query that failed in any pass: a consumer that
+    // parses the JSON without checking the exit code must not record
+    // contaminated metrics (the "failed" field + nonzero exit still make
+    // the failure loud).
     val failedSet = failed.toSet
-    val okResults = results.filterNot { case (q, _) => failedSet(q.name) }
+    val okResults = results.collect {
+      case (q, s) if !failedSet(q.name) => q -> s.wallS }
     val total = if (okResults.nonEmpty) okResults.map(_._2).sum else 0.0
     // headline = the PINNED round-1 battery (Headline tag; RegistrySpec
     // freezes its names) so the metric stays comparable round over round
     // as the query surface grows.
     val headline = okResults.filter(_._1.is(Headline)).map(_._2).sum
     // production_total: the timed battery minus Parity-tagged queries
-    // (id-capped correctness artifacts, not production paths) — the
-    // number to track for production-path perf. `value` is the all-in
-    // total of the queries ACTUALLY TIMED (BenchSkip excluded):
-    // since r6 it excludes q_simhash_pairs_exact (~9% of the r5
-    // non-headline total), so cross-round comparisons of `value` have a
-    // discontinuity at r5→r6; `skipped` in the JSON line records the
-    // exclusions.
+    // (id-capped correctness artifacts, not production paths). `value` is
+    // the total of the queries ACTUALLY TIMED; `skipped` lists the
+    // BenchSkip exclusions (q_simhash_pairs_exact since r6).
     val production = okResults.filterNot(_._1.is(Parity)).map(_._2).sum
     val skippedJson = skipped
       .map(q => "\"" + q.name + "\"").mkString("[", ",", "]")
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","headline_total":$headline,"production_total":$production,"warmup_sec":$warmupSec,"skipped":$skippedJson,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","headline_total":$headline,"production_total":$production,"warmup_sec":$warmupSec,"skipped":$skippedJson,"queries":${byName(_.wallS)},"layers":${byName(_.json)},"sf":"$sfDir"}"""
     // Full per-query detail goes to files (the complete record).
     try {
       java.nio.file.Files.writeString(java.nio.file.Paths.get("/tmp/bench.json"), fullLine + "\n")

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * composition re-ran the same work per row, a native kernel from
   * [[graft.expressions.native]] replaces it — [[tokenShingles]]
   * (`TextTokenNGrams`) and [[qualityScore]] (`TextQualityScore`) — and the
-  * built-in composition stays alongside as its cross-check
-  * ([[tokenShinglesHof]], [[qualityScoreHof]]). Cross-engine exactness
+  * specs check each kernel against the built-in composition
+  * ([[qualityScoreHof]] also serves collated text). Cross-engine exactness
   * (for the DuckDB oracle) comes from integer arithmetic and sequential
   * left-fold accumulation, which we verified is bit-identical across engines.
   */
@@ -54,22 +54,10 @@ object TextFunctions {
 
   /** Distinct word n-grams (token shingles), space-joined, first-occurrence
     * order. Fewer than `n` tokens yields an EMPTY array. Native kernel —
-    * the HOF form below allocated a slice + concat per gram (interpreted)
-    * and dominated the contamination queries; [[tokenShinglesHof]] is the
-    * semantically-identical cross-check. */
+    * the HOF form (a slice + concat per gram, interpreted) dominated the
+    * contamination queries; the specs check the two are identical. */
   def tokenShingles(c: Column, n: Int): Column =
     graft.expressions.native.token_ngrams(c, n)
-
-  /** Pure-built-in formulation kept for cross-checking the kernel (same
-    * descending-sequence trap as [[charShingles]]). */
-  def tokenShinglesHof(c: Column, n: Int): Column = {
-    val t = tokens(c)
-    array_distinct(
-      when(size(t) >= n,
-        transform(sequence(lit(0), size(t) - lit(n)),
-          i => concat_ws(" ", slice(t, i + 1, lit(n)))))
-        .otherwise(array().cast("array<string>")))
-  }
 
   /** Polynomial rolling hash over the characters of `c`:
     * fold(acc * 31 + codepoint) mod 1e9+7 — a content fingerprint that is

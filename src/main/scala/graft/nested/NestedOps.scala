@@ -1045,11 +1045,11 @@ object NestedOps {
     * Scale shape: `indices` is a driver-side argument by contract (takes
     * are small reorderings, not data-sized scans), so the index frame is
     * small — but it is the PRESERVED side of the left outer join, and
-    * Spark builds a broadcast hash join only on the non-preserved side.
-    * The `broadcast(idx)` hint is therefore dropped (Spark logs it) and df
-    * is shuffled to the join. Swapping sides cannot help: the index frame
-    * stays the preserved side. Avoiding the shuffle needs an inner
-    * broadcast join with misses and -1 fills handled apart. */
+    * Spark builds a broadcast hash join only on the non-preserved side, so
+    * df is shuffled to the join (a broadcast hint on the index frame would
+    * be dropped). Swapping sides cannot help: the index frame stays the
+    * preserved side. Avoiding the shuffle needs an inner broadcast join
+    * with misses and -1 fills handled apart. */
   def takeRows(df: DataFrame, orderCol: String, indices: Seq[Long],
                allowFill: Boolean = false,
                fillRow: Map[String, Column] = Map.empty): DataFrame = {
@@ -1073,8 +1073,7 @@ object NestedOps {
     import spark.implicits._
     val idx = resolved.zipWithIndex
       .map { case (j, pos) => (pos.toLong, j) }.toDF("__pos", "__idx")
-    val joined = org.apache.spark.sql.functions.broadcast(idx)
-      .join(df, idx("__idx") === df(orderCol), "left")
+    val joined = idx.join(df, idx("__idx") === df(orderCol), "left")
       // fail-loud out of bounds WITHOUT a count job: a non-fill index that
       // matched no row (orderCol is the caller's dense never-null position
       // column, so a NULL here is a join miss) is out of bounds.

@@ -8,12 +8,12 @@ import graft.functions.TextFunctions._
   *
   * Scale design (100 TB):
   *  - [[exact]]: one hash-shuffle on the dedup key — the minimal possible.
-  *  - [[minHashSignatures]]: ZERO shuffle — per-row `array_min(transform(...))`
-  *    HOFs compute the whole signature inside the scan stage.
+  *  - [[minHashSignaturesNative]]: ZERO shuffle — a per-row native kernel
+  *    computes the whole signature inside the scan stage.
   *  - [[lshCandidatePairs]]: one explode + one groupBy on (band, bandHash) —
   *    the canonical shingle→minhash→band→bucket-join plan; emits linear star
   *    edges per bucket, never quadratic cliques.
-  *  - [[simHash]]: zero shuffle per-row signature; pairing joins on the
+  *  - [[simHash64Native]]: zero shuffle per-row signature; pairing joins on the
   *    4-bit-block bands of the signature.
   */
 object Dedup {
@@ -36,37 +36,10 @@ object Dedup {
           .as("keep_id"),
         count(lit(1)).as("n_copies"))
 
-  /** MinHash signature as an array column, NO shuffle: for each of
-    * `numHashes` seeded xxhash64 functions, the min over the document's
-    * distinct character shingles.
-    *
-    * ONE fold over the shingles with an array<long> accumulator — the
-    * hash-per-seed formulation (`numHashes` separate `array_min(transform)`
-    * expressions over a shared shingle sub-expression) re-evaluates the
-    * shingle extraction per seed (no CSE through HOF lambdas): 16 seeds ran
-    * 16× the substring+distinct work. Seeded hashes derive from two base
-    * hashes (h1 + i·h2, the standard Kirsch–Mitzenmacher construction), so
-    * each shingle is hashed twice regardless of numHashes. */
-  def minHashSignatures(text: Column, numHashes: Int,
-                        shingleSize: Int = 5): Column = {
-    val init = array_repeat(lit(Long.MaxValue), numHashes)
-    aggregate(
-      distinctShingles(text, shingleSize),
-      init,
-      (acc, s) => {
-        // 31-bit base hashes: h1 + i·h2 stays far from Long overflow (ANSI
-        // mode would reject wraparound arithmetic).
-        val h1 = pmod(xxhash64(s), lit(2147483647L))
-        val h2 = pmod(xxhash64(s, lit(1)), lit(2147483647L))
-        zip_with(acc, sequence(lit(0L), lit(numHashes - 1L)),
-          (m, i) => least(m, h1 + i * h2))
-      })
-  }
-
-  /** Native (tight-loop Catalyst expression) variants of the sketches —
-    * same algorithms, one pass over UTF-8 bytes, no per-shingle allocation.
-    * Preferred at scale; the HOF forms above remain as the pure-built-in
-    * reference implementations. */
+  /** MinHash signature ([[graft.expressions.TextMinHash]]) and 64-bit
+    * SimHash ([[graft.expressions.TextSimHash64]]) as native tight-loop
+    * kernels, NO shuffle: one pass over the UTF-8 bytes, no per-shingle
+    * allocation. */
   def minHashSignaturesNative(text: Column, numHashes: Int,
                               shingleSize: Int = 5): Column =
     graft.expressions.native.minhash(text, numHashes, shingleSize)
@@ -239,43 +212,13 @@ object Dedup {
       .distinct()
   }
 
-  /** 64-bit SimHash of the document's distinct tokens, NO shuffle: per bit,
-    * sign of the sum of ±1 votes from each token's xxhash64 bit.
-    *
-    * Implemented as ONE aggregate pass with an array<long> vote accumulator
-    * (a naive per-bit formulation builds 64 separate fold expressions — a
-    * codegen explosion that ran 10× slower). Built via SQL text because
-    * variable shift amounts (`h >> b` with lambda-var b) have no
-    * `functions._` equivalent. */
-  def simHash64(textSql: String): Column = {
-    val t = textSql
-    expr(s"""
-      aggregate(
-        zip_with(
-          aggregate(
-            transform(array_distinct(split(trim($t), '\\\\s+')),
-                      w -> xxhash64(w)),
-            array_repeat(CAST(0 AS BIGINT), 64),
-            (acc, h) -> zip_with(acc, sequence(0, 63),
-              (a, b) -> a + (CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END))),
-          sequence(0, 63),
-          (v, b) -> CASE WHEN v > 0 THEN shiftleft(CAST(1 AS BIGINT), b)
-                    ELSE CAST(0 AS BIGINT) END),
-        CAST(0 AS BIGINT), (acc, x) -> acc + x)""")
-  }
-
-  /** Connected components over an undirected edge list (a, b) by iterative
-    * min-label propagation: label(v) ← min(label(v), min label of
-    * neighbors), until fixpoint or maxIter. Each round is two shuffles
-    * (edge join + groupBy) — O(diameter) rounds, and LSH star-edge graphs
-    * have tiny diameters. Returns (v, component) with component = min id
-    * reachable. */
   /** Hybrid connected components: verified near-dup EDGE lists are orders of
     * magnitude smaller than the corpus (every edge costs a Jaccard pass to
     * exist), so up to `driverMaxEdges` the components are computed with
     * driver-side union-find in milliseconds — ~10M edges is a few seconds
     * and well inside driver memory. Beyond that, fall back to the
-    * distributed min-label loop. Both return (v, component=min id). */
+    * distributed [[connectedComponentsStars]]. Both return
+    * (v, component=min id). */
   def connectedComponents(edges: DataFrame,
                           driverMaxEdges: Long = 10000000L,
                           maxIter: Int = 20): DataFrame = {
@@ -400,52 +343,6 @@ object Dedup {
     cur.select(col("b").as("v"), col("a").as("component"))
       .union(cur.select(col("a").as("v"), col("a").as("component")))
       .distinct()
-  }
-
-  /** Distributed min-label propagation (kept for cross-checking the star
-    * contraction; per-round cost is similar but round count is O(diameter),
-    * which loses badly on long chains at scale). */
-  def connectedComponentsDistributed(edges: DataFrame,
-                                     maxIter: Int = 20): DataFrame = {
-    // Materialize the edge list ONCE: it feeds every iteration, and without
-    // this its entire upstream (sketching, LSH, verification joins) would
-    // re-execute per round — measured as the dominant cost of dedupNear.
-    val sym = edges.select(col("a").as("src"), col("b").as("dst"))
-      .union(edges.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint()
-    var labels = sym.select(col("src").as("v")).distinct()
-      .withColumn("component", col("v"))
-      .localCheckpoint()
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val candidate = sym
-        .join(labels.withColumnRenamed("v", "src"), "src")
-        .groupBy(col("dst").as("v"))
-        .agg(min(col("component")).as("neighborMin"))
-      // carry a changed flag so convergence needs no extra join or job:
-      // the localCheckpoint materializes next, the isEmpty scans it locally.
-      // NOTE the tuple round-trip after the checkpoint: localCheckpoint
-      // preserves the child's sizeInBytes estimate and iterative joins
-      // compound it into astronomically large BigInts (same pathology as
-      // connectedComponentsStars — see its comment).
-      val next = labels.join(candidate, Seq("v"), "left")
-        .select(col("v"),
-          least(col("component"), coalesce(col("neighborMin"),
-            col("component"))).as("component"),
-          (coalesce(col("neighborMin"), col("component")) < col("component"))
-            .as("__changed"))
-        .localCheckpoint()
-      converged = next.where(col("__changed")).isEmpty
-      val spark = next.sparkSession
-      import spark.implicits._
-      val slim = next.drop("__changed")
-        .select(col("v").cast("long"), col("component").cast("long"))
-        .as[(Long, Long)].rdd
-      labels = spark.createDataset(slim).toDF("v", "component")
-      iter += 1
-    }
-    labels
   }
 
   /** End-to-end near-duplicate removal:

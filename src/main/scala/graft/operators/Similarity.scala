@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Similarity search over embedding columns (`array<float>`).
   *
@@ -37,30 +36,12 @@ object Similarity {
       .select(col("query_id"), (col("__pos") + 1).cast("long").as("rank"),
         col("__t.id").as("neighbor_id"), col("__t.score").as(scoreCol))
 
-  /** The window formulation, kept ONLY as the cross-check twin of
-    * [[topKPerQuery]] (specs assert equality on adversarial inputs). */
-  private[graft] def topKPerQueryWindow(scored: DataFrame, k: Int,
-                                        scoreCol: String): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col(scoreCol).desc, col("neighbor_id"))
-    scored.where(col("neighbor_id").isNotNull) // match the aggregate form
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col(scoreCol))
-  }
-
   /** Dot product of two equal-length numeric arrays, accumulated
     * sequentially in double. Native codegen'd expression — same fold order
     * as the HOF formulation (bit-identical results, verified by the oracle),
     * but inlined into whole-stage codegen instead of interpreted. */
   def dot(a: Column, b: Column): Column =
     graft.expressions.native.dot_f(a, b)
-
-  /** HOF formulation kept for reference/fallback. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
 
   /** L2 norm. */
   def norm(a: Column): Column = sqrt(dot(a, a))
@@ -124,7 +105,7 @@ object Similarity {
   /** Deterministic integer hyperplane weight for (plane j, dimension d):
     * pseudo-random in [-48, 48] via exact integer arithmetic (reproducible in
     * any SQL engine — no float RNG). */
-  private def planeWeight(j: Int, d: Int): Long =
+  private[graft] def planeWeight(j: Int, d: Int): Long =
     ((j.toLong * 64L + d.toLong) * 2654435761L % 97L) - 48L
 
   /** Plane-j weight vector as doubles — the exact projection
@@ -134,23 +115,11 @@ object Similarity {
     (0 until dim).map(d => planeWeight(j, d).toDouble)
 
   /** LSH bucket id: one bit per hyperplane = sign of <v, plane_j>.
-    * Native kernel (one loop per row); the Column formulation below carried
-    * numPlanes×dim expression nodes through codegen. Bit-identical. */
+    * Native kernel (one loop per row); the Column formulation carried
+    * numPlanes×dim expression nodes through codegen. Bit-identical (the
+    * specs compare it with that formulation). */
   def hyperplaneBucket(vec: Column, numPlanes: Int, dim: Int): Column =
     graft.expressions.native.hyperplane_bucket(vec, numPlanes, dim)
-
-  /** Column-expression formulation kept for cross-checking the kernel.
-    * Guarded on size >= dim so short vectors yield NULL (matching the native
-    * kernel) instead of a 0 bucket via element_at null-propagation. */
-  def hyperplaneBucketHof(vec: Column, numPlanes: Int, dim: Int): Column = {
-    val bucket = (0 until numPlanes).map { j =>
-      val proj = (0 until dim).map { d =>
-        element_at(vec, d + 1).cast("double") * lit(planeWeight(j, d).toDouble)
-      }.reduce[Column](_ + _)
-      when(proj > 0, lit(1L << j)).otherwise(lit(0L))
-    }.reduce[Column](_ + _)
-    when(size(vec) >= dim, bucket)
-  }
 
   /** IVF (inverted-file) coarse quantizer: deterministic k-means —
     * centroids seeded from the first k vectors by id, refined with `iters`
@@ -321,30 +290,11 @@ object Similarity {
     * exact-arithmetic argmin of −2·v·c + ‖c‖² with ties to the smallest
     * code — the same deterministic cell rule as [[ivfIndex]]. Narrow,
     * zero-shuffle; this is the column you'd write bucketed at ingest.
-    * Native kernel (one loop/row); [[pqEncodeHof]] is the bit-identical
-    * Column cross-check (m×k struct cells + array_sort — ~100× slower). */
+    * Native kernel (one loop/row), bit-identical to the Column formulation
+    * the specs compare it with (m×k struct cells + array_sort — ~100×
+    * slower). */
   def pqEncode(vec: Column, books: Array[Array[Array[Double]]]): Column =
     graft.expressions.native.pq_encode(vec, books)
-
-  /** Column-expression formulation kept for cross-checking the kernel.
-    * Guarded on size >= m·sub so short vectors yield NULL like the native
-    * form. */
-  def pqEncodeHof(vec: Column,
-                  books: Array[Array[Array[Double]]]): Column = {
-    val m = books.length
-    val sub = books(0)(0).length
-    val codes = array((0 until m).map { j =>
-      val s = slice(vec, j * sub + 1, sub)
-      val cells = books(j).zipWithIndex.map { case (cvec, cid) =>
-        struct((lit(-2.0) * graft.expressions.native.dot_f(s,
-          typedLit(cvec.toSeq)) + lit(cvec.map(x => x * x).sum)).as("d"),
-          lit(cid).as("cid"))
-      }
-      element_at(array_sort(array(cells.toIndexedSeq: _*)), 1)
-        .getField("cid")
-    }: _*)
-    when(size(vec) >= m * sub, codes)
-  }
 
   /** PQ search by asymmetric distance computation (ADC): the query stays
     * full-precision; each candidate contributes Σ_j q_slice_j · book_j[code_j]

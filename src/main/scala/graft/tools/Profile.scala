@@ -5,7 +5,7 @@ import java.util.concurrent.{ConcurrentHashMap, LinkedBlockingQueue, TimeUnit}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
@@ -17,18 +17,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * (sfDir defaults to `SPARK_GRAFT_SF_DIR`, reps to 3). Queries run in
   * name order; an unknown name fails before any query runs.
   *
-  * Each rep writes every output column to the `noop` sink, so nothing is
-  * pruned to a key scan. The first (cold) run is timed apart from the
-  * `reps` warm ones; the last warm rep is the profiled one:
-  *  - its jobs and the stages they ran (skipped stages not counted);
-  *  - busy = the union of its job intervals (overlapping jobs counted once),
-  *    idle = the rest of its wall, i.e. driver-side analysis, planning and
-  *    barriers between jobs;
-  *  - shuffle, broadcast and reused exchanges, counted as nodes of the
-  *    final adaptive plan (subqueries included);
-  *  - that plan, formatted, in `target/profile/<query>.txt`.
-  * The plan is the write's own: work a query runs eagerly (checkpoints,
-  * driver-side collects) shows up in jobs and busy time, not in the plan. */
+  * A query is timed by [[sample]], which `graft.Bench` uses too: one cold
+  * sample, then `reps` warm ones. The last warm sample is the profiled one,
+  * and its final plan, formatted, goes to `target/profile/<query>.txt`. */
 object Profile extends AdaptiveSparkPlanHelper {
   final case class Record(query: String, coldS: Double, repsS: Seq[Double],
                           jobs: Int, stages: Int, busyS: Double,
@@ -39,6 +30,16 @@ object Profile extends AdaptiveSparkPlanHelper {
         s""""jobs":$jobs,"stages":$stages,"busy_s":$busyS,"idle_s":$idleS,""" +
         s""""shuffles":$shuffles,"broadcasts":$broadcasts,""" +
         s""""reused_exchanges":$reusedExchanges,"plan":"$plan"}"""
+  }
+
+  /** One timed write of a query, see [[sample]]. */
+  final case class Sample(wallS: Double, jobs: Int, stages: Int,
+                          busyS: Double, idleS: Double, shuffles: Int,
+                          broadcasts: Int, reusedExchanges: Int) {
+    def json: String =
+      s"""{"wall_s":$wallS,"jobs":$jobs,"stages":$stages,"busy_s":$busyS,""" +
+        s""""idle_s":$idleS,"shuffles":$shuffles,"broadcasts":$broadcasts,""" +
+        s""""reused_exchanges":$reusedExchanges}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -58,19 +59,38 @@ object Profile extends AdaptiveSparkPlanHelper {
   def run(spark: SparkSession, name: String, sfDir: String, reps: Int): Record = {
     require(reps >= 1, s"reps must be >= 1, got $reps")
     val query = graft.SparkEntry.named(name).head.build
-    // walls and job intervals on one clock: listener events carry epoch ms
-    def write(): (Long, Long) = {
-      val t0 = System.currentTimeMillis()
-      query(spark, sfDir).write.format("noop").mode("overwrite").save()
-      (t0, System.currentTimeMillis())
-    }
+    val samples = Seq.fill(reps + 1)(sample(spark)(query(spark, sfDir)))
+    val (last, write) = samples.last
+    val planFile = Paths.get("target", "profile", s"$name.txt")
+    Files.createDirectories(planFile.getParent)
+    Files.writeString(planFile, write.explainString(FormattedMode))
+    Record(name, samples.head._1.wallS, samples.tail.map(_._1.wallS), last.jobs,
+      last.stages, last.busyS, last.idleS, last.shuffles, last.broadcasts,
+      last.reusedExchanges, planFile.toString)
+  }
+
+  /** Builds a query and writes every output column to the `noop` sink, so
+    * nothing is pruned to a key scan. Returns the write's execution and:
+    *  - the wall, build included, so eager work (checkpoints, driver-side
+    *    collects) counts;
+    *  - the jobs run meanwhile and the stages they ran (skipped stages not
+    *    counted);
+    *  - busy = the union of those job intervals (overlapping jobs counted
+    *    once), idle = the rest of the wall, i.e. driver-side analysis,
+    *    planning and barriers between jobs;
+    *  - shuffle, broadcast and reused exchanges, counted as nodes of the
+    *    write's final adaptive plan (subqueries included).
+    * The listeners live for this one call, so a build or write that throws
+    * leaves nothing behind for the next sample. */
+  def sample(spark: SparkSession)(build: => DataFrame): (Sample, QueryExecution) = {
     val events = new Events(spark)
     try {
-      val cold = write()
-      val warm = Seq.fill(reps - 1)(write())
-      // marker job ids bound the profiled rep's job ids (a watermark)
+      // marker job ids bound this sample's job ids (a watermark); walls and
+      // job intervals share one clock, as listener events carry epoch ms
       val lo = events.drain()
-      val last @ (t0, t1) = write()
+      val t0 = System.currentTimeMillis()
+      build.write.format("noop").mode("overwrite").save()
+      val t1 = System.currentTimeMillis()
       val hi = events.drain()
       val jobs = events.jobs.asScala.collect {
         case (id, job) if id > lo && id < hi => job }.toSeq
@@ -79,15 +99,11 @@ object Profile extends AdaptiveSparkPlanHelper {
       val busy = union(jobs.map(j => (math.max(j.start, t0), math.min(j.end, t1))))
       val qe = events.lastWrite
       val nodes = collectWithSubqueries(qe.executedPlan) { case p => p }
-      val planFile = Paths.get("target", "profile", s"$name.txt")
-      Files.createDirectories(planFile.getParent)
-      Files.writeString(planFile, qe.explainString(FormattedMode))
-      def secs(w: (Long, Long)) = (w._2 - w._1) / 1e3
-      Record(name, secs(cold), (warm :+ last).map(secs), jobs.size, stages,
-        busy / 1e3, (t1 - t0 - busy) / 1e3,
+      (Sample((t1 - t0) / 1e3, jobs.size, stages, busy / 1e3,
+        (t1 - t0 - busy) / 1e3,
         nodes.count(_.isInstanceOf[ShuffleExchangeLike]),
         nodes.count(_.isInstanceOf[BroadcastExchangeLike]),
-        nodes.count(_.isInstanceOf[ReusedExchangeExec]), planFile.toString)
+        nodes.count(_.isInstanceOf[ReusedExchangeExec])), qe)
     } finally events.close()
   }
 
@@ -104,8 +120,9 @@ object Profile extends AdaptiveSparkPlanHelper {
   private final case class Job(start: Long, end: Long, stageIds: Seq[Int])
 
   /** Job intervals, stages and the last write's execution, from the
-    * listener bus. Both listeners sit on its shared queue, so once a
-    * marker job's end arrives every earlier event has been handled. */
+    * listener bus, for one sample. Both listeners sit on its shared queue,
+    * so once a marker job's end arrives every earlier event has been
+    * handled. */
   private final class Events(spark: SparkSession) {
     private val sc = spark.sparkContext
     val jobs = new ConcurrentHashMap[Int, Job]()

@@ -1,6 +1,5 @@
 package graft
 
-import graft.operators.{Dedup, Similarity}
 import graft.expressions.native
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
@@ -16,9 +15,9 @@ class NativeExprSpec extends SparkSpec {
   test("dot_f matches the HOF fold bit-for-bit (float and double arrays)") {
     val r = vecs.select(
       native.dot_f($"f", $"f").as("nf"),
-      Similarity.dotHof($"f", $"f").as("hf"),
+      CrossCheck.dotHof($"f", $"f").as("hf"),
       native.dot_f($"d", $"d").as("nd"),
-      Similarity.dotHof($"d", $"d").as("hd")).collect()
+      CrossCheck.dotHof($"d", $"d").as("hd")).collect()
     r.foreach { row =>
       assert(row.getDouble(0) == row.getDouble(1))
       assert(row.getDouble(2) == row.getDouble(3))
@@ -52,7 +51,7 @@ class NativeExprSpec extends SparkSpec {
       .toDF("t")
     val both = docs.select(
       TextFunctions.tokenShingles($"t", 3).as("n"),
-      TextFunctions.tokenShinglesHof($"t", 3).as("h"))
+      CrossCheck.tokenShinglesHof($"t", 3).as("h"))
     assert(both.where(expr("n <> h")).count() == 0)
     // and the order/dedup contract: first occurrence wins
     val grams = docs.where($"t".startsWith("the the"))

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import graft.tools.Profile
+import org.apache.spark.sql.functions.{assert_true, col}
 
 class ProfileSpec extends SparkSpec {
 
@@ -14,6 +15,15 @@ class ProfileSpec extends SparkSpec {
       .drop(1)
       .takeWhile(!_.contains("== Initial Plan =="))
       .map(_.replaceAll("^[\\s:|+*-]*", "").replaceAll("\\s*\\(\\d+\\).*$", ""))
+
+  /** Everything a sample counts, i.e. all of it but the timings. */
+  private def counts(s: Profile.Sample) =
+    (s.jobs, s.stages, s.shuffles, s.broadcasts, s.reusedExchanges)
+
+  private def flagship(): Profile.Sample = Profile.sample(spark)(
+    SparkEntry.named("q_flagship").head.build(spark, sf0001))._1
+
+  private lazy val flagshipAlone = flagship()
 
   test("the record times every rep and splits the last into busy and idle") {
     val r = Profile.run(spark, "q_flagship", sf0001, reps = 2)
@@ -40,5 +50,33 @@ class ProfileSpec extends SparkSpec {
       assert(r.broadcasts == nodes.count(_ == "BroadcastExchange"), r.plan)
       assert(r.reusedExchanges == nodes.count(_ == "ReusedExchange"), r.plan)
     }
+  }
+
+  test("back-to-back samples each report only their own jobs") {
+    val alone = counts(flagshipAlone)
+    val (a, b) = (flagship(), flagship())
+    assert(counts(a) == alone)
+    assert(counts(b) == alone)
+    Seq(flagshipAlone, a, b).foreach { s =>
+      assert(s.jobs >= 1 && s.wallS > 0)
+      assert(math.abs(s.busyS + s.idleS - s.wallS) < 1e-9)
+    }
+  }
+
+  test("a sample that throws leaves the next sample's jobs its own") {
+    intercept[RuntimeException](Profile.sample(spark) {
+      spark.range(100).count() // a job inside the failing sample
+      sys.error("build failed")
+    })
+    assert(counts(flagship()) == counts(flagshipAlone))
+    // a failing write: its job is started and fails inside the sample
+    intercept[Exception](Profile.sample(spark)(
+      spark.range(10).select(assert_true(col("id") < 0))))
+    assert(counts(flagship()) == counts(flagshipAlone))
+  }
+
+  test("q_flagship plans the exchanges measured before the shared sampler") {
+    val s = flagship()
+    assert((s.shuffles, s.broadcasts) == (1, 1))
   }
 }

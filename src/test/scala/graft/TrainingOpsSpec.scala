@@ -34,7 +34,7 @@ class TrainingOpsSpec extends SparkSpec {
 
   test("minhash signatures identical for identical docs, close for near-dups") {
     val sigs = docs.select(col("doc_id"),
-      Dedup.minHashSignatures(col("text"), 8, 5).as("sig"))
+      CrossCheck.minHashSignatures(col("text"), 8, 5).as("sig"))
       .orderBy("doc_id").as[(Long, Seq[Long])].collect().toMap
     assert(sigs(0L) == sigs(3L))
     val agree01 = sigs(0L).zip(sigs(1L)).count { case (a, b) => a == b }
@@ -45,7 +45,7 @@ class TrainingOpsSpec extends SparkSpec {
 
   test("LSH candidate pairs find the exact dup") {
     val withSig = docs.select(col("doc_id"),
-      Dedup.minHashSignatures(col("text"), 8, 5).as("sig"))
+      CrossCheck.minHashSignatures(col("text"), 8, 5).as("sig"))
     val pairs = Dedup.lshCandidatePairs(withSig, "doc_id", "sig", 8, 2)
       .as[(Long, Long)].collect().toSet
     assert(pairs.contains((0L, 3L)))
@@ -53,7 +53,7 @@ class TrainingOpsSpec extends SparkSpec {
   }
 
   test("simhash hamming distance orders by similarity") {
-    val sigs = docs.select(col("doc_id"), Dedup.simHash64("text").as("s"))
+    val sigs = docs.select(col("doc_id"), CrossCheck.simHash64("text").as("s"))
       .as[(Long, Long)].collect().toMap
     assert(sigs(0L) == sigs(3L))
     val d01 = java.lang.Long.bitCount(sigs(0L) ^ sigs(1L))
@@ -374,7 +374,7 @@ class TrainingOpsSpec extends SparkSpec {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val both = e.select(
       Similarity.hyperplaneBucket($"embedding", 8, 64).as("native"),
-      Similarity.hyperplaneBucketHof($"embedding", 8, 64).as("hof"))
+      CrossCheck.hyperplaneBucketHof($"embedding", 8, 64).as("hof"))
     assert(both.where($"native" =!= $"hof").count() == 0)
     assert(both.select(countDistinct($"native")).as[Long].collect()(0) > 1)
   }
@@ -444,7 +444,7 @@ class TrainingOpsSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     assert(distPath == expected)
     // min-label propagation agrees with both
-    val labelPath = Dedup.connectedComponentsDistributed(edges)
+    val labelPath = CrossCheck.connectedComponentsDistributed(edges)
       .as[(Long, Long)].collect().toMap
     assert(labelPath == expected)
   }
@@ -588,7 +588,7 @@ class TrainingOpsSpec extends SparkSpec {
       .toDF("id", "v")
     val r = vecs.select($"id",
         Similarity.hyperplaneBucket($"v", 8, 64).as("native"),
-        Similarity.hyperplaneBucketHof($"v", 8, 64).as("hof"))
+        CrossCheck.hyperplaneBucketHof($"v", 8, 64).as("hof"))
       .orderBy("id").collect()
     assert(r(0).isNullAt(1) && r(0).isNullAt(2)) // short → NULL, not bucket 0
     assert(!r(1).isNullAt(1) && r(1).getLong(1) == r(1).getLong(2))
@@ -655,11 +655,11 @@ class TrainingOpsSpec extends SparkSpec {
     // NULL short vectors instead of encoding a truncated slice
     val both = planted.select(
       Similarity.pqEncode($"embedding", books).as("n"),
-      Similarity.pqEncodeHof($"embedding", books).as("h"))
+      CrossCheck.pqEncodeHof($"embedding", books).as("h"))
     assert(both.where(expr("n <> h")).count() == 0)
     val short = Seq((1L, Seq(1.0f, 2.0f))).toDF("id", "embedding")
       .select(Similarity.pqEncode($"embedding", books).as("n"),
-        Similarity.pqEncodeHof($"embedding", books).as("h")).collect()(0)
+        CrossCheck.pqEncodeHof($"embedding", books).as("h")).collect()(0)
     assert(short.isNullAt(0) && short.isNullAt(1))
     // IVF-PQ: coarse cells prune candidates, ADC ranks the survivors —
     // the identical-code duplicate shares the cell and wins
@@ -1152,7 +1152,7 @@ class TrainingOpsSpec extends SparkSpec {
     for (k <- Seq(1, 3, 10)) {
       val agg = Similarity.topKPerQuery(scored, k, "sim")
         .orderBy("query_id", "rank").collect().toSeq
-      val win = Similarity.topKPerQueryWindow(scored, k, "sim")
+      val win = CrossCheck.topKPerQueryWindow(scored, k, "sim")
         .orderBy("query_id", "rank").collect().toSeq
       assert(agg == win, s"k=$k")
     }
