@@ -298,15 +298,12 @@ object Queries {
 
   /** dropna / fillna on nested elements (nulls synthesized deterministically). */
   val qDropnaFillna: Q = (s, dir) => {
-    // the packed frame feeds BOTH the dropna and the fillna branch of the
-    // cross join — materialize it once per invocation (localCheckpoint:
-    // eager, inside the timed region, nothing persists across runs)
-    val packed = NestedOps.packFlat(
+    // feeds BOTH the dropna and the fillna branch of the cross join
+    val packed = Materialize(NestedOps.packFlat(
       lines(s, dir, "l_discount"), Seq("o_orderkey"), "items")
       .withNestedField("items", "disc",
         e => when(e.getField("l_discount") < 0.03, lit(null))
-          .otherwise(e.getField("l_discount")))
-      .localCheckpoint()
+          .otherwise(e.getField("l_discount"))))
     val dropped = NestedOps.dropNaElements(packed, "items", Seq("disc"))
     val filled = NestedOps.fillNaElements(packed, "items", Map("disc" -> 0.0))
     val a = dropped.agg(sum(size(col("items"))).cast("long").as("n_after_dropna"))

@@ -936,21 +936,16 @@ object SurfaceQueries {
     * is ±0.0001 of ranks — 50× slack) and emitted as 1.0 when inside the
     * envelope, the raw value (→ loud hash mismatch) when not. */
   val qDescribeApprox: Q = (s, dir) => {
-    val packed = NestedOps.packFlat(
+    // consumed by 2 describeAll calls x 2 layer aggregates each
+    val packed = Materialize(NestedOps.packFlat(
       lines(s, dir, "l_quantity"), Seq("o_orderkey"), "items")
       .withColumn("n_items", size(col("items")).cast("double"))
-      .drop("o_orderkey")
-      // consumed by 2 describeAll calls x 2 layer aggregates each —
-      // materialize the pack once per invocation (see note below)
-      .localCheckpoint()
+      .drop("o_orderkey"))
     val pcts = Seq(0.25, 0.5, 0.75)
     val delta = 0.005
-    // Both describe outputs are consumed by TWO branches each (exact-stat
-    // slice + percentile check; lo + hi), and each consumption re-executed
-    // the full pack->describe pipeline — the pack ran ~8x per invocation.
-    // localCheckpoint materializes the ~30-row long frames once per
-    // invocation (eagerly, inside the timed region — nothing persists
-    // across runs) so the pipeline runs once per describe call.
+    // Both ~30-row describe outputs are consumed by TWO branches each
+    // (exact-stat slice + percentile check; lo + hi); materialized, the
+    // pack->describe pipeline runs once per describe call, not ~8x.
     // The approx and exact-envelope describes are INDEPENDENT jobs over
     // the already-materialized pack — submit both before awaiting either,
     // so the second job back-fills the first one's task tail.
@@ -976,7 +971,7 @@ object SurfaceQueries {
       percentiles = pcts.map(_ - delta) ++ pcts.map(_ + delta),
       exactRowLimit = Long.MaxValue) // envelope must stay exact (guard off)
     val (approxD, exactBoth) =
-      awaitBoth(approxRaw.localCheckpoint(), exactRaw.localCheckpoint())
+      awaitBoth(Materialize(approxRaw), Materialize(exactRaw))
     val lo = renamed(exactBoth, pcts.map(_ - delta), "lo")
     val hi = renamed(exactBoth, pcts.map(_ + delta), "hi")
     val exactStats = approxD.where(!col("stat").endsWith("%"))

@@ -187,24 +187,21 @@ object TrainingQueries {
   }
 
   /** Un-planted pairs + the `planted_recall` scalar from a SEPARATE
-    * planted run (r11, ADVICE: the planted copies must not perturb the
-    * shipped rows — over-cap bucket emissions could flip under the
-    * union, so the output is now byte-identical to the plain pipeline).
+    * planted run: planted copies would perturb the shipped rows, since
+    * over-cap bucket emissions could flip under the union.
     *
     * Connectivity check is 1-or-2-hop, NOT full CC, and that is SOUND
     * here: an exact copy shares EVERY band bucket with its source, and
     * each shared bucket yields either the direct pair (all-pairs ≤ cap,
     * or the source IS the bucket min) or star edges from both endpoints
     * to the same bucket-min (a common neighbor). The planted run's SMALL
-    * pair list (~40k rows at sf0.1) is cached only while the recall
-    * scalar materializes (one 1-row collect), then unpersisted — no
-    * cached RDD outlives the query build. Every build runs the planted
-    * pass eagerly, so a timed build pays for the check. */
+    * pair list (~40k rows at sf0.1) is persisted only while the recall
+    * scalar materializes (one 1-row collect). Every build runs the
+    * planted pass eagerly, so a timed build pays for the check. */
   private def withPlantedRecall(d: DataFrame,
                                 pairsOf: DataFrame => DataFrame): DataFrame = {
-    val recall: Double = {
-      val pairs = pairsOf(d.unionByName(planted(d))).cache()
-      try {
+    val recall: Double =
+      Materialize.within(pairsOf(d.unionByName(planted(d)))) { pairs =>
         val sym = pairs.select(col("a"), col("b"))
           .unionAll(pairs.select(col("b").as("a"), col("a").as("b")))
         // edges INTO planted copies, keyed by the neighbor
@@ -221,8 +218,7 @@ object TrainingQueries {
         hits.crossJoin(denom)
           .select(roundSafe(col("nhit") / col("np"), 4))
           .head.getDouble(0)
-      } finally pairs.unpersist()
-    }
+      }
     pairsOf(d).withColumn("planted_recall", lit(recall))
   }
 
@@ -306,33 +302,27 @@ object TrainingQueries {
         numBands = 4, bitsPerBand = 15, maxHamming = 24, allPairsCap = 2)
       .select(col("a"), col("b"), col("hamming").cast("long").as("hamming"))
 
-  /** Full near-dup removal pipeline: sigs → LSH candidates → jaccard
-    * verification → connected components → keep min id per component.
-    * Rows-only check (candidate recall depends on engine hashing). */
-  /** Production near-dup pipeline + planted truth: exact copies planted
-    * at doc_id+PlantBase MUST all be eliminated (jaccard 1.0 ≥ any
-    * threshold; source id < copy id so keep-min keeps the source).
-    * r11 (ADVICE): the planted run is SEPARATE — its `kept` frame is
-    * cached only while the 1-row removal scalar collects, then
-    * unpersisted, and the shipped rows come from the plain un-planted
-    * pipeline (byte-identical to q_dedup_pipeline_exact's subject;
-    * previously a planted copy's chain edge could merge an extra doc
-    * into a component). `planted_removed` = 1.0 on pass. Every build
-    * runs the planted pass eagerly, so a timed build pays for the check. */
+  /** Production near-dup pipeline (sigs → LSH candidates → jaccard
+    * verification → connected components → keep min id per component;
+    * rows-only check) + planted truth: exact copies planted at
+    * doc_id+PlantBase MUST all be eliminated (jaccard 1.0 ≥ any threshold;
+    * source id < copy id so keep-min keeps the source). A SEPARATE planted
+    * run feeds only the 1-row `planted_removed` scalar (1.0 on pass); the
+    * shipped rows come from the plain pipeline, byte-identical to
+    * q_dedup_pipeline_exact's subject. Every build runs the planted pass
+    * eagerly, so a timed build pays for the check. */
   val qDedupPipeline: Q = (s, dir) => {
     val d = docs(s, dir)
     val removed: Double = {
-      val plantedKept = Dedup.dedupNear(d.unionByName(planted(d)),
-        "doc_id", "text", threshold = 0.8).cache()
-      try {
-        val nKeptPlanted = plantedKept.where(col("doc_id") >= PlantBase)
-          .agg(count(lit(1)).as("nkept"))
-        val denom = d.where(col("doc_id") < PlantMaxId)
-          .agg(count(lit(1)).as("np"))
-        nKeptPlanted.crossJoin(denom)
-          .select(roundSafe(lit(1.0) - col("nkept") / col("np"), 4))
-          .head.getDouble(0)
-      } finally plantedKept.unpersist()
+      val nKeptPlanted = Dedup.dedupNear(d.unionByName(planted(d)),
+          "doc_id", "text", threshold = 0.8)
+        .where(col("doc_id") >= PlantBase)
+        .agg(count(lit(1)).as("nkept"))
+      val denom = d.where(col("doc_id") < PlantMaxId)
+        .agg(count(lit(1)).as("np"))
+      nKeptPlanted.crossJoin(denom)
+        .select(roundSafe(lit(1.0) - col("nkept") / col("np"), 4))
+        .head().getDouble(0)
     }
     Dedup.dedupNear(d, "doc_id", "text", threshold = 0.8)
       .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -428,9 +418,7 @@ object TrainingQueries {
     * recall probes at iters = 2). */
   val qAnnIvf: Q = (s, dir) => {
     val e = embs(s, dir)
-    // persist=false: this query probes the index exactly once
-    val (assigned, centroids) = Similarity.ivfIndex(e, k = 16, iters = 0,
-      persist = false)
+    val (assigned, centroids) = Similarity.ivfIndex(e, k = 16, iters = 0)
     Similarity.ivfTopK(e.where(col("vec_id") < 50), assigned, centroids,
       nprobe = 4, k = 3)
       .select(col("query_id"), col("rank"), col("neighbor_id"),
@@ -705,7 +693,9 @@ object TrainingQueries {
   val qMediaDecode: Q = (s, dir) => {
     implicit val sp: SparkSession = s
     import sp.implicits._
-    val images = docs(s, dir).where(col("doc_id") < 300)
+    // two actions read this frame (repartitionForMedia's byte-count agg +
+    // the decode): encode once (the CurateProbe lesson, SCALING.md round 5)
+    val images = Materialize(docs(s, dir).where(col("doc_id") < 300)
       .select(col("doc_id")).as[Long]
       .mapPartitions { ids =>
         ids.map { id =>
@@ -718,11 +708,7 @@ object TrainingQueries {
           }
           (id, Multimodal.encodeImage(w, h, id, fmt))
         }
-      }.toDF("media_id", "payload")
-      // two actions read this frame (repartitionForMedia's byte-count agg +
-      // the decode) — persist so the encoder runs once, not twice (the
-      // CurateProbe lesson, SCALING.md round 5)
-      .persist()
+      }.toDF("media_id", "payload"))
     val sized = Multimodal.repartitionForMedia(images, "payload", targetMB = 1)
     Multimodal.decodeImageMeta(sized, "media_id", "payload").toDF()
       .select(col("media_id"),
@@ -771,7 +757,8 @@ object TrainingQueries {
   val qAudioDecode: Q = (s, dir) => {
     implicit val sp: SparkSession = s
     import sp.implicits._
-    val clips = docs(s, dir).where(col("doc_id") < 300)
+    // two actions (byte-count agg + decode): encode once
+    val clips = Materialize(docs(s, dir).where(col("doc_id") < 300)
       .select(col("doc_id")).as[Long]
       .mapPartitions { ids =>
         ids.map { id =>
@@ -780,8 +767,7 @@ object TrainingQueries {
           val nf = 50 + (id % 100).toInt
           (id, Multimodal.encodeWav(sr, ch, nf, id))
         }
-      }.toDF("media_id", "payload")
-      .persist()   // two actions (byte-count agg + decode): encode once
+      }.toDF("media_id", "payload"))
     val sized = Multimodal.repartitionForMedia(clips, "payload", targetMB = 1)
     Multimodal.decodeAudioMeta(sized, "media_id", "payload").toDF()
       .select(col("media_id"),
@@ -826,27 +812,24 @@ object TrainingQueries {
     * deterministic split assignment → per-(split, lang) accounting. */
   val qCurate: Q = (s, dir) => {
     val d = docs(s, dir).where(col("doc_id") % 25 =!= 0)
-    // `deduped` feeds both the contamination probe and the final anti-join:
-    // without materialization the whole quality+dedup chain re-ran per
-    // consumer. localCheckpoint runs it once per invocation (eager, in the
-    // timed region; nothing survives the run).
+    // `deduped` feeds both the contamination probe and the final anti-join;
+    // materialized, the quality+dedup chain runs once, not per consumer.
     val quality = d.where(
       TextFunctions.qualityScore(col("text")) > 0.5 &&
         TextFunctions.tokenCount(col("text")) >= 30)
     // keep-best dedup as ONE window over one keyed exchange (r14): the
     // previous exactKeepBest aggregate + left-semi join pair consumed
-    // `quality` twice (which forced a second localCheckpoint of the regex
+    // `quality` twice (which forced a second materialization of the regex
     // gate) and cost an extra aggregate exchange + broadcast build.
     // row_number over (k, n_chars desc, doc_id asc) = 1 keeps exactly the
     // max_by(doc_id, struct(n_chars, -doc_id)) row per group: max n_chars,
     // ties min id.
     val wKeep = Window.partitionBy(col("k"))
       .orderBy(col("n_chars").desc, col("doc_id").asc)
-    val deduped = quality
+    val deduped = Materialize(quality
       .withColumn("k", substring(col("text"), 1, 40))
       .withColumn("__rn", row_number().over(wKeep))
-      .where(col("__rn") === 1).drop("k", "__rn")
-      .localCheckpoint()
+      .where(col("__rn") === 1).drop("k", "__rn"))
     val bench = docs(s, dir).where(col("doc_id") % 25 === 0)
     // 8-token grams: the decontamination window real pipelines use —
     // word-soup corpora share many spurious 3-grams (at sf0.1 EVERY doc

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Materialize
 
 /** Core nested-column operations, Spark-first.
   *
@@ -440,14 +441,12 @@ object NestedOps {
       (packFlat(kept, on, name, sortBy), overflow)
     } else {
       // Non-orderable payload (e.g. a map column): no total order exists.
-      // Rank on a snapshot id and MATERIALIZE the ranking once
-      // (localCheckpoint) so both branches read the same assignment
-      // instead of re-rolling monotonically_increasing_id per plan.
+      // Rank on a snapshot id, materialized so both branches read the same
+      // assignment instead of re-rolling monotonically_increasing_id.
       val base = child.withColumn("__ord", monotonically_increasing_id())
       val w = Window.partitionBy(on.map(col): _*)
         .orderBy(col("__ord").asc)
-      val ranked = base.withColumn("__rn", row_number().over(w))
-        .localCheckpoint()
+      val ranked = Materialize(base.withColumn("__rn", row_number().over(w)))
       val kept = ranked.where(col("__rn") <= maxPerKey)
         .drop("__rn", "__ord")
       val overflow = ranked.where(col("__rn") > maxPerKey)

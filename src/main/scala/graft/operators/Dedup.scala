@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 import graft.functions.TextFunctions._
 
 /** Deduplication operators for training-data pipelines.
@@ -224,45 +225,28 @@ object Dedup {
                           maxIter: Int = 20): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // RDD-handle checkpoint (not Dataset.localCheckpoint) so the cached
-    // edge blocks can be EXPLICITLY unpersisted once consumed: CC runs
-    // inside long batteries/pipelines, and relying on the ContextCleaner
-    // to eventually GC checkpoint blocks lets storage memory accumulate
-    // across queries (pressure that showed up as run-to-run bench noise).
-    val edgeRdd = edges.select(col("a").cast("long"), col("b").cast("long"))
-      .as[(Long, Long)].rdd
-    edgeRdd.localCheckpoint()
-    val nEdges = edgeRdd.count()
-    if (nEdges <= driverMaxEdges) {
-      val parent = collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var root = x
-        while (parent.getOrElse(root, root) != root)
-          root = parent.getOrElse(root, root)
-        var cur = x // path compression
-        while (parent.getOrElse(cur, cur) != root) {
-          val next = parent.getOrElse(cur, cur); parent(cur) = root; cur = next
-        }
-        root
+    val e = Materialize(edges.select(col("a").cast("long"), col("b").cast("long")))
+    if (Materialize.rowCount(e) > driverMaxEdges)
+      return starsFrom(Materialize.superseding(e)(canon(e)), maxIter)
+    val parent = collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var root = x
+      while (parent.getOrElse(root, root) != root)
+        root = parent.getOrElse(root, root)
+      var cur = x // path compression
+      while (parent.getOrElse(cur, cur) != root) {
+        val next = parent.getOrElse(cur, cur); parent(cur) = root; cur = next
       }
-      edgeRdd.collect().foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { // union by min id so component == min reachable id
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
-        parent.getOrElseUpdate(a, find(a)); parent.getOrElseUpdate(b, find(b))
-      }
-      edgeRdd.unpersist(blocking = false)
-      val rows = parent.keys.toSeq.map(v => (v, find(v)))
-      return rows.toDF("v", "component")
+      root
     }
-    // stars' first materialize (eager, inside the call) is the only
-    // consumer of the edge checkpoint — safe to release right after
-    val result =
-      connectedComponentsStars(spark.createDataset(edgeRdd).toDF("a", "b"),
-        maxIter)
-    edgeRdd.unpersist(blocking = false)
-    result
+    e.as[(Long, Long)].collect().foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { // union by min id so component == min reachable id
+        if (ra < rb) parent(rb) = ra else parent(ra) = rb
+      }
+      parent.getOrElseUpdate(a, find(a)); parent.getOrElseUpdate(b, find(b))
+    }
+    parent.keys.toSeq.map(v => (v, find(v))).toDF("v", "component")
   }
 
   /** Distributed CC by alternating large-star/small-star contraction
@@ -274,11 +258,16 @@ object Dedup {
     *
     * Returns (v, component) where component = min id reachable from v. */
   def connectedComponentsStars(edges: DataFrame,
-                               maxIter: Int = 30): DataFrame = {
-    def canon(e: DataFrame) =
-      e.select(least(col("a"), col("b")).as("a"),
-          greatest(col("a"), col("b")).as("b"))
-        .where(col("a") =!= col("b")).distinct()
+                               maxIter: Int = 30): DataFrame =
+    starsFrom(Materialize(canon(edges)), maxIter)
+
+  private def canon(e: DataFrame) =
+    e.select(least(col("a"), col("b")).cast("long").as("a"),
+        greatest(col("a"), col("b")).cast("long").as("b"))
+      .where(col("a") =!= col("b")).distinct()
+
+  /** Star rounds from `first`, canonical edges stored by [[Materialize]]. */
+  private def starsFrom(first: DataFrame, maxIter: Int): DataFrame = {
     // large-star: every neighbor v > u links to m(u) = min(N(u) ∪ {u})
     def largeStar(e: DataFrame): DataFrame = {
       val sym = e.select(col("a").as("u"), col("b").as("v"))
@@ -299,40 +288,19 @@ object Dedup {
         .union(m.select(col("u").as("a"), col("m").as("b")))
         .where(col("a") =!= col("b"))
     }
-    // Materialize a round's edges as a FRESH RDD-backed frame with default
-    // stats. A plain Dataset.localCheckpoint carries the child plan's
-    // sizeInBytes estimate into its LogicalRDD, and each round's joins
-    // MULTIPLY those estimates — after ~10 rounds the compounded BigInt has
-    // millions of digits and Catalyst's stats visitor spends minutes in
-    // BigInteger.multiply (observed: round time 0.7s → 28s). Typed-tuple
-    // round-trip resets the estimate every round.
-    val spark = edges.sparkSession
-    import spark.implicits._
-    def materialize(e: DataFrame)
-        : (DataFrame, org.apache.spark.rdd.RDD[(Long, Long)]) = {
-      val rdd = e.select(col("a").cast("long"), col("b").cast("long"))
-        .as[(Long, Long)].rdd
-      rdd.localCheckpoint()
-      rdd.count() // force materialization; truncates lineage
-      (spark.createDataset(rdd).toDF("a", "b"), rdd)
-    }
-    var (cur, curRdd) = materialize(canon(edges))
     // (count, hash-XOR) signature: one cheap agg per round decides
     // convergence without a set-difference join (XOR can't overflow)
     def sig(e: DataFrame) =
       e.agg(count(lit(1)), expr("bit_xor(xxhash64(a, b))")).head()
+    var cur = first
     var iter = 0
     var done = false
     var curSig = sig(cur)
     while (iter < maxIter && !done) {
-      val (next, nextRdd) = materialize(canon(smallStar(largeStar(cur))))
+      val next = Materialize.superseding(cur)(canon(smallStar(largeStar(cur))))
       val nextSig = sig(next)
       done = nextSig == curSig
-      // the previous round's checkpoint blocks are dead once the next
-      // round is materialized — release them instead of letting 20+
-      // rounds of edge snapshots pile up in storage memory
-      curRdd.unpersist(blocking = false)
-      cur = next; curRdd = nextRdd; curSig = nextSig; iter += 1
+      cur = next; curSig = nextSig; iter += 1
     }
     // The closing select below is ONLY valid at the fixpoint (star forest:
     // every edge is (root=min, member)). A non-converged edge set would
@@ -460,18 +428,12 @@ object Dedup {
   def contaminationBloom(docs: DataFrame, idCol: String, textCol: String,
                          bench: DataFrame, benchTextCol: String,
                          n: Int = 3, fpp: Double = 0.01): DataFrame = {
-    // persisted for the two EAGER uses (sizing count + bloom build), then
-    // released — a session-lifetime pin would accumulate one cache entry
-    // per distinct bench input. The lazy confirm join below recomputes the
-    // gram set once per evaluation: one explode+distinct over the small
-    // bench side, the price of a deterministic cache lifetime.
+    // read eagerly twice (sizing count + bloom build); the lazy confirm join
+    // below recomputes it, one explode+distinct over the small bench side
     val benchGrams = bench.select(
         explode(tokenShingles(col(benchTextCol), n)).as("__g"))
       .distinct()
-    benchGrams.persist()
-    val blob =
-      try gramBloom(benchGrams, fpp)
-      finally benchGrams.unpersist()
+    val blob = Materialize.within(benchGrams)(gramBloom(_, fpp))
     val grams = docs.select(col(idCol),
       explode(tokenShingles(col(textCol), n)).as("__g"))
     grams.where(mightContainGram(blob, col("__g"))) // codegen'd scan gate

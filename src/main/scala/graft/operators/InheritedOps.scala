@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** The inherited-pandas frame verbs whose semantics are NOT the obvious
   * one-liner — tie policies, NaN padding, nest-cell behavior, numpy's
@@ -504,13 +505,10 @@ object InheritedOps {
     }
     val base = nanAsNull(df, Seq(values))
       .where(col(index).isNotNull && col(columns).isNotNull)
-    // the wide frame is consumed twice (the all-null-column counts probe
-    // below AND the final projection) — materialize it once per call;
-    // its size is |index domain| rows × the bounded pivot width, the same
-    // bounded-output contract pivot itself already imposes
-    val wide = base.groupBy(col(index)).pivot(columns)
-      .agg(aggOf(col(values)))
-      .localCheckpoint()
+    // read twice (the all-null-column counts probe below AND the final
+    // projection); |index domain| rows × the bounded pivot width
+    val wide = Materialize(base.groupBy(col(index)).pivot(columns)
+      .agg(aggOf(col(values))))
     val valCols = wide.columns.filterNot(_ == index)
     if (valCols.isEmpty) return wide
     // pivot names columns after DATA values (e.g. "-3") — backtick every
@@ -1542,9 +1540,9 @@ object InheritedOps {
     * order-statistic pattern) — factorize is exactly the verb users
     * point at high-cardinality columns (ids, URLs), where a
     * `row_number` over an unpartitioned window would funnel the whole
-    * domain through one task. The domain-sized codes frame is persisted
-    * (memory-and-disk) so the size probe and the join share one
-    * compute, and is broadcast only when it fits under
+    * domain through one task. The domain-sized codes frame is
+    * materialized, so the size probe and the join share one compute,
+    * and is broadcast only when it fits under
     * `broadcastDomainCap` rows — beyond that the join shuffles both
     * sides on the value, which is the correct 100 TB plan. Uniques are
     * recoverable as `distinct(code, value) ORDER BY code`. */
@@ -1563,11 +1561,10 @@ object InheritedOps {
     // for duplicated orderCol values
     val codedRdd = firstSeen.orderBy(col("__fo"), col(column)).rdd
       .zipWithIndex().map { case (r0, i) => Row(r0.get(0), i) }
-    val codes = df0.sparkSession.createDataFrame(codedRdd,
+    val codes = Materialize(df0.sparkSession.createDataFrame(codedRdd,
         StructType(Seq(firstSeen.schema.fields(0),
-          StructField("code", LongType, nullable = false))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val domain = codes.count()
+          StructField("code", LongType, nullable = false)))))
+    val domain = Materialize.rowCount(codes)
     val codesSide = if (domain <= broadcastDomainCap) broadcast(codes)
                     else codes
     // the join must be null-safe when missing carries its own code

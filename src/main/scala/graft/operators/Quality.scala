@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 import graft.functions.TextFunctions
 
 /** Statistical quality scoring beyond per-row signals: corpus-derived
@@ -57,14 +58,10 @@ object Quality {
   def trainVocab(df: DataFrame, textCol: String,
                  topK: Int): (DataFrame, Double) = {
     require(topK > 0, s"topK must be > 0, got $topK")
-    // persisted across the two actions (total agg + top-K collect), then
-    // released: the returned vocab is a topK-bounded LOCAL relation (it is
-    // broadcast by every consumer anyway), so no cache outlives this call
-    val counts = df.select(
+    // two actions read it; the returned vocab is a topK-bounded LOCAL frame
+    Materialize.within(df.select(
         explode(TextFunctions.tokens(col(textCol))).as("token"))
-      .groupBy(col("token")).agg(count(lit(1)).as("count"))
-      .persist()
-    try {
+      .groupBy(col("token")).agg(count(lit(1)).as("count"))) { counts =>
       val total = counts.agg(sum(col("count")))
         .head().getLong(0).toDouble
       val topk = counts.orderBy(col("count").desc, col("token").asc)
@@ -72,7 +69,7 @@ object Quality {
       val local = df.sparkSession.createDataFrame(
         java.util.Arrays.asList(topk.collect(): _*), topk.schema)
       (local, total)
-    } finally counts.unpersist()
+    }
   }
 
   /** Score documents against a PRE-TRAINED broadcast vocabulary

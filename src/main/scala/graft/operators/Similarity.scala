@@ -127,10 +127,10 @@ object Similarity {
     * column plus the centroid table. All distributed: centroids broadcast
     * (k × dim doubles), assignment narrow, update one groupBy per round.
     * At 100 TB the assigned corpus is written bucketed by __cid so probes
-    * read only nprobe/k of the data. */
+    * read only nprobe/k of the data; a caller probing it many times
+    * materializes it ([[graft.Materialize]]). */
   def ivfIndex(corpus: DataFrame, k: Int, iters: Int = 2,
-               idCol: String = "vec_id", vecCol: String = "embedding",
-               persist: Boolean = true)
+               idCol: String = "vec_id", vecCol: String = "embedding")
       : (DataFrame, Array[(Int, Array[Double])]) = {
     val spark = corpus.sparkSession
     var centroids: Array[(Int, Array[Double])] = corpus
@@ -171,15 +171,7 @@ object Similarity {
       centroids = centroids.map { case (cid, old) =>
         (cid, byId.getOrElse(cid, old)) }
     }
-    // The index is built once and probed many times: persist the assigned
-    // corpus so repeated ivfTopK calls reuse the materialized assignment
-    // instead of re-running the scan + argmin per probe (the k-means itself
-    // already runs only here — centroids are a driver-side array).
-    val assigned = assign(corpus)
-    (if (persist) assigned.persist(
-       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-     else assigned,
-     centroids)
+    (assign(corpus), centroids)
   }
 
   /** Persist an IVF-assigned corpus PARTITIONED BY CELL: probes against the
@@ -281,7 +273,7 @@ object Similarity {
       val sliced = corpus.select(col(idCol),
         slice(col(vecCol), j * sub + 1, sub).as("__sv"))
       val (_, centroids) =
-        ivfIndex(sliced, k, iters, idCol, "__sv", persist = false)
+        ivfIndex(sliced, k, iters, idCol, "__sv")
       centroids.sortBy(_._1).map(_._2)
     }
   }

@@ -122,7 +122,7 @@ object CrossCheck {
         .agg(min(col("component")).as("neighborMin"))
       // The tuple round-trip after the checkpoint drops its sizeInBytes
       // estimate, which iterative joins would compound into huge BigInts
-      // (see Dedup.connectedComponentsStars).
+      // (see graft.Materialize).
       val next = labels.join(candidate, Seq("v"), "left")
         .select(col("v"),
           least(col("component"), coalesce(col("neighborMin"),

@@ -608,7 +608,7 @@ class TrainingOpsSpec extends SparkSpec {
   test("IVF bucketed write: probes prune to the probed cell partitions") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val (assigned, centroids) =
-      Similarity.ivfIndex(e, k = 8, iters = 0, persist = false)
+      Similarity.ivfIndex(e, k = 8, iters = 0)
     val path = "/tmp/ivf_bucketed_spec"
     Similarity.writeIvfBucketed(assigned, path)
     // the written layout is one directory per cell
@@ -664,7 +664,7 @@ class TrainingOpsSpec extends SparkSpec {
     // IVF-PQ: coarse cells prune candidates, ADC ranks the survivors —
     // the identical-code duplicate shares the cell and wins
     val (assigned, centroids) =
-      Similarity.ivfIndex(planted, k = 8, iters = 1, persist = false)
+      Similarity.ivfIndex(planted, k = 8, iters = 1)
     val cellsAndCodes = assigned.select($"vec_id", $"__cid",
       Similarity.pqEncode($"embedding", books).as("__codes"))
     val ivfpq = Similarity.ivfPqTopK(
@@ -715,7 +715,7 @@ class TrainingOpsSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     val books = Similarity.pqTrain(vecs, m = 8, k = 16, iters = 0)
     val (assigned, centroids) =
-      Similarity.ivfIndex(vecs, k = 8, iters = 0, persist = false)
+      Similarity.ivfIndex(vecs, k = 8, iters = 0)
     val dir = "/tmp/graft-test-ivf-pruning"
     assigned.select($"vec_id", $"__cid",
         Similarity.pqEncode($"embedding", books).as("__codes"))
@@ -746,13 +746,9 @@ class TrainingOpsSpec extends SparkSpec {
       planted.where($"vec_id" === 5), assigned, centroids, nprobe = 2, k = 1)
     val top = res.select($"neighbor_id").as[Long].collect()
     assert(top.toSeq == Seq(199L)) // the duplicate lands in the same cell
-    // the index is persisted: repeated probes reuse the materialized
-    // assignment instead of re-running scan + argmin per probe
-    assert(assigned.storageLevel.useMemory || assigned.storageLevel.useDisk)
     val again = Similarity.ivfTopK(
       planted.where($"vec_id" === 5), assigned, centroids, nprobe = 2, k = 1)
     assert(again.select($"neighbor_id").as[Long].collect().toSeq == Seq(199L))
-    assigned.unpersist()
   }
 
   test("paragraph dedup: in-doc keeps first occurrences; global keeps one") {
