@@ -10,7 +10,7 @@ import graft.expressions.{BoundedTopK, DotProductArray, TextMinHash, TextNGramJa
   * [[PackReduce]] groupjoin rewrite.
   *
   * Cluster-wide: `--conf spark.sql.extensions=graft.GraftExtensions` →
-  * `graft_dot`, `graft_minhash`, `graft_simhash64` usable from any SQL.
+  * every function in [[GraftExtensions.builders]] usable from any SQL.
   * Ad-hoc sessions: `GraftExtensions.register(spark)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

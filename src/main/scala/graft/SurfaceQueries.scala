@@ -683,8 +683,9 @@ object SurfaceQueries {
     * group over the first 400 orders of each group (the oracle mirror
     * is a recursive CTE advancing one row per iteration, so the rank
     * cap bounds its depth at every SF — a ≤400-row oracle artifact,
-    * like the documented rank stamps). Library side: one hash
-    * repartition + in-partition sort + streaming mapPartitions. */
+    * like the documented rank stamps). Library side: the shared
+    * `graft.operators.Ewm` kernel in one sorted-group pass (hash
+    * repartition + in-partition sort + streaming mapPartitions). */
   val qEwm: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val o = rd(s, dir, "orders")
@@ -703,7 +704,8 @@ object SurfaceQueries {
     * status group over the first 400 orders of each group — the same
     * rank-capped recursive-CTE oracle artifact as [[qEwm]]; the CTE
     * tracks the weighted sums S1/S2 and weight sums W1/W2 whose closed
-    * form equals the pandas ewmcov recursion, with the
+    * form equals the pandas ewmcov recursion of the shared
+    * `graft.operators.Ewm` kernel, with the
     * W1²/(W1²−W2) debias and the zsqrt guard. span converts through
     * the center-of-mass chain on both sides (1/(1+(span−1)/2) — the
     * same IEEE ops constant-fold in DuckDB). */
@@ -726,8 +728,9 @@ object SurfaceQueries {
     * per status group over the first 400 orders of each group — the
     * same rank-capped recursive-CTE oracle artifact as [[qEwm]]. With
     * both inputs complete (orders has no missing price/custkey) and
-    * adjust=true, the three bias=True kernel instances reduce to
-    * weighted moments: the CTE tracks Sx/Sy/Sxy/Sxx/Syy/W1 and the
+    * adjust=true, the three bias=True `graft.operators.Ewm` kernel
+    * states reduce to weighted moments: the CTE tracks
+    * Sx/Sy/Sxy/Sxx/Syy/W1 and the
     * closed form (Sxy/W1 − mx·my)/√((Sxx/W1 − mx²)(Syy/W1 − my²))
     * equals the kernel recursion; the first row of each group reads
     * missing on both engines (0/0 variance). */
@@ -750,8 +753,9 @@ object SurfaceQueries {
     * stream, per user): closed='both' so the frame is exactly DuckDB's
     * RANGE INTERVAL 1 HOUR PRECEDING — (user_id, ts) is duplicate-free
     * at every SF (probed 2026-08-16), so the position-truncation
-    * subtlety the fuzz family pins never fires here. One keyed
-    * repartition + in-partition sort + streaming deque pass. */
+    * subtlety the fuzz family pins never fires here. Library side: the
+    * shared `graft.operators.TimeWindow` deque kernel in one keyed
+    * sorted-group pass. */
   val qRollingTime: Q = (s, dir) => {
     // events.ts reads as TIMESTAMP_NTZ (µs parquet); the op's
     // cast("timestamp") is instant-preserving under the UTC session tz

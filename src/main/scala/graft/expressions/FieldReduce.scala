@@ -12,10 +12,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * single native kernel loop per row.
   *
   * The HOF formulations these replace (`aggregate`/`transform`/`filter`
-  * chains in NestedOps.elementMean/Sum/Min/Max, NestedExpr.reductionSql,
-  * countNested, aggAllColumns) are interpreted per ELEMENT — every lambda
-  * step pays expression-tree walking, lambda-variable binding and an
-  * intermediate array allocation per pass. One compiled loop per row does
+  * chains in NestedOps.elementMean/Sum/Min/Max, the test-scope
+  * `CrossCheck.reductionSql`, countNested, aggAllColumns) are
+  * interpreted per ELEMENT — every lambda step pays expression-tree
+  * walking, lambda-variable binding and an intermediate array
+  * allocation per pass. One compiled loop per row does
   * the same math in element order, so every produced value is
   * bit-identical to the HOF form (differential spec: FieldReduceSpec).
   *
@@ -40,11 +41,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *    (aggAllColumns skipna semantics) — NaN values are skipped too.
   *  - mean: sum of non-null / count of non-null (NaN participates),
   *    NULL when no values, double.
-  *  - median: exact, matching reductionSql's sorted pick
+  *  - median: exact, matching `CrossCheck.reductionSql`'s sorted pick
   *    `(sv[(n+1)/2] + sv[n/2+1]) / 2` (1-based); NULL when no values.
   *  - std: single fold (n, Σv, Σv²), bias-corrected,
   *    `sqrt(max(0, (q - s²/n)/(n-1)))`, NULL when n ≤ 1 — the same
-  *    accumulation order as the reductionSql fold, so bit-identical.
+  *    accumulation order as the `CrossCheck.reductionSql` fold, so
+  *    bit-identical.
   *    ONE deliberate edge change vs the HOF form: a NULL input array now
   *    yields NULL (consistent with every other op); the old let-binding
   *    accidentally returned 0.0 there (`greatest(0.0, null)` skips nulls).

@@ -29,7 +29,7 @@ import org.apache.spark.sql.types.{ArrayType, StringType, StructType,
   */
 object NestedExpr {
 
-  private def bq(name: String): String = "`" + name.replace("`", "``") + "`"
+  private[graft] def bq(name: String): String = "`" + name.replace("`", "``") + "`"
 
   // -------------------------------------------------------------------------
   // AST classification + SQL rendering (r11). The expression is parsed ONCE
@@ -932,56 +932,9 @@ object NestedExpr {
         s"${reductionAggs.toSeq.sorted.mkString(", ")})")
     // native kernel loop (StructFieldReduce) — one compiled pass per row,
     // bit-identical to the HOF/let-binding SQL it replaces (the SQL form
-    // is kept below as the differential-spec reference: FieldReduceSpec
-    // replays both on fuzzed cells and asserts exact equality)
+    // is the test-scope CrossCheck.reductionSql: FieldReduceSpec replays
+    // both on fuzzed cells and asserts exact equality)
     graft.expressions.native.field_reduce(col(bq(nest)), field, agg)
-  }
-
-  /** The pre-r13 HOF formulation, retained as the semantic REFERENCE for
-    * the native kernel (exercised by FieldReduceSpec's differential
-    * replay, not by the query path). */
-  private[graft] def reductionSql(nest: String, field: String, agg: String): String = {
-    val arr = s"transform(${bq(nest)}, __r -> __r.${bq(field)})"
-    val vals = s"filter($arr, __v -> __v is not null)"
-    def n = s"size($vals)"
-    def sumOf(a: String) = s"aggregate($a, cast(0.0 as double), (__a, __v) -> __a + __v)"
-    // `transform(array(x), __b -> body)[1]` is the SQL let-binding: x is
-    // evaluated ONCE even though body references it many times. Spark does
-    // not CSE through HOF lambdas, so the naive formulation re-ran the
-    // filter chain / fold / sort once per reference (2-3 folds per mean/std
-    // — the repo's SCALING.md no-CSE rule).
-    def let(bound: String, body: String => String): String =
-      s"element_at(transform(array($bound), __b -> ${body("__b")}), 1)"
-    agg match {
-      case "count" => s"cast($n as bigint)"
-      case "sum"   => sumOf(vals)
-      case "min"   => s"array_min($vals)"
-      case "max"   => s"array_max($vals)"
-      case "mean"  => let(vals, v =>
-        s"(case when size($v) = 0 then null else ${sumOf(v)} / size($v) end)")
-      case "median" => let(s"array_sort($vals)", sv =>
-        // divide by double(2), not the literal 2.0: Spark SQL parses 2.0 as
-        // DECIMAL(2,1), which silently promotes integer-field medians to
-        // DECIMAL instead of the double every other reduction returns
-        s"""(case when size($sv) = 0 then null else
-           | (element_at($sv, cast((size($sv) + 1) / 2 as int)) +
-           |  element_at($sv, cast(size($sv) / 2 as int) + 1))
-           |  / cast(2 as double) end)"""
-          .stripMargin.replace("\n", " "))
-      case "std" =>
-        // ONE fold accumulating (n, Σv, Σv²) in a struct: per-element
-        // accumulation order matches the separate folds exactly, so the
-        // derived value is bit-identical to the 3-fold formulation.
-        val acc = s"aggregate($vals, named_struct(" +
-          "'n', cast(0 as bigint), 's', cast(0.0 as double), " +
-          "'q', cast(0.0 as double)), " +
-          "(__a, __v) -> named_struct('n', __a.n + 1, 's', __a.s + __v, " +
-          "'q', __a.q + __v * __v))"
-        let(acc, t =>
-          s"""(case when $t.n <= 1 then null else
-             | sqrt(greatest(0.0, ($t.q - $t.s * $t.s / $t.n)
-             |   / ($t.n - 1))) end)""".stripMargin.replace("\n", " "))
-    }
   }
 
   /** Parse result: rewritten SQL + the nests referenced at element level (in

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Materialize
@@ -654,29 +654,16 @@ object InheritedOps {
     df0.withColumn("rolled", when(gate, agg))
   }
 
-  /** pandas time-based `rolling("2s", closed=)` on a datetime column:
-    * the window covers the trailing duration interval — `closed` pins
-    * the TIME endpoints (pandas offset default 'right' = (t−w, t],
-    * 'both', 'left' = [t−w, t), 'neither') — but the window END is the
-    * current row POSITION: with duplicated timestamps, EARLIER rows
-    * sharing the current timestamp are in, LATER ones are out (pandas
-    * VariableWindowIndexer sets end[i] = i+1; fuzz-caught 2026-08-16 —
-    * a Spark RANGE frame with upper bound 0 wrongly includes all
-    * peers, which is why this is NOT a window aggregate). min_periods
-    * defaults to 1 for offset windows; the gate counts non-missing for
-    * every fn except `count`, whose gate counts rows, like
-    * [[rollingAgg]].
-    *
-    * Execution: the [[ewmPass]] shape — hash-repartition on
-    * `partitionBy`, sort within partitions by (keys, ts, tieCol), one
-    * streaming pass holding ONLY the in-window rows in a deque (O(W)
-    * state, W = rows per window duration; evict-front is O(1)
-    * amortized). Aggregates recompute over the deque per row — the
-    * same O(n·W) class as pandas' own variable-window kernels, exact
-    * for order statistics. `tieCol` pins the positional order of
-    * timestamp peers (pandas row position). The unpartitioned form is
-    * a single-partition sort — small frames only, same contract as
-    * [[shiftRows]]. */
+  /** pandas time-based `rolling("2s", closed=)` on a datetime column,
+    * appended as `rolled`: the [[TimeWindow]] kernel (its scaladoc pins
+    * `closed`, the position-truncated window end and the min_periods
+    * gates; min_periods defaults to 1 for offset windows). The window
+    * end is the current row POSITION, which a Spark RANGE frame with
+    * upper bound 0 gets wrong (it includes all timestamp peers;
+    * fuzz-caught 2026-08-16), so this is NOT a window aggregate: it runs
+    * as one [[sortedGroupPass]] ordered by (ts, `tieCol`), `tieCol`
+    * pinning the positional order of timestamp peers (pandas row
+    * position). */
   def rollingTimeAgg(df: DataFrame, column: String, fn: String,
                      windowMicros: Long, tsCol: String,
                      tieCol: String,
@@ -684,119 +671,15 @@ object InheritedOps {
                      partitionBy: Seq[String] = Nil,
                      closed: String = "right",
                      q: Double = 0.5): DataFrame = {
-    require(windowMicros > 0, s"window must be positive, got $windowMicros")
-    require(Seq("mean", "sum", "min", "max", "std", "var", "count",
-        "median", "quantile").contains(fn),
-      s"fn must be mean|sum|min|max|std|var|count|median|quantile, got '$fn'")
-    require(Seq("right", "both", "left", "neither").contains(closed),
-      s"closed must be right|both|left|neither, got '$closed'")
-    require(fn != "quantile" || (q >= 0 && q <= 1),
-      s"quantile must be in [0, 1], got $q")
+    val window = TimeWindow(windowMicros, fn, minPeriods, closed, q)
     val df0 = nanAsNull(df, Seq(column))
       .withColumn("__t", unix_micros(col(tsCol).cast("timestamp")))
-    val sorted =
-      if (partitionBy.nonEmpty)
-        df0.repartition(partitionBy.map(col): _*)
-          .sortWithinPartitions(
-            (partitionBy ++ Seq("__t", tieCol)).map(col): _*)
-      else df0.coalesce(1)
-        .sortWithinPartitions(col("__t"), col(tieCol))
-    val schema = sorted.schema
-    val vIdx = schema.fieldIndex(column)
-    val tIdx = schema.fieldIndex("__t")
-    val keyIdx = partitionBy.map(schema.fieldIndex)
-    val includeLow = closed == "both" || closed == "left" // t−w itself in
-    val excludeCur = closed == "left" || closed == "neither" // t_i out
-    val isCount = fn == "count"
-    val qq = if (fn == "median") 0.5 else q
-    val outRdd = sorted.rdd.mapPartitions { it =>
-      var curKey: Seq[Any] = null
-      var buf: scala.collection.mutable.ArrayDeque[(Long, Double, Boolean)] =
-        null
-      it.map { row =>
-        val key = keyIdx.map(row.get)
-        if (buf == null || key != curKey) { // new group: fresh window
-          curKey = key
-          buf = new scala.collection.mutable.ArrayDeque
-        }
-        val t = row.getLong(tIdx)
-        val present = !row.isNullAt(vIdx)
-        val v = if (present)
-          row.get(vIdx).asInstanceOf[Number].doubleValue() else Double.NaN
-        buf.append((t, v, present))
-        val lowBound = t - windowMicros
-        while (buf.nonEmpty &&
-          (if (includeLow) buf.head._1 < lowBound
-           else buf.head._1 <= lowBound)) buf.removeHead()
-        // timestamp peers of t form a suffix of the (t, tie)-sorted
-        // buffer; the open-at-t variants drop that whole suffix
-        var m = buf.length
-        if (excludeCur) while (m > 0 && buf(m - 1)._1 == t) m -= 1
-        var rows = 0
-        var nonNa = 0
-        var sum = 0.0
-        var mn = Double.PositiveInfinity
-        var mx = Double.NegativeInfinity
-        var i = 0
-        while (i < m) {
-          val e = buf(i)
-          rows += 1
-          if (e._3) {
-            nonNa += 1
-            sum += e._2
-            if (e._2 < mn) mn = e._2
-            if (e._2 > mx) mx = e._2
-          }
-          i += 1
-        }
-        val gate = if (isCount) rows else nonNa
-        val out: Any =
-          if (gate < minPeriods) null
-          else fn match {
-            case "count" => nonNa.toDouble
-            case "sum"   => sum
-            case "mean"  => if (nonNa == 0) null else sum / nonNa
-            case "min"   => if (nonNa == 0) null else mn
-            case "max"   => if (nonNa == 0) null else mx
-            case "std" | "var" =>
-              if (nonNa < 2) null
-              else {
-                val mu = sum / nonNa
-                var s2 = 0.0
-                var j = 0
-                while (j < m) {
-                  val e = buf(j)
-                  if (e._3) { val d = e._2 - mu; s2 += d * d }
-                  j += 1
-                }
-                val vv = s2 / (nonNa - 1)
-                if (fn == "std") math.sqrt(vv) else vv
-              }
-            case _ => // median | quantile: exact linear interpolation
-              if (nonNa == 0) null
-              else {
-                val arr = new Array[Double](nonNa)
-                var j = 0
-                var p = 0
-                while (j < m) {
-                  val e = buf(j)
-                  if (e._3) { arr(p) = e._2; p += 1 }
-                  j += 1
-                }
-                java.util.Arrays.sort(arr)
-                val vi = qq * (nonNa - 1)
-                val lo = math.floor(vi).toInt
-                val g = vi - lo
-                if (g == 0) arr(lo)
-                else arr(lo) + g * (arr(lo + 1) - arr(lo))
-              }
-          }
-        org.apache.spark.sql.Row.fromSeq(row.toSeq :+ out)
-      }
-    }
-    df0.sparkSession.createDataFrame(outRdd,
-        schema.add("rolled", org.apache.spark.sql.types.DoubleType))
-      .drop("__t")
+    val vIdx = df0.schema.fieldIndex(column)
+    val tIdx = df0.schema.fieldIndex("__t")
+    sortedGroupPass(df0, partitionBy, Seq("__t", tieCol), "rolled") { () =>
+      val s = TimeWindow.State()
+      row => window.push(s, row.getLong(tIdx), cell(row, vIdx))
+    }.drop("__t")
   }
 
   /** pandas `interpolate()` (method='linear', the default forward
@@ -1070,223 +953,63 @@ object InheritedOps {
   }
 
   /** pandas `ewm(alpha, adjust=, ignore_na=, min_periods=).mean()`:
-    * exponentially-weighted mean along `orderCol`, appended as `ewm`.
-    * This is a genuinely RECURSIVE accumulation (y depends on y_prev),
-    * inexpressible as a Spark window aggregate without an O(n²) frame
-    * or overflowing (1−α)^(−j) rescaling — so it runs as the documented
-    * last-resort shape: hash-repartition on `partitionBy`, sort WITHIN
-    * partitions, one streaming mapPartitions pass with O(1) state per
-    * group (the classic secondary-sort pattern; no global sort, no
-    * group materialization). The loop mirrors pandas' ewm kernel
-    * exactly: old_wt decays by (1−α) per ROW after the first
-    * observation (per OBSERVATION when ignore_na=true), a present
-    * value folds in with weight 1 (adjust=true) or α (adjust=false,
-    * old_wt renormalized to 1), missing positions CARRY the running
-    * mean forward, and rows before `minPeriods` observations read
-    * missing. The unpartitioned form is a single-partition sort —
-    * small frames only, same contract as [[shiftRows]]. */
+    * exponentially-weighted mean along `orderCol`, appended as `ewm`. The
+    * [[Ewm]] kernel's running mean: missing positions carry it forward
+    * and rows before `minPeriods` observations read missing. A genuinely
+    * RECURSIVE accumulation (y depends on y_prev), so it runs as one
+    * [[sortedGroupPass]], not a window aggregate. */
   def ewmMean(df: DataFrame, column: String, alpha: Double,
               orderCol: String, partitionBy: Seq[String] = Nil,
               adjust: Boolean = true, ignoreNa: Boolean = false,
-              minPeriods: Int = 1): DataFrame = {
-    require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
-    val oldWtFactor = 1.0 - alpha
-    val newWt = if (adjust) 1.0 else alpha
-    ewmPass(nanAsNull(df, Seq(column)), column, orderCol, partitionBy) {
-      () =>
-        var weightedAvg = Double.NaN
-        var oldWt = 1.0
-        var nobs = 0L
-        (present, cur) => {
-          if (present) nobs += 1
-          if (!weightedAvg.isNaN) {
-            if (present || !ignoreNa) {
-              oldWt *= oldWtFactor
-              if (present) {
-                if (weightedAvg != cur)
-                  weightedAvg =
-                    (oldWt * weightedAvg + newWt * cur) / (oldWt + newWt)
-                if (adjust) oldWt += newWt else oldWt = 1.0
-              }
-            }
-          } else if (present) weightedAvg = cur
-          if (nobs >= minPeriods && !weightedAvg.isNaN) weightedAvg
-          else null
-        }
-    }
-  }
+              minPeriods: Int = 1): DataFrame =
+    ewmColumn(df, column, orderCol, partitionBy,
+      Ewm(alpha, adjust, ignoreNa), "mean", minPeriods, bias = false)
 
   /** pandas `ewm(...).var()` / `.std()`: exponentially-weighted sample
-    * variance along `orderCol`, appended as `ewm`. Same execution shape
-    * and group-state contract as [[ewmMean]]; the loop replays pandas'
-    * `ewmcov` kernel (aggregations.pyx) with x == y: the running mean
-    * updates exactly like the mean kernel, the running covariance folds
-    * each observation in against the UPDATED mean, and the debias factor
-    * is W1²/(W1²−W2) over the running sum-of-weights W1 and
-    * sum-of-squared-weights W2 (both decay by (1−α) resp. (1−α)² per
-    * step and renormalize by the total weight when adjust=false). A
-    * non-positive debias denominator (a single effective observation)
-    * reads missing; pandas floors min_periods at 1 for var/std. std is
-    * pandas `zsqrt`: sqrt of the variance with a negative rounding
-    * residue mapped to 0.0, not NaN. Kernel verified bit-exact against
-    * pandas 2.2.2 on 26k random draws (probe 2026-08-16) and replayed
-    * by the op-fuzz `ewm` family. */
+    * variance along `orderCol`, appended as `ewm` — the [[Ewm]] kernel
+    * stepped with x == y, read through [[Ewm.State.covariance]] (pandas
+    * floors min_periods at 1 for var/std); std is pandas `zsqrt`. Kernel
+    * verified bit-exact against pandas 2.2.2 on 26k random draws (probe
+    * 2026-08-16) and replayed by the op-fuzz `ewm` family. Same
+    * execution as [[ewmMean]]. */
   def ewmVar(df: DataFrame, column: String, alpha: Double,
              orderCol: String, partitionBy: Seq[String] = Nil,
              adjust: Boolean = true, ignoreNa: Boolean = false,
              minPeriods: Int = 1, bias: Boolean = false,
-             std: Boolean = false): DataFrame = {
-    require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
-    val minp = math.max(minPeriods, 1)
-    val oldWtFactor = 1.0 - alpha
-    val newWt = if (adjust) 1.0 else alpha
-    ewmPass(nanAsNull(df, Seq(column)), column, orderCol, partitionBy) {
-      () =>
-        var meanX = Double.NaN
-        var cov = 0.0
-        var sumWt = 1.0
-        var sumWt2 = 1.0
-        var oldWt = 1.0
-        var nobs = 0L
-        var firstRow = true
-        (present, cur) => {
-          if (present) nobs += 1
-          if (firstRow) {
-            firstRow = false
-            if (present) meanX = cur
-          } else if (!meanX.isNaN) {
-            if (present || !ignoreNa) {
-              sumWt *= oldWtFactor
-              sumWt2 *= oldWtFactor * oldWtFactor
-              oldWt *= oldWtFactor
-              if (present) {
-                val oldMean = meanX
-                if (meanX != cur)
-                  meanX = (oldWt * oldMean + newWt * cur) / (oldWt + newWt)
-                cov = (oldWt * (cov + (oldMean - meanX) * (oldMean - meanX)) +
-                  newWt * ((cur - meanX) * (cur - meanX))) / (oldWt + newWt)
-                sumWt += newWt
-                sumWt2 += newWt * newWt
-                oldWt += newWt
-                if (!adjust) {
-                  sumWt /= oldWt
-                  sumWt2 /= oldWt * oldWt
-                  oldWt = 1.0
-                }
-              }
-            }
-          } else if (present) meanX = cur
-          val v: Double =
-            if (nobs < minp) Double.NaN
-            else if (bias) cov
-            else {
-              val num = sumWt * sumWt
-              val den = num - sumWt2
-              if (den > 0) (num / den) * cov else Double.NaN
-            }
-          val out = if (std && !v.isNaN) { // pandas zsqrt
-            if (v < 0) 0.0 else math.sqrt(v)
-          } else v
-          if (out.isNaN) null else out
-        }
-    }
-  }
+             std: Boolean = false): DataFrame =
+    ewmColumn(df, column, orderCol, partitionBy,
+      Ewm(alpha, adjust, ignoreNa), if (std) "std" else "var", minPeriods,
+      bias)
 
   /** pandas `ewm(alpha, ignore_na=, min_periods=).sum()` along
-    * `orderCol`, appended as `ewm` — the UNNORMALIZED ewm kernel
-    * (pandas' normalize=False path): after the first observation the
-    * running sum decays by (1−α) per ROW (per OBSERVATION under
-    * ignore_na) and a present value adds in; a missing position
-    * OUTPUTS the decayed sum (unlike mean, which carries), and rows
-    * before the first observation read missing. pandas raises
-    * NotImplementedError for adjust=False sum, so there is no adjust
-    * parameter. Kernel replicated bit-exact vs pandas 2.2.2 on 8,083
-    * probe cells (2026-08-17). Same execution shape as [[ewmMean]]. */
+    * `orderCol`, appended as `ewm` — the [[Ewm]] kernel's UNNORMALIZED
+    * sum (pandas' normalize=False path): a missing position OUTPUTS the
+    * decayed sum (unlike mean, which carries), and rows before the first
+    * observation read missing. pandas raises NotImplementedError for
+    * adjust=False sum, so there is no adjust parameter. Kernel replicated
+    * bit-exact vs pandas 2.2.2 on 8,083 probe cells (2026-08-17). Same
+    * execution as [[ewmMean]]. */
   def ewmSum(df: DataFrame, column: String, alpha: Double,
              orderCol: String, partitionBy: Seq[String] = Nil,
-             ignoreNa: Boolean = false, minPeriods: Int = 1): DataFrame = {
-    require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
-    val oldWtFactor = 1.0 - alpha
-    ewmPass(nanAsNull(df, Seq(column)), column, orderCol, partitionBy) {
-      () =>
-        var w = Double.NaN
-        var nobs = 0L
-        var started = false
-        var firstRow = true
-        (present, cur) => {
-          if (present) nobs += 1
-          if (firstRow) {
-            firstRow = false
-            if (present) { w = cur; started = true }
-          } else if (started) {
-            if (present || !ignoreNa) {
-              w *= oldWtFactor
-              if (present) w += cur
-            }
-          } else if (present) { w = cur; started = true }
-          if (nobs >= minPeriods && started) w else null
-        }
-    }
-  }
+             ignoreNa: Boolean = false, minPeriods: Int = 1): DataFrame =
+    ewmColumn(df, column, orderCol, partitionBy,
+      Ewm(alpha, adjust = true, ignoreNa), "sum", minPeriods, bias = false)
 
-  /** One pandas `ewmcov` kernel instance (aggregations.pyx) — the
-    * two-series generalization of [[ewmVar]]'s accumulator: an
-    * observation is a row where BOTH inputs are present; the two
-    * running means update like the mean kernel and the covariance
-    * folds against the UPDATED means; weight sums debias as
-    * W1²/(W1²−W2). Plain mutable class so [[ewmCov]] can run three
-    * instances (cov, var_x, var_y) in one streaming pass. */
-  private final class EwmCovState(alpha: Double, adjust: Boolean,
-                                  ignoreNa: Boolean) {
-    private val oldWtFactor = 1.0 - alpha
-    private val newWt = if (adjust) 1.0 else alpha
-    private var meanX = Double.NaN
-    private var meanY = Double.NaN
-    private var cov = 0.0
-    private var sumWt = 1.0
-    private var sumWt2 = 1.0
-    private var oldWt = 1.0
-    private var nobs = 0L
-    private var firstRow = true
-    def step(xp: Boolean, x: Double, yp: Boolean, y: Double): Unit = {
-      val isObs = xp && yp
-      if (firstRow) {
-        firstRow = false
-        if (isObs) { nobs = 1; meanX = x; meanY = y }
-        return
+  /** One ewm statistic of one column (`Ewm.reader`'s `stat`). */
+  private def ewmColumn(df: DataFrame, column: String, orderCol: String,
+                        partitionBy: Seq[String], ewm: Ewm, stat: String,
+                        minPeriods: Int, bias: Boolean): DataFrame = {
+    val read = ewm.reader(stat, minPeriods, bias)
+    val df0 = nanAsNull(df, Seq(column))
+    val idx = df0.schema.fieldIndex(column)
+    sortedGroupPass(df0, partitionBy, Seq(orderCol), "ewm") { () =>
+      val s = Ewm.State()
+      row => {
+        val x = cell(row, idx)
+        ewm.step(s, !x.isNaN, x, !x.isNaN, x)
+        nullIfNaN(read(s))
       }
-      if (isObs) nobs += 1
-      if (!meanX.isNaN) {
-        if (isObs || !ignoreNa) {
-          sumWt *= oldWtFactor
-          sumWt2 *= oldWtFactor * oldWtFactor
-          oldWt *= oldWtFactor
-          if (isObs) {
-            val omx = meanX; val omy = meanY
-            if (meanX != x) meanX = (oldWt * omx + newWt * x) / (oldWt + newWt)
-            if (meanY != y) meanY = (oldWt * omy + newWt * y) / (oldWt + newWt)
-            cov = ((oldWt * (cov + (omx - meanX) * (omy - meanY))) +
-              newWt * ((x - meanX) * (y - meanY))) / (oldWt + newWt)
-            sumWt += newWt
-            sumWt2 += newWt * newWt
-            oldWt += newWt
-            if (!adjust) {
-              sumWt /= oldWt
-              sumWt2 /= oldWt * oldWt
-              oldWt = 1.0
-            }
-          }
-        }
-      } else if (isObs) { meanX = x; meanY = y }
     }
-    def value(minp: Int, bias: Boolean): Double =
-      if (nobs < minp) Double.NaN
-      else if (bias) cov
-      else {
-        val num = sumWt * sumWt
-        val den = num - sumWt2
-        if (den > 0) (num / den) * cov else Double.NaN
-      }
   }
 
   /** pandas `ewm(...).cov(other, bias=)` / `.corr(other)` along
@@ -1295,7 +1018,7 @@ object InheritedOps {
     * alpha rides pandas' alpha→com→alpha round-trip — callers who
     * start from a raw alpha should pass
     * `ewmAlphaFromCom((1-α)/α)`):
-    *  - `cov`: ONE ewmcov instance over the two columns — an
+    *  - `cov`: ONE [[Ewm]] kernel over the two columns — an
     *    observation is a row where BOTH are present; a half-missing
     *    row decays weights (under ignore_na=false) but moves nothing.
     *  - `corr`: the inputs are masked to the COMMON present pattern
@@ -1303,82 +1026,39 @@ object InheritedOps {
     *    covariance nor either variance — pandas' own x-masked
     *    `_cov(x,x)` would say otherwise, but the executed reference
     *    freezes on half-missing rows, and the probe is the contract),
-    *    then cov/var_x/var_y run as three bias=True instances in the
+    *    then cov/var_x/var_y run as three bias=True kernel states in the
     *    same pass and the output is cov/zsqrt(var_x·var_y), missing
     *    when the denominator is 0 or missing (a 0 denominator forces
     *    cov = 0, so no ±inf branch exists).
-    * Same execution shape and contracts as [[ewmMean]]. */
+    * Same execution as [[ewmMean]]. */
   def ewmCov(df: DataFrame, xCol: String, yCol: String, alpha: Double,
              orderCol: String, partitionBy: Seq[String] = Nil,
              adjust: Boolean = true, ignoreNa: Boolean = false,
              minPeriods: Int = 1, bias: Boolean = false,
              corr: Boolean = false): DataFrame = {
-    require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
-    val minp = math.max(minPeriods, 1)
-    ewmPass2(nanAsNull(df, Seq(xCol, yCol)), xCol, yCol, orderCol,
-        partitionBy) { () =>
-      if (!corr) {
-        val c = new EwmCovState(alpha, adjust, ignoreNa)
-        (xp, x, yp, y) => {
-          c.step(xp, x, yp, y)
-          val v = c.value(minp, bias)
-          if (v.isNaN) null else v
-        }
-      } else {
-        val c = new EwmCovState(alpha, adjust, ignoreNa)
-        val vx = new EwmCovState(alpha, adjust, ignoreNa)
-        val vy = new EwmCovState(alpha, adjust, ignoreNa)
-        (xp, x, yp, y) => {
-          val obs = xp && yp
-          c.step(obs, x, obs, y)
-          vx.step(obs, x, obs, x)
-          vy.step(obs, y, obs, y)
-          val prod = vx.value(minp, bias = true) * vy.value(minp, bias = true)
-          val den = if (prod.isNaN) prod
-                    else if (prod < 0) 0.0 else math.sqrt(prod) // zsqrt
-          val num = c.value(minp, bias = true)
-          val v = if (den.isNaN || den == 0.0) Double.NaN else num / den
-          if (v.isNaN) null else v
-        }
+    val ewm = Ewm(alpha, adjust, ignoreNa)
+    val df0 = nanAsNull(df, Seq(xCol, yCol))
+    val xIdx = df0.schema.fieldIndex(xCol)
+    val yIdx = df0.schema.fieldIndex(yCol)
+    sortedGroupPass(df0, partitionBy, Seq(orderCol), "ewm") { () =>
+      val c = Ewm.State()
+      val vx = Ewm.State()
+      val vy = Ewm.State()
+      row => {
+        val x = cell(row, xIdx)
+        val y = cell(row, yIdx)
+        val obs = !x.isNaN && !y.isNaN
+        ewm.step(c, obs, x, obs, y)
+        nullIfNaN(if (!corr) c.covariance(minPeriods, bias) else {
+          ewm.step(vx, obs, x, obs, x)
+          ewm.step(vy, obs, y, obs, y)
+          val den = Ewm.zsqrt(vx.covariance(minPeriods, bias = true) *
+            vy.covariance(minPeriods, bias = true))
+          if (den == 0.0) Double.NaN
+          else c.covariance(minPeriods, bias = true) / den
+        })
       }
     }
-  }
-
-  /** Two-column variant of [[ewmPass]]: same secondary-sort shape, the
-    * fold receives (xPresent, x, yPresent, y) per row. */
-  private def ewmPass2(df0: DataFrame, xCol: String, yCol: String,
-                       orderCol: String, partitionBy: Seq[String])
-                      (makeState: () => (Boolean, Double, Boolean, Double) => Any)
-      : DataFrame = {
-    val sorted =
-      if (partitionBy.nonEmpty)
-        df0.repartition(partitionBy.map(col): _*)
-          .sortWithinPartitions((partitionBy :+ orderCol).map(col): _*)
-      else df0.coalesce(1).sortWithinPartitions(col(orderCol))
-    val schema = sorted.schema
-    val xIdx = schema.fieldIndex(xCol)
-    val yIdx = schema.fieldIndex(yCol)
-    val keyIdx = partitionBy.map(schema.fieldIndex)
-    val outRdd = sorted.rdd.mapPartitions { it =>
-      var curKey: Seq[Any] = null
-      var step: (Boolean, Double, Boolean, Double) => Any = null
-      it.map { row =>
-        val key = keyIdx.map(row.get)
-        if (step == null || key != curKey) { // new group: fresh state
-          curKey = key
-          step = makeState()
-        }
-        val xp = !row.isNullAt(xIdx)
-        val yp = !row.isNullAt(yIdx)
-        val x = if (xp)
-          row.get(xIdx).asInstanceOf[Number].doubleValue() else Double.NaN
-        val y = if (yp)
-          row.get(yIdx).asInstanceOf[Number].doubleValue() else Double.NaN
-        org.apache.spark.sql.Row.fromSeq(row.toSeq :+ step(xp, x, yp, y))
-      }
-    }
-    df0.sparkSession.createDataFrame(outRdd,
-      schema.add("ewm", org.apache.spark.sql.types.DoubleType))
   }
 
   /** pandas' ewm parameterizations, replaying its exact float chain:
@@ -1404,47 +1084,45 @@ object InheritedOps {
     ewmAlphaFromCom(1.0 / decay - 1.0)
   }
 
-  /** The secondary-sort plumbing shared by the ewm kernels: a genuinely
-    * RECURSIVE accumulation (y depends on y_prev) is inexpressible as a
-    * Spark window aggregate without an O(n²) frame or overflowing
-    * (1−α)^(−j) rescaling — so it runs as the documented last-resort
-    * shape: hash-repartition on `partitionBy`, sort WITHIN partitions,
-    * one streaming mapPartitions pass with O(1) state per group (no
-    * global sort, no group materialization). `makeState` builds a fresh
-    * per-group fold; each call receives (present, value) and returns
-    * the appended `ewm` cell. The unpartitioned form is a
-    * single-partition sort — small frames only, same contract as
-    * [[shiftRows]]. */
-  private def ewmPass(df0: DataFrame, column: String, orderCol: String,
-                      partitionBy: Seq[String])
-                     (makeState: () => (Boolean, Double) => Any)
-      : DataFrame = {
+  /** The secondary-sort pass behind the ewm and time-rolling verbs, for
+    * per-row state that a Spark window aggregate cannot carry:
+    * hash-repartition on `partitionBy`, sort WITHIN partitions by
+    * (`partitionBy`, `orderBy`), one streaming mapPartitions pass (no
+    * global sort, no group materialization). `newGroup` builds a fresh
+    * per-group fold; each call returns the row's appended DOUBLE `outCol`
+    * cell. The unpartitioned form is a single-partition sort — small
+    * frames only, same contract as [[shiftRows]]. */
+  private def sortedGroupPass(df0: DataFrame, partitionBy: Seq[String],
+                              orderBy: Seq[String], outCol: String)
+                             (newGroup: () => Row => Any): DataFrame = {
     val sorted =
       if (partitionBy.nonEmpty)
         df0.repartition(partitionBy.map(col): _*)
-          .sortWithinPartitions((partitionBy :+ orderCol).map(col): _*)
-      else df0.coalesce(1).sortWithinPartitions(col(orderCol))
-    val schema = sorted.schema
-    val vIdx = schema.fieldIndex(column)
-    val keyIdx = partitionBy.map(schema.fieldIndex)
+          .sortWithinPartitions((partitionBy ++ orderBy).map(col): _*)
+      else df0.coalesce(1).sortWithinPartitions(orderBy.map(col): _*)
+    val keyIdx = partitionBy.map(df0.schema.fieldIndex)
     val outRdd = sorted.rdd.mapPartitions { it =>
       var curKey: Seq[Any] = null
-      var step: (Boolean, Double) => Any = null
+      var fold: Row => Any = null
       it.map { row =>
         val key = keyIdx.map(row.get)
-        if (step == null || key != curKey) { // new group: fresh state
+        if (fold == null || key != curKey) { // new group: fresh state
           curKey = key
-          step = makeState()
+          fold = newGroup()
         }
-        val present = !row.isNullAt(vIdx)
-        val cur = if (present)
-          row.get(vIdx).asInstanceOf[Number].doubleValue() else Double.NaN
-        org.apache.spark.sql.Row.fromSeq(row.toSeq :+ step(present, cur))
+        Row.fromSeq(row.toSeq :+ fold(row))
       }
     }
     df0.sparkSession.createDataFrame(outRdd,
-      schema.add("ewm", org.apache.spark.sql.types.DoubleType))
+      df0.schema.add(outCol, org.apache.spark.sql.types.DoubleType))
   }
+
+  /** A numeric cell as a double, NaN when missing. */
+  private def cell(row: Row, i: Int): Double =
+    if (row.isNullAt(i)) Double.NaN
+    else row.get(i).asInstanceOf[Number].doubleValue()
+
+  private def nullIfNaN(v: Double): Any = if (v.isNaN) null else v
 
   /** pandas `pd.crosstab(row, col, margins=)`: the count matrix of two
     * key columns — rows where EITHER key is missing drop (pandas
@@ -1549,7 +1227,6 @@ object InheritedOps {
   def factorizeCodes(df: DataFrame, column: String, orderCol: String,
                      useNaSentinel: Boolean = true,
                      broadcastDomainCap: Long = 1000000L): DataFrame = {
-    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val df0 = nanAsNull(df, Seq(column))
     val pool = if (useNaSentinel) df0.where(col(column).isNotNull)

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.operators.{Ewm, TimeWindow}
 
 /** Structured Streaming surface — net-new relative to the reference (which
   * has no streaming at all, SURVEY.md §2.12), designed so the nested data
@@ -249,206 +250,81 @@ object StreamingOps {
 
   case class EwmIn(key: Long, seq: Long, value: Option[Double])
   case class EwmOut(key: Long, seq: Long, ewm: Option[Double])
-  case class EwmStreamState(mean: Double, cov: Double, sumWt: Double,
-                            sumWt2: Double, oldWt: Double, nobs: Long)
 
-  /** Streaming exponentially-weighted mean/var/std: the batch ewm kernel
-    * (`InheritedOps.ewmMean`/`ewmVar` — pandas' ewm/ewmcov recurrences) is
-    * already a left fold with O(1) state, so it lifts directly onto
-    * `flatMapGroupsWithState`: per-key state carries (mean, cov, W1, W2,
-    * old_wt, nobs) across micro-batches and each input row emits exactly
-    * one output row in Append mode. Within a micro-batch the group's rows
-    * are sorted by `seq`; ACROSS batches the kernel is order-sensitive by
-    * nature (y depends on y_prev), so the contract is the usual streaming
-    * one: a key's rows must not arrive in an earlier batch than a
-    * lower-`seq` row — parity with the batch verbs under that contract is
-    * spec-pinned (StreamFuzzSpec, seeded multi-batch splits). State is
-    * O(1) per key and never times out (an ewm over an unbounded stream is
-    * a running statistic, not a window); bound the key space or add an
-    * eviction policy upstream if keys churn. */
+  /** Streaming exponentially-weighted mean/var/std/sum: the batch verbs'
+    * [[Ewm]] kernel (`InheritedOps.ewmMean`/`ewmVar`/`ewmSum`) is a left
+    * fold with O(1) state, so it lifts directly onto
+    * `flatMapGroupsWithState`: the per-key state is the kernel's
+    * [[Ewm.State]], carried across micro-batches, and each input row
+    * emits exactly one output row in Append mode. Within a micro-batch
+    * the group's rows are sorted by `seq`; ACROSS batches the kernel is
+    * order-sensitive by nature (y depends on y_prev), so the contract is
+    * the usual streaming one: a key's rows must not arrive in an earlier
+    * batch than a lower-`seq` row — parity with the batch verbs under
+    * that contract is spec-pinned (StreamFuzzSpec, seeded multi-batch
+    * splits). State is O(1) per key and never times out (an ewm over an
+    * unbounded stream is a running statistic, not a window); bound the
+    * key space or add an eviction policy upstream if keys churn. */
   def ewmStream(events: Dataset[EwmIn], alpha: Double,
                 stat: String = "mean", adjust: Boolean = true,
                 ignoreNa: Boolean = false, minPeriods: Int = 1,
                 bias: Boolean = false)
                (implicit spark: SparkSession): Dataset[EwmOut] = {
     import spark.implicits._
-    require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
-    require(Set("mean", "var", "std", "sum")(stat),
-      s"stat must be mean|var|std|sum, got $stat")
-    // pandas parity: ewm.sum raises NotImplementedError for adjust=False
-    require(stat != "sum" || adjust, "sum is not implemented with adjust=false")
-    val oldWtFactor = 1.0 - alpha
-    val newWt = if (adjust) 1.0 else alpha
-    val minp = if (stat == "mean") minPeriods else math.max(minPeriods, 1)
+    val ewm = Ewm(alpha, adjust, ignoreNa)
+    val read = ewm.reader(stat, minPeriods, bias)
     events.groupByKey(_.key)
-      .flatMapGroupsWithState[EwmStreamState, EwmOut](
+      .flatMapGroupsWithState[Ewm.State, EwmOut](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, rows: Iterator[EwmIn], state: GroupState[EwmStreamState]) =>
-          var s = state.getOption.getOrElse(
-            EwmStreamState(Double.NaN, 0.0, 1.0, 1.0, 1.0, 0L))
-          val out = Seq.newBuilder[EwmOut]
-          rows.toSeq.sortBy(_.seq).foreach { e =>
-            val present = e.value.exists(v => !v.isNaN)
-            val cur = if (present) e.value.get else Double.NaN
-            var mean = s.mean; var cov = s.cov
-            var sumWt = s.sumWt; var sumWt2 = s.sumWt2
-            var oldWt = s.oldWt; var nobs = s.nobs
-            if (present) nobs += 1
-            if (stat == "sum") {
-              // unnormalized kernel (InheritedOps.ewmSum): decay per
-              // row (per obs under ignore_na) after start, add when
-              // present; `mean` carries the running sum, NaN = unstarted
-              if (!mean.isNaN) {
-                if (present || !ignoreNa) {
-                  mean *= oldWtFactor
-                  if (present) mean += cur
-                }
-              } else if (present) mean = cur
-            } else if (!mean.isNaN) {
-              if (present || !ignoreNa) {
-                sumWt *= oldWtFactor
-                sumWt2 *= oldWtFactor * oldWtFactor
-                oldWt *= oldWtFactor
-                if (present) {
-                  val oldMean = mean
-                  if (mean != cur)
-                    mean = (oldWt * oldMean + newWt * cur) / (oldWt + newWt)
-                  cov = (oldWt * (cov + (oldMean - mean) * (oldMean - mean)) +
-                    newWt * ((cur - mean) * (cur - mean))) / (oldWt + newWt)
-                  sumWt += newWt
-                  sumWt2 += newWt * newWt
-                  oldWt += newWt
-                  if (!adjust) {
-                    sumWt /= oldWt
-                    sumWt2 /= oldWt * oldWt
-                    oldWt = 1.0
-                  }
-                }
-              }
-            } else if (present) mean = cur
-            s = EwmStreamState(mean, cov, sumWt, sumWt2, oldWt, nobs)
-            val v: Double = stat match {
-              case "mean" | "sum" =>
-                if (nobs >= minPeriods && !mean.isNaN) mean else Double.NaN
-              case _ =>
-                if (nobs < minp) Double.NaN
-                else if (bias) cov
-                else {
-                  val num = sumWt * sumWt
-                  val den = num - sumWt2
-                  if (den > 0) (num / den) * cov else Double.NaN
-                }
-            }
-            val vv =
-              if (stat == "std" && !v.isNaN) { if (v < 0) 0.0 else math.sqrt(v) }
-              else v
-            out += EwmOut(e.key, e.seq, if (vv.isNaN) None else Some(vv))
+        (_: Long, rows: Iterator[EwmIn], state: GroupState[Ewm.State]) =>
+          val s = state.getOption.getOrElse(Ewm.State())
+          val out = rows.toSeq.sortBy(_.seq).map { e =>
+            val x = e.value.getOrElse(Double.NaN)
+            ewm.step(s, !x.isNaN, x, !x.isNaN, x)
+            EwmOut(e.key, e.seq, Some(read(s)).filterNot(_.isNaN))
           }
           state.update(s)
-          out.result().iterator
+          out.iterator
       }
   }
 
   case class RollIn(key: Long, tsMicros: Long, value: Option[Double])
   case class RollOut(key: Long, tsMicros: Long, rolled: Option[Double])
-  case class RollTimeState(ts: Seq[Long], vs: Seq[Double],
-                           pres: Seq[Boolean])
 
   /** Streaming time-based rolling aggregate: the batch
-    * `InheritedOps.rollingTimeAgg` deque kernel on
-    * `flatMapGroupsWithState` — per-key state holds ONLY the rows
-    * inside the trailing window duration (O(W) per key, evicted as the
-    * window slides), each input row emits exactly one output row in
-    * Append mode. Same aggregate set and min_periods gates as the
-    * batch verb; `closed` supports the trailing-window variants that
-    * keep the current row ("right" = (t−w, t] default, "both" =
-    * [t−w, t]). Contracts: per-key timestamps are DUPLICATE-FREE and
-    * must not arrive in an earlier micro-batch than a lower-ts row
-    * (within a batch any order is fine — the kernel re-sorts); parity
-    * with the batch verb under that contract is spec-pinned
-    * (StreamFuzzSpec seeded multi-batch splits, bit-identical — the
-    * accumulation order matches the batch pass). */
+    * `InheritedOps.rollingTimeAgg` [[TimeWindow]] kernel on
+    * `flatMapGroupsWithState` — the per-key state is the kernel's
+    * [[TimeWindow.State]], holding ONLY the rows inside the trailing
+    * window duration (O(W) per key, evicted as the window slides); each
+    * input row emits exactly one output row in Append mode. Same
+    * aggregate set, validation and min_periods gates as the batch verb;
+    * `closed` supports the trailing-window variants that keep the
+    * current row ("right" = (t−w, t] default, "both" = [t−w, t]).
+    * Contracts: per-key timestamps are DUPLICATE-FREE and must not
+    * arrive in an earlier micro-batch than a lower-ts row (within a
+    * batch any order is fine — the shell re-sorts); parity with the
+    * batch verb under that contract is spec-pinned (StreamFuzzSpec
+    * seeded multi-batch splits, bit-identical). */
   def rollingTimeStream(events: Dataset[RollIn], windowMicros: Long,
                         fn: String = "mean", minPeriods: Int = 1,
                         closed: String = "right", q: Double = 0.5)
                        (implicit spark: SparkSession): Dataset[RollOut] = {
     import spark.implicits._
-    require(windowMicros > 0, s"window must be positive, got $windowMicros")
-    require(Seq("mean", "sum", "min", "max", "std", "var", "count",
-        "median", "quantile").contains(fn),
-      s"unsupported fn '$fn'")
+    val window = TimeWindow(windowMicros, fn, minPeriods, closed, q)
     require(Seq("right", "both").contains(closed),
       s"stream closed must be right|both, got '$closed'")
-    val includeLow = closed == "both"
-    val isCount = fn == "count"
-    val qq = if (fn == "median") 0.5 else q
     events.groupByKey(_.key)
-      .flatMapGroupsWithState[RollTimeState, RollOut](
+      .flatMapGroupsWithState[TimeWindow.State, RollOut](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, rows: Iterator[RollIn], state: GroupState[RollTimeState]) =>
-          val s0 = state.getOption.getOrElse(RollTimeState(Nil, Nil, Nil))
-          val buf = scala.collection.mutable.ArrayDeque.from(
-            s0.ts.lazyZip(s0.vs).lazyZip(s0.pres).toSeq)
-          val out = Seq.newBuilder[RollOut]
-          rows.toSeq.sortBy(_.tsMicros).foreach { e =>
-            val present = e.value.exists(v => !v.isNaN)
-            val v = if (present) e.value.get else Double.NaN
-            buf.append((e.tsMicros, v, present))
-            val lowBound = e.tsMicros - windowMicros
-            while (buf.nonEmpty &&
-              (if (includeLow) buf.head._1 < lowBound
-               else buf.head._1 <= lowBound)) buf.removeHead()
-            var rowsN = 0
-            var nonNa = 0
-            var sum = 0.0
-            var mn = Double.PositiveInfinity
-            var mx = Double.NegativeInfinity
-            buf.foreach { case (_, ev, ep) =>
-              rowsN += 1
-              if (ep) {
-                nonNa += 1
-                sum += ev
-                if (ev < mn) mn = ev
-                if (ev > mx) mx = ev
-              }
-            }
-            val gate = if (isCount) rowsN else nonNa
-            val res: Option[Double] =
-              if (gate < minPeriods) None
-              else fn match {
-                case "count" => Some(nonNa.toDouble)
-                case "sum"   => Some(sum)
-                case "mean"  => if (nonNa == 0) None else Some(sum / nonNa)
-                case "min"   => if (nonNa == 0) None else Some(mn)
-                case "max"   => if (nonNa == 0) None else Some(mx)
-                case "std" | "var" =>
-                  if (nonNa < 2) None
-                  else {
-                    val mu = sum / nonNa
-                    var s2 = 0.0
-                    buf.foreach { case (_, ev, ep) =>
-                      if (ep) { val d = ev - mu; s2 += d * d } }
-                    val vv = s2 / (nonNa - 1)
-                    Some(if (fn == "std") math.sqrt(vv) else vv)
-                  }
-                case _ => // median | quantile
-                  if (nonNa == 0) None
-                  else {
-                    val arr = buf.collect {
-                      case (_, ev, ep) if ep => ev }.toArray
-                    java.util.Arrays.sort(arr)
-                    val vi = qq * (nonNa - 1)
-                    val lo = math.floor(vi).toInt
-                    val g = vi - lo
-                    Some(if (g == 0) arr(lo)
-                         else arr(lo) + g * (arr(lo + 1) - arr(lo)))
-                  }
-              }
-            out += RollOut(e.key, e.tsMicros, res)
+        (_: Long, rows: Iterator[RollIn],
+         state: GroupState[TimeWindow.State]) =>
+          val s = state.getOption.getOrElse(TimeWindow.State())
+          val out = rows.toSeq.sortBy(_.tsMicros).map { e =>
+            val v = window.push(s, e.tsMicros, e.value.getOrElse(Double.NaN))
+            RollOut(e.key, e.tsMicros, Option(v).map(_.doubleValue))
           }
-          state.update(RollTimeState(buf.map(_._1).toSeq,
-            buf.map(_._2).toSeq, buf.map(_._3).toSeq))
-          out.result().iterator
+          state.update(s.trimmed)
+          out.iterator
       }
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions.{distinctShingles, tokens}
+import graft.nested.NestedExpr.bq
 import graft.operators.Similarity.planeWeight
 
 /** Built-in (Column, SQL or window) formulations of the engine's native
@@ -152,5 +153,51 @@ object CrossCheck {
         transform(sequence(lit(0), size(t) - lit(n)),
           i => concat_ws(" ", slice(t, i + 1, lit(n)))))
         .otherwise(array().cast("array<string>")))
+  }
+
+  /** Twin of `NestedExpr.elementReduction` (the native `field_reduce`
+    * kernel): the pre-r13 HOF formulation, as SQL text. */
+  def reductionSql(nest: String, field: String, agg: String): String = {
+    val arr = s"transform(${bq(nest)}, __r -> __r.${bq(field)})"
+    val vals = s"filter($arr, __v -> __v is not null)"
+    def n = s"size($vals)"
+    def sumOf(a: String) = s"aggregate($a, cast(0.0 as double), (__a, __v) -> __a + __v)"
+    // `transform(array(x), __b -> body)[1]` is the SQL let-binding: x is
+    // evaluated ONCE even though body references it many times. Spark does
+    // not CSE through HOF lambdas, so the naive formulation re-ran the
+    // filter chain / fold / sort once per reference (2-3 folds per mean/std
+    // — the repo's SCALING.md no-CSE rule).
+    def let(bound: String, body: String => String): String =
+      s"element_at(transform(array($bound), __b -> ${body("__b")}), 1)"
+    agg match {
+      case "count" => s"cast($n as bigint)"
+      case "sum"   => sumOf(vals)
+      case "min"   => s"array_min($vals)"
+      case "max"   => s"array_max($vals)"
+      case "mean"  => let(vals, v =>
+        s"(case when size($v) = 0 then null else ${sumOf(v)} / size($v) end)")
+      case "median" => let(s"array_sort($vals)", sv =>
+        // divide by double(2), not the literal 2.0: Spark SQL parses 2.0 as
+        // DECIMAL(2,1), which silently promotes integer-field medians to
+        // DECIMAL instead of the double every other reduction returns
+        s"""(case when size($sv) = 0 then null else
+           | (element_at($sv, cast((size($sv) + 1) / 2 as int)) +
+           |  element_at($sv, cast(size($sv) / 2 as int) + 1))
+           |  / cast(2 as double) end)"""
+          .stripMargin.replace("\n", " "))
+      case "std" =>
+        // ONE fold accumulating (n, Σv, Σv²) in a struct: per-element
+        // accumulation order matches the separate folds exactly, so the
+        // derived value is bit-identical to the 3-fold formulation.
+        val acc = s"aggregate($vals, named_struct(" +
+          "'n', cast(0 as bigint), 's', cast(0.0 as double), " +
+          "'q', cast(0.0 as double)), " +
+          "(__a, __v) -> named_struct('n', __a.n + 1, 's', __a.s + __v, " +
+          "'q', __a.q + __v * __v))"
+        let(acc, t =>
+          s"""(case when $t.n <= 1 then null else
+             | sqrt(greatest(0.0, ($t.q - $t.s * $t.s / $t.n)
+             |   / ($t.n - 1))) end)""".stripMargin.replace("\n", " "))
+    }
   }
 }

@@ -976,6 +976,35 @@ class ExtendedOpsSpec extends SparkSpec {
           s"k=${r.getLong(0)}: partitioned ${part(r.getLong(0))} != $exp")
       }
     }
+    // var is the cov kernel with x == y, bit for bit, and std is zsqrt
+    // of var, over adjust × ignoreNa × minPeriods × bias with missing v
+    def cells(out: org.apache.spark.sql.DataFrame): Map[Long, Any] =
+      out.select(c0("k"), c0("ewm")).collect()
+        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) null
+                                   else r.getDouble(1))).toMap
+    def bits(v: Any): Any = v match {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case other => other
+    }
+    for (adjust <- Seq(true, false); ignoreNa <- Seq(true, false);
+         minp <- Seq(0, 1, 3); bias <- Seq(true, false)) {
+      val label = s"adjust=$adjust ignoreNa=$ignoreNa minp=$minp bias=$bias"
+      val vr = cells(InheritedOps.ewmVar(df, "v", 0.3, "k", Seq("g"),
+        adjust, ignoreNa, minp, bias))
+      val cv = cells(InheritedOps.ewmCov(df, "v", "v", 0.3, "k", Seq("g"),
+        adjust, ignoreNa, minp, bias))
+      val sd = cells(InheritedOps.ewmVar(df, "v", 0.3, "k", Seq("g"),
+        adjust, ignoreNa, minp, bias, std = true))
+      assert(vr.values.count(_ != null) > 30, label)
+      for ((k, v) <- vr) {
+        assert(bits(cv(k)) == bits(v), s"$label k=$k: cov ${cv(k)} != var $v")
+        val zs = v match {
+          case d: Double => if (d < 0) 0.0 else math.sqrt(d)
+          case _ => null
+        }
+        assert(bits(sd(k)) == bits(zs), s"$label k=$k: std ${sd(k)} != $zs")
+      }
+    }
   }
 
   test("rollingTimeAgg partitioned ≡ unpartitioned per group; resample " +

@@ -1,7 +1,7 @@
 package graft
 
 import graft.expressions.native
-import graft.nested.{NestedExpr, NestedOps}
+import graft.nested.NestedOps
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -123,7 +123,7 @@ class FieldReduceSpec extends SparkSpec {
       val base = if (op == "std") df.where(col("items").isNotNull) else df
       assertSame(base.select(col("id"),
         native.field_reduce(col("items"), "q", op).as("a"),
-        expr(NestedExpr.reductionSql("items", "q", op)).as("b")), s"q.$op")
+        expr(CrossCheck.reductionSql("items", "q", op)).as("b")), s"q.$op")
     }
     // pinned: std of a NULL cell is NULL now (was an accidental 0.0)
     val stdOnNull = df.where(col("items").isNull).select(
@@ -136,7 +136,7 @@ class FieldReduceSpec extends SparkSpec {
       val base = if (op == "std") df.where(col("items").isNotNull) else df
       assertSame(base.select(col("id"),
         native.field_reduce(col("items"), "i", op).as("a"),
-        expr(NestedExpr.reductionSql("items", "i", op)).as("b")), s"i.$op")
+        expr(CrossCheck.reductionSql("items", "i", op)).as("b")), s"i.$op")
     }
   }
 

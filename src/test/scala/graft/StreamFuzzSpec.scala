@@ -361,4 +361,17 @@ class StreamFuzzSpec extends SparkSpec {
       } finally q.stop()
     }
   }
+
+  test("rollingTimeStream rejects a quantile q outside [0, 1] when the " +
+      "stream is built, like the batch verb") {
+    import graft.streaming.StreamingOps.RollIn
+    val ms = MemoryStream[RollIn](spark)
+    for (q <- Seq(1.5, -0.1)) {
+      val e = intercept[IllegalArgumentException] {
+        StreamingOps.rollingTimeStream(ms.toDS(), 2000000L, "quantile",
+          q = q)(spark)
+      }
+      assert(e.getMessage.contains(s"quantile must be in [0, 1], got $q"))
+    }
+  }
 }
