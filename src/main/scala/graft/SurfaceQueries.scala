@@ -685,7 +685,7 @@ object SurfaceQueries {
     * cap bounds its depth at every SF — a ≤400-row oracle artifact,
     * like the documented rank stamps). Library side: the shared
     * `graft.operators.Ewm` kernel in one sorted-group pass (hash
-    * repartition + in-partition sort + streaming mapPartitions). */
+    * repartition + in-partition sort + typed mapPartitions, one plan). */
   val qEwm: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val o = rd(s, dir, "orders")
@@ -755,7 +755,7 @@ object SurfaceQueries {
     * at every SF (probed 2026-08-16), so the position-truncation
     * subtlety the fuzz family pins never fires here. Library side: the
     * shared `graft.operators.TimeWindow` deque kernel in one keyed
-    * sorted-group pass. */
+    * sorted-group pass, whose exchange and sort are in the query plan. */
   val qRollingTime: Q = (s, dir) => {
     // events.ts reads as TIMESTAMP_NTZ (µs parquet); the op's
     // cast("timestamp") is instant-preserving under the UTC session tz

@@ -65,10 +65,10 @@ object TrainingQueries {
     * multipliers) q_dedup_incremental. */
   /** (doc_id, sid) rows: every distinct 5-shingle of each id-capped doc
     * with its GLOBAL 1-based lexicographic rank — the oracle-replayable
-    * substrate shared by every rank-based sketch. row_number() over a
-    * global ORDER BY would funnel everything through ONE partition; a
-    * distributed sort + zipWithIndex gives the identical rank with full
-    * parallelism. */
+    * substrate shared by every rank-based sketch: a distributed sort +
+    * RDD zipWithIndex (row_number() over a global ORDER BY runs on ONE
+    * task; Spark's in-plan `AttachDistributedSequenceExec` stores its
+    * child outside [[graft.Materialize]]). */
   private def rankedShingles(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir).where(col("doc_id") < 200)
     val sh = d.select(col("doc_id"),

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Materialize
@@ -883,7 +884,7 @@ object InheritedOps {
     * duplicates="drop" collapses equal edges (labels renumber);
     * "raise" fails like pandas. Cost: one count + one distributed
     * range-sort with the ≤ 2(q+1) needed order statistics filtered out
-    * by index (no single-partition window, no full collect). At 100 TB
+    * by RDD `zipWithIndex` (no one-task window, no full collect). At 100 TB
     * pass `approxAccuracy` — edges come from one `approx_percentile`
     * aggregate (GK sketch, map-side partials, no sort) and bins are
     * approximately-equal-sized rather than pandas-exact; the binning
@@ -1087,11 +1088,12 @@ object InheritedOps {
   /** The secondary-sort pass behind the ewm and time-rolling verbs, for
     * per-row state that a Spark window aggregate cannot carry:
     * hash-repartition on `partitionBy`, sort WITHIN partitions by
-    * (`partitionBy`, `orderBy`), one streaming mapPartitions pass (no
-    * global sort, no group materialization). `newGroup` builds a fresh
-    * per-group fold; each call returns the row's appended DOUBLE `outCol`
-    * cell. The unpartitioned form is a single-partition sort — small
-    * frames only, same contract as [[shiftRows]]. */
+    * (`partitionBy`, `orderBy`), one typed `Dataset.mapPartitions` fold
+    * in the caller's plan (no global sort, no group materialization).
+    * `newGroup` builds a fresh per-group fold; each call returns the
+    * row's appended DOUBLE `outCol` cell. The unpartitioned form is a
+    * single-partition sort — small frames only, same contract as
+    * [[shiftRows]]. */
   private def sortedGroupPass(df0: DataFrame, partitionBy: Seq[String],
                               orderBy: Seq[String], outCol: String)
                              (newGroup: () => Row => Any): DataFrame = {
@@ -1101,7 +1103,7 @@ object InheritedOps {
           .sortWithinPartitions((partitionBy ++ orderBy).map(col): _*)
       else df0.coalesce(1).sortWithinPartitions(orderBy.map(col): _*)
     val keyIdx = partitionBy.map(df0.schema.fieldIndex)
-    val outRdd = sorted.rdd.mapPartitions { it =>
+    sorted.mapPartitions { it =>
       var curKey: Seq[Any] = null
       var fold: Row => Any = null
       it.map { row =>
@@ -1112,9 +1114,8 @@ object InheritedOps {
         }
         Row.fromSeq(row.toSeq :+ fold(row))
       }
-    }
-    df0.sparkSession.createDataFrame(outRdd,
-      df0.schema.add(outCol, org.apache.spark.sql.types.DoubleType))
+    }(ExpressionEncoder(RowEncoder.encoderFor(
+      df0.schema.add(outCol, org.apache.spark.sql.types.DoubleType))))
   }
 
   /** A numeric cell as a double, NaN when missing. */
@@ -1213,12 +1214,12 @@ object InheritedOps {
     * the uniques (use_na_sentinel default); `useNaSentinel=false` gives
     * missing its own appearance-ordered code. Appends `code`. Two keyed
     * shuffles: one first-occurrence aggregate over the value domain
-    * + one value join back. Code assignment runs as a DISTRIBUTED
-    * range-sort over the domain + `zipWithIndex` (the qcut
-    * order-statistic pattern) — factorize is exactly the verb users
-    * point at high-cardinality columns (ids, URLs), where a
-    * `row_number` over an unpartitioned window would funnel the whole
-    * domain through one task. The domain-sized codes frame is
+    * + one value join back. Codes come from a DISTRIBUTED range-sort
+    * over the domain + RDD `zipWithIndex`: factorize is the verb users
+    * point at high-cardinality columns (ids, URLs), where a `row_number`
+    * with no PARTITION BY runs on one task, and Spark's in-plan
+    * `AttachDistributedSequenceExec` stores its child outside
+    * [[graft.Materialize]]. The domain-sized codes frame is
     * materialized, so the size probe and the join share one compute,
     * and is broadcast only when it fits under
     * `broadcastDomainCap` rows — beyond that the join shuffles both

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.functions._
 
 /** Multimodal (image/audio/video) column plumbing.
@@ -438,16 +439,14 @@ object Multimodal {
     * between a working pipeline and OOM: a 1000-row partition of 4K video is
     * tens of GB.
     *
-    * Total bytes are measured FROM THE DATA (one cheap `sum(length)` agg —
-    * a caller-supplied estimate was the round-1 skew hazard), and rows are
-    * greedily packed into byte-budgeted buckets per input partition: each
-    * task accumulates payload sizes and advances its bucket when the running
-    * sum crosses `targetMB`, so a run of giant rows spills into more buckets
-    * instead of round-robining into the same ones. The bucket id then drives
-    * one hash repartition. A single row larger than `targetMB` still owns a
+    * Total bytes are measured FROM THE DATA (one cheap `sum(length)` agg),
+    * [[assignMediaBuckets]] packs rows into byte-budgeted buckets, so a run
+    * of giant rows spills into more buckets, and the bucket id drives one
+    * range repartition. A single row larger than `targetMB` still owns a
     * whole bucket (cannot be subdivided — documented limit). */
   def repartitionForMedia(df: DataFrame, payloadCol: String,
                           targetMB: Int = 128): DataFrame = {
+    require(targetMB > 0, s"targetMB must be > 0, got $targetMB")
     val targetBytes = targetMB * 1024L * 1024L
     // coalesce: sum() over zero rows (or all-null payloads) is NULL — an
     // empty frame must degrade to 1 partition, not NPE on getLong.
@@ -468,31 +467,31 @@ object Multimodal {
     * its invariant is testable: each task accumulates payload sizes and
     * advances its `__media_bkt` when the running sum crosses the budget, so
     * every bucket holds ≤ targetBytes + one payload (the deterministic
-    * guarantee; the subsequent hash repartition balances buckets across
-    * partitions in expectation). Narrow — no shuffle, no driver data. */
+    * guarantee). Narrow — no shuffle, no driver data: one typed
+    * `Dataset.mapPartitions` in the caller's plan. A bucket's id is
+    * `taskPartitionId * 100003 + bucket`, unique unless a narrow
+    * `coalesce` follows in the same stage. */
   def assignMediaBuckets(df: DataFrame, payloadCol: String,
                          targetMB: Int): DataFrame = {
+    require(targetMB > 0, s"targetMB must be > 0, got $targetMB")
     val targetBytes = targetMB * 1024L * 1024L
-    val spark = df.sparkSession
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{StructField, LongType}
-    val schema = df.schema.add(StructField("__media_bkt", LongType))
     // resolved on the driver: the closure must not capture the Dataset
     val sizeIdx = df.schema.fieldIndex(payloadCol)
-    spark.createDataFrame(
-      df.rdd.mapPartitionsWithIndex { (pid, rows) =>
-        var acc = 0L
-        var bkt = 0L
-        rows.map { r =>
-          val sz = r.get(sizeIdx) match {
-            case b: Array[Byte] => b.length.toLong
-            case s: String      => s.length.toLong
-            case _              => 0L
-          }
-          acc += sz
-          if (acc > targetBytes) { bkt += 1; acc = sz }
-          Row.fromSeq(r.toSeq :+ (pid.toLong * 100003L + bkt))
+    df.mapPartitions { rows =>
+      val pid = org.apache.spark.TaskContext.getPartitionId().toLong
+      var acc = 0L
+      var bkt = 0L
+      rows.map { r =>
+        val sz = r.get(sizeIdx) match {
+          case b: Array[Byte] => b.length.toLong
+          case s: String      => s.length.toLong
+          case _              => 0L
         }
-      }, schema)
+        acc += sz
+        if (acc > targetBytes) { bkt += 1; acc = sz }
+        Row.fromSeq(r.toSeq :+ (pid * 100003L + bkt))
+      }
+    }(ExpressionEncoder(RowEncoder.encoderFor(
+      df.schema.add("__media_bkt", org.apache.spark.sql.types.LongType))))
   }
 }

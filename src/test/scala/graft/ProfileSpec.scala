@@ -75,6 +75,15 @@ class ProfileSpec extends SparkSpec {
     assert(counts(flagship()) == counts(flagshipAlone))
   }
 
+  test("the sorted-group pass shows its exchange in the query's final plan") {
+    Seq("q_ewm", "q_ewm_var", "q_ewm_cov", "q_rolling_time").foreach { q =>
+      val r = Profile.run(spark, q, sf0001, reps = 1)
+      assert(r.shuffles >= 1, r.json)
+      val nodes = finalPlanNodes(r)
+      assert(nodes.nonEmpty && !nodes.exists(_.contains("ExistingRDD")), r.plan)
+    }
+  }
+
   test("q_flagship plans the exchanges measured before the shared sampler") {
     val s = flagship()
     assert((s.shuffles, s.broadcasts) == (1, 1))

@@ -368,6 +368,11 @@ class TrainingOpsSpec extends SparkSpec {
     // and the end-to-end path actually spreads the data over partitions
     val out = Multimodal.repartitionForMedia(df, "payload", targetMB = target)
     assert(out.rdd.getNumPartitions >= 1 && out.count() == 200)
+    // a zero budget is rejected when the frame is built, never executed
+    intercept[IllegalArgumentException](
+      Multimodal.assignMediaBuckets(df, "payload", 0))
+    intercept[IllegalArgumentException](
+      Multimodal.repartitionForMedia(df, "payload", targetMB = 0))
   }
 
   test("native hyperplane bucket is bit-identical to the Column formulation") {
